@@ -1287,6 +1287,20 @@ def test_recommended_probe_pruning_rule(spark, clustered):
     )
 
 
+def test_cell_scores_non_finite_centroid_raises(spark):
+    """A nan/inf centroid value has no SQL literal form (it rendered as
+    ``nanD``/``infD`` and failed inside ``F.expr``): the centroid literal
+    refuses it by index, and a finite centroid whose norm overflows
+    float64 is refused the same way."""
+    from vector_search_question_answer_api_spark.operators import ivf
+
+    for bad in (float("nan"), float("-inf"), 1e200):
+        cents = [list(c) for c in ivf.centroid_grid(8, 4)]
+        cents[2][3] = bad
+        with pytest.raises(ValueError, match="centroid 2 is not finite"):
+            ivf.assign_cell(F.col("v"), cents)
+
+
 def test_cell_scores_hoisted_bit_identical_to_r15_form(spark, normed):
     """r16 optimization pin: hoisting the centroid norms (python fold,
     same left-to-right float64 sum + IEEE sqrt) and the query-vector cast

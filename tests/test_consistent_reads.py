@@ -18,6 +18,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from vector_search_question_answer_api_spark import caching
 from vector_search_question_answer_api_spark.operators import (
     ann,
     hybrid_store as HS,
@@ -541,8 +542,16 @@ def test_epoch_above_committed_frontier_raises(spark, consistent):
     batch on one side only — resolve_epoch rejects it."""
     root, _art, _exp = consistent
     q = _queries(spark, root)
+    before = len(caching._live_caches)
     with pytest.raises(ValueError, match="not committed"):
         HS.hybrid_search_stored(spark, root, q, k=K, pool=POOL, epoch=5)
+    # a refused epoch persists nothing (the query batch's tracked persist
+    # comes after the epoch check) ...
+    assert len(caching._live_caches) == before
+    # ... and a served call's persists are released by the caller's scope
+    with caching.cache_scope():
+        assert HS.hybrid_search_stored(spark, root, q, k=K, pool=POOL).collect()
+    assert len(caching._live_caches) == before
     with pytest.raises(ValueError, match="not committed"):
         HS.resolve_epoch(root + "_nowhere", 0)  # no markers at all
 
@@ -702,6 +711,61 @@ def test_managed_graph_store_epoch_exact_serve_and_below_raise(
             ann_hnsw.read_celled_hnsw_index(
                 spark, IG.corpus_graphs_path(root), up_to_batch=below
             )
+
+
+def test_hybrid_graph_serve_evaluates_queries_once_and_reads_no_dead_store(
+    spark, managed_epoch, monkeypatch
+):
+    """Serve-path pin: one ``dense="graph"`` hybrid call evaluates its
+    query batch ONCE however many consumers read it (a Python UDF in the
+    query plan bumps an accumulator per row), never reads the index store
+    (the graph tier does not use it), and reads the doclens log once (the
+    census ``bm25_topk_stored`` shares with its readers)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    root, cents, _cbs = managed_epoch
+    qdf = _queries(spark, root)
+    qvec_t = qdf.schema["qvec"].dataType.simpleString()
+    rows = {
+        int(r["query_id"]): (r["query_text"], list(r["qvec"]))
+        for r in qdf.collect()
+    }
+    evals = spark.sparkContext.accumulator(0)
+
+    def fetch(qid):
+        evals.add(1)
+        return rows[qid]
+
+    fetch_udf = F.udf(fetch, f"query_text string, qvec {qvec_t}")
+    q = (
+        spark.createDataFrame([(i,) for i in rows], "query_id long")
+        .select("query_id", fetch_udf("query_id").alias("_q"))
+        .select("query_id", "_q.query_text", "_q.qvec")
+    )
+
+    index_reads, parquet_reads = [], []
+    monkeypatch.setattr(
+        IG, "read_corpus_index", lambda *a, **kw: index_reads.append(a)
+    )
+    real_parquet = DataFrameReader.parquet
+
+    def spy_parquet(self, *paths, **kw):
+        parquet_reads.append(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy_parquet)
+    got = HS.hybrid_search_stored(
+        spark, root, q, k=K, pool=POOL, dense="graph", centroids=cents,
+        dim=DIM, n_cells=N_CELLS, nprobe=N_CELLS,
+    ).collect()
+    assert {r["query_id"] for r in got} == set(rows)
+    assert index_reads == []
+    dl_log_reads = [
+        paths for paths in parquet_reads
+        if any(f"{os.sep}doclens_log{os.sep}" in p for p in paths)
+    ]
+    assert len(dl_log_reads) == 1
+    assert evals.value == len(rows)
 
 
 def test_managed_codes_store_epoch_exact_serve_and_below_raise(

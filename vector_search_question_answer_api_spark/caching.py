@@ -1,6 +1,6 @@
 """Tracked persist registry shared by operators whose plans fan an
 expensive intermediate into multiple branches (dedup pair generators,
-the BM25 inverted-index build).
+the BM25 inverted-index build, ``hybrid_search_stored``'s query batch).
 
 Operators return LAZY DataFrames, so they cannot unpersist their own
 intermediates; each persist is recorded here and released by the caller

@@ -25,7 +25,11 @@ Scale shape: everything here delegates to readers that already carry the
 store contracts — pruned 2-column scans, log-sized windows, broadcast
 anti-joins (never a base shuffle), broadcast query sides — and the
 fusion itself is one union + one hash aggregation over per-query top-pool
-rows (``rrf_fuse``).  Nothing corpus-sized moves per query batch.
+rows (``rrf_fuse``).  Nothing corpus-sized moves per query batch.  The
+query batch is materialized once per call (a tracked persist) however
+many consumers read it, and each tier reads only the stores it uses: the
+graph tier never reads the index store — its own reader enforces the
+epoch bound and the retained horizon.
 """
 
 from __future__ import annotations
@@ -129,6 +133,7 @@ def hybrid_search_stored(
     the same ``rrf_fuse``) computed on the corpus state at that epoch —
     and a torn in-flight batch (one store written, marker absent) changes
     nothing until its commit marker lands."""
+    from vector_search_question_answer_api_spark.caching import persist_tracked
     from vector_search_question_answer_api_spark.operators import (
         ann,
         lexical_store as LXS,
@@ -146,7 +151,9 @@ def hybrid_search_stored(
     )
 
     e = resolve_epoch(root, epoch)
-    idx = read_corpus_index(spark, root, up_to_batch=e)
+    # three consumers (BM25 term collect, BM25 query side, dense side) run
+    # the caller's plan once; after resolve_epoch so a refusal tracks none
+    queries = persist_tracked(queries)
     sparse = LXS.bm25_topk_stored(
         spark,
         corpus_postings_path(root),
@@ -162,8 +169,10 @@ def hybrid_search_stored(
         F.col(query_vec_col).alias("qvec"),
     )
     if dense == "exact":
+        idx = read_corpus_index(spark, root, up_to_batch=e)
         dense_top = knn_exact_expr(qv, idx, k=pool)
     elif dense == "lsh":
+        idx = read_corpus_index(spark, root, up_to_batch=e)
         dense_top = ann.ann_lsh_topk_ondisk(
             spark, qv, corpus_lsh_path(root), idx, k=pool, up_to_batch=e
         )
@@ -194,7 +203,8 @@ def hybrid_search_stored(
                 "(the store's index-build-time knobs)"
             )
         dense_top = ivfpq_topk_ondisk(
-            spark, qv, corpus_codes_path(root), idx, codebooks,
+            spark, qv, corpus_codes_path(root),
+            read_corpus_index(spark, root, up_to_batch=e), codebooks,
             centroids=centroids, k=pool, dim=dim, n_cells=n_cells,
             nprobe=nprobe, refine=refine, up_to_batch=e,
         )

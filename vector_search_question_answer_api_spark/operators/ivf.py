@@ -94,12 +94,15 @@ def _cell_scores(vec: Column, centroids) -> Column:
     """Array of cosine scores of ``vec`` (assumed L2-normalized) against
     each centroid: dot(vec, c) / ||c||.
 
-    The centroid table rides as ONE nested-array literal and the scoring is
-    a ``transform`` over it — the expression tree stays O(1) in
-    n_cells x dim, where the unrolled per-centroid form put thousands of
-    literal nodes into the plan and cost seconds of analyzer/codegen time
-    per query (measured 3.2s -> 0.8s at sf0.01, bit-identical values: both
-    forms sum left-to-right in float64).
+    The centroid table is one SQL array-of-structs expression, parsed
+    JVM-side in a single call; its O(n_cells x dim) literal leaves
+    constant-fold into one literal, and the scoring is a ``zip_with`` over
+    it — the scoring expression stays O(1) in n_cells x dim, where the
+    unrolled per-centroid form put thousands of nodes into the plan and
+    cost seconds of analyzer/codegen time per query (measured 3.2s -> 0.8s
+    at sf0.01, bit-identical values: both forms sum left-to-right in
+    float64).  A non-finite centroid (nan/inf, or a norm that overflows
+    float64) has no SQL literal form and raises ``ValueError``.
 
     r16 (optimization round): two hoists out of the per-centroid lambda,
     values bit-identical (pinned in tests/test_ann.py):
@@ -115,13 +118,15 @@ def _cell_scores(vec: Column, centroids) -> Column:
     """
     n_cells = len(centroids)
     structs = []
-    for c in centroids:
+    for i, c in enumerate(centroids):
         acc = 0.0
         for y in c:
             # the exact fold the r15 expression evaluated JVM-side:
             # ((0.0 + y0*y0) + y1*y1) + ... in float64, then IEEE sqrt
             acc += float(y) * float(y)
         norm = math.sqrt(acc)
+        if not math.isfinite(norm):  # nan/inf whenever any element is
+            raise ValueError(f"centroid {i} is not finite: no SQL literal")
         structs.append(
             "named_struct('c',array("
             + ",".join(f"{float(x)!r}D" for x in c)

@@ -450,19 +450,17 @@ def _resolved_parts(spark, path: str, up_to_batch: int | None = None):
     return base, post_dirs, dl_dirs
 
 
-def _resolve_doclens_frame(base_dl, dl_log, census=None):
+def _resolve_doclens_frame(base_dl, census):
     """THE doclens resolution — base minus log-mentioned docs (broadcast
     anti-join; the base never shuffles) ∪ the log's latest live rows.
     Single source of truth: ``read_doclens`` serves it and
     ``compact_postings`` folds it, so the fold can never bake a different
     relation into the base than reads resolve (the r12 review's drift
-    concern).  ``census`` (optional) supplies a shared :func:`_log_census`
-    of ``dl_log`` so one cached/reused relation serves every resolution
+    concern).  ``census`` is the doclens log's :func:`_log_census` (None:
+    no log), so one cached/reused relation can serve every resolution
     consumer (r16, guide §2.4)."""
-    if dl_log is None:
-        return base_dl
     if census is None:
-        census = _log_census(dl_log)
+        return base_dl
     log_live = census.filter(F.col("dl").isNotNull()).select(
         "doc_id", F.col("dl").cast("int").alias("dl")
     )
@@ -477,16 +475,14 @@ def _resolve_doclens_frame(base_dl, dl_log, census=None):
     ).unionByName(log_live)
 
 
-def _resolve_posts_frame(base_posts, log_posts, dl_log, census=None):
+def _resolve_posts_frame(base_posts, log_posts, census):
     """THE postings resolution (see ``_resolve_doclens_frame``): base
     rows of log-mentioned docs leave via a broadcast anti-join; log
     postings keep only each doc's newest LIVE version (broadcast join
     against the log-sized census, live rows selected in the join
     condition)."""
-    if dl_log is None:
-        return base_posts
     if census is None:
-        census = _log_census(dl_log)
+        return base_posts
     resolved_log = None
     if log_posts is not None:
         resolved_log = log_posts.join(
@@ -523,8 +519,9 @@ def read_doclens(
         if base is not None
         else None
     )
-    dl_log = _read_log(spark, path, _DL_LOG, dl_dirs) if dl_dirs else None
-    return _resolve_doclens_frame(base_dl, dl_log, census=_census)
+    if _census is None and dl_dirs:
+        _census = _log_census(_read_log(spark, path, _DL_LOG, dl_dirs))
+    return _resolve_doclens_frame(base_dl, _census)
 
 
 def read_postings(
@@ -569,13 +566,14 @@ def read_postings(
             )
             base_posts = base_posts.filter(F.col("tb").isin(tbs))
         base_posts = _slice(base_posts).select("term", "doc_id", "tf", "dl")
-    dl_log = _read_log(spark, path, _DL_LOG, dl_dirs) if dl_dirs else None
     log_posts = (
         _slice(_read_log(spark, path, _POST_LOG, post_dirs))
         if post_dirs
         else None
     )
-    out = _resolve_posts_frame(base_posts, log_posts, dl_log, census=_census)
+    if _census is None and dl_dirs:
+        _census = _log_census(_read_log(spark, path, _DL_LOG, dl_dirs))
+    out = _resolve_posts_frame(base_posts, log_posts, _census)
     if out is None:
         raise FileNotFoundError(f"no postings store at {path}")
     return out
@@ -687,7 +685,8 @@ def bm25_topk_stored(
     # stats subtree (cache materialization and the outer plan cannot share
     # exchanges).  The census is log-sized (bounded by the compaction
     # cadence at any corpus size), so the tracked persist is safe; the log
-    # dirs are now listed and scanned once per call.
+    # is read once per call — the readers below take the census and never
+    # open the log themselves.
     dl_dirs = _bounded_log_dirs(path, _DL_LOG, up_to_batch)
     census = None
     if dl_dirs:
@@ -825,12 +824,12 @@ def compact_postings(
     )
     # fold EXACTLY the read path's relations — shared helpers, so a
     # resolution fix lands in reads and folds at once
-    dl_log = _read_log(spark, path, _DL_LOG, dl_dirs) if dl_dirs else None
+    census = _log_census(_read_log(spark, path, _DL_LOG, dl_dirs))
     log_posts = (
         _read_log(spark, path, _POST_LOG, post_dirs) if post_dirs else None
     )
-    folded_dl = _resolve_doclens_frame(base_dl, dl_log)
-    folded_posts = _resolve_posts_frame(base_posts, log_posts, dl_log)
+    folded_dl = _resolve_doclens_frame(base_dl, census)
+    folded_posts = _resolve_posts_frame(base_posts, log_posts, census)
     if folded_posts is None or folded_dl is None:
         return False
 
