@@ -461,3 +461,113 @@ def test_pick_candidate_properties():
             assert _pick_candidate(srow, T, deleted) == _pick_candidate(
                 arow, T, deleted
             )
+
+
+def _driver_fold(prepared_rows, cfg):
+    """Reference replay: ``_fold_session_rows`` per session on the driver,
+    each session's rows sorted by (ts, event_id)."""
+    from vector_search_question_answer_api_spark.operators.sessions import (
+        _OUTPUT_COLS,
+        _fold_session_rows,
+    )
+
+    by_session: dict = {}
+    for r in prepared_rows:
+        by_session.setdefault(r["session_id"], []).append(r.asDict())
+    out = []
+    for sid, rows in by_session.items():
+        rows.sort(key=lambda r: (r["ts"], r["event_id"]))
+        res, _ = _fold_session_rows(rows, cfg)
+        out += [tuple({"session_id": sid, **o}[c] for c in _OUTPUT_COLS)
+                for o in res]
+    return sorted(out, key=repr), len(by_session)
+
+
+def test_partition_fold_equals_per_session_fold(spark, corpus):
+    """The batch replay folds each hash partition in one sorted pass.
+    With 3-row Arrow batches every multi-event session straddles a batch
+    boundary, and the output must still equal a per-session driver-side
+    fold over the same prepared rows, with the same usage counts.  The
+    events cover a no-hit (null-candidate) event, a TTL expiry, a
+    one-event session, a (ts, event_id) tie and event ids out of time
+    order, once on the LSH tier and once with two candidates and a
+    tombstone DataFrame."""
+    from vector_search_question_answer_api_spark.config import DEFAULT_CONFIG
+    from vector_search_question_answer_api_spark.operators.sessions import (
+        UsageCounters,
+        prepare_qa_events,
+    )
+
+    rows = [
+        (5, "s1", DOC_A), (0, "s2", DOC_B), (1, "s1", DOC_A),
+        (2, "s1", DOC_B), (0, "s3", GIBBERISH), (3, "s1", GIBBERISH),
+        (40, "s1", DOC_A), (41, "s1", DOC_C), (1, "s3", DOC_C),
+        (1, "s3", DOC_A), (4, "s1", DOC_C), (2, "s3", DOC_C),
+        (0, "s4", DOC_C), (0, "s5", DOC_A), (1, "s5", DOC_B),
+    ]
+    events = _events(spark, rows)
+    tombs = spark.createDataFrame(
+        [(2, T0 + timedelta(minutes=3)), (0, None)], "doc_id long, ts timestamp"
+    )
+    runs = [
+        dict(retrieval="lsh"),
+        dict(n_candidates=2, tombstones=tombs),
+    ]
+    prepared_runs = [
+        prepare_qa_events(events, corpus, **kw).collect() for kw in runs
+    ]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        for kw, prepared in zip(runs, prepared_runs):
+            usage = UsageCounters(spark)
+            got = sorted(
+                (tuple(r) for r in
+                 replay_sessions(events, corpus, usage=usage, **kw).collect()),
+                key=repr,
+            )
+            want, n_sessions = _driver_fold(prepared, DEFAULT_CONFIG)
+            assert got == want, kw
+            assert usage.stats() == {
+                "events_processed": len(rows), "sessions_folded": n_sessions
+            }
+            assert any(r[-1] for r in got), "no TTL expiry exercised"
+            if kw.get("tombstones") is None:
+                assert any(r["cand_doc_id"] is None for r in prepared)
+            else:
+                assert any(r["cand_del"] for r in prepared)
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_float32_topic_gate_margin(spark, sf_dir, monkeypatch):
+    """The replay shuffles ``q_vec``/``cand_vec`` as float32, which moves
+    each topic-gate similarity by at most ~1e-7.  Every topic check of
+    the 200-event gate fixture must clear ``topic_similarity_threshold``
+    by at least 1e-5, so the cast cannot flip a decision."""
+    import numpy as np
+
+    from vector_search_question_answer_api_spark.config import DEFAULT_CONFIG
+    from vector_search_question_answer_api_spark.inventory import qa_gate_events
+    from vector_search_question_answer_api_spark.operators import sessions as S
+
+    index, qa_events = qa_gate_events(spark, sf_dir)
+    prepared = S.prepare_qa_events(qa_events, index).collect()
+
+    thr = DEFAULT_CONFIG.topic_similarity_threshold
+    margins = []
+
+    class _RecordingNP:
+        def dot(self, a, b):
+            v = np.dot(a, b)
+            margins.append(abs(float(v) - thr))
+            return v
+
+        def __getattr__(self, name):
+            return getattr(np, name)
+
+    monkeypatch.setattr(S, "np", _RecordingNP())
+    _driver_fold(prepared, DEFAULT_CONFIG)
+    assert margins, "no topic check ran"
+    assert min(margins) >= 1e-5

@@ -13,7 +13,8 @@ bench protocol):
   top-k / celled-HNSW cogrouped walk / centered-LSH bucket join);
 - ``join``: prefix through prepare_qa_events (retrieval + candidate-vector
   join + event join);
-- ``full``: the whole replay incl. the applyInPandas session fold.
+- ``full``: the whole replay incl. the sorted-partition ``mapInPandas``
+  session fold.
 
 For the graph tier the walk knobs (ef, nprobe) are swept so the walk-side
 share is measured, not inferred.  Each number is the adaptive best-of-N

@@ -17,30 +17,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def md5_hex(col: Column) -> Column:
-    return F.md5(col.cast("string"))
-
-
-def seeded_md5(col: Column, seed: int) -> Column:
-    """Hex hash of ``"{seed}:{value}"`` — a family of independent hash
-    functions indexed by seed (minhash permutations)."""
-    return F.md5(F.concat(F.lit(f"{seed}:"), col.cast("string")))
-
-
-def minhash_signature(shingles: Column, n_hashes: int) -> Column:
-    """MinHash signature: for each seed, the minimum seeded-md5 hex over the
-    shingle set.  Returns array<string> of length n_hashes (element is null
-    for an empty shingle set)."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s, i=i: F.md5(F.concat(F.lit(f"{i}:"), s)))
-            )
-            for i in range(n_hashes)
-        ]
-    )
-
-
 def band_keys(signature: Column, n_bands: int, rows_per_band: int) -> Column:
     """LSH band keys: hash of each contiguous ``rows_per_band`` slice of the
     signature.  Docs sharing any band key become candidate pairs.

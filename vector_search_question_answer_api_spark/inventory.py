@@ -1433,15 +1433,11 @@ def qa_prompt_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("qa_sessions_replay", None)
-def qa_sessions_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL stateful /qa pipeline (SURVEY.md §3.2): embed -> retrieve
-    (k=1, dist<0.4 gate) -> topic-switch fold -> stub answer, replayed per
-    session via applyInPandas.  Rows-only check: the embedder UDF seam and
-    the keyed fold are not SQL-expressible (correctness is covered by
-    tests/test_sessions.py + tests/test_streaming.py equivalence)."""
+def qa_gate_events(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(index, qa_events): the replay gate's fixture — the document index
+    and the first 200 events as /qa questions, each asking the text of a
+    deterministic document, keyed by user as the session."""
     from vector_search_question_answer_api_spark.operators.index_build import build_index
-    from vector_search_question_answer_api_spark.operators.sessions import replay_sessions
 
     docs = load_table(spark, sf_dir, "documents")
     index = build_index(docs)
@@ -1462,6 +1458,19 @@ def qa_sessions_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("event_id", "ts", "session_id", "question")
     )
+    return index, qa_events
+
+
+@register("qa_sessions_replay", None)
+def qa_sessions_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The FULL stateful /qa pipeline (SURVEY.md §3.2): embed -> retrieve
+    (k=1, dist<0.4 gate) -> topic-switch fold -> stub answer, replayed by
+    the sorted-partition fold.  Rows-only check: the embedder UDF seam and
+    the keyed fold are not SQL-expressible (correctness is covered by
+    tests/test_sessions.py + tests/test_streaming.py equivalence)."""
+    from vector_search_question_answer_api_spark.operators.sessions import replay_sessions
+
+    index, qa_events = qa_gate_events(spark, sf_dir)
     # persist: the self-check below and the caller's collect both read the
     # replay output (200 rows) — fold once, not twice
     from vector_search_question_answer_api_spark.caching import persist_tracked

@@ -103,15 +103,6 @@ def _next_gen(path: str) -> str:
     return f".gen-{(max(ns) + 1 if ns else 0):06d}"
 
 
-def _partition_dirs(path: str, man: dict) -> dict[str, str]:
-    """cell value -> absolute partition dir for the manifest's mapping."""
-    pcol = man["partition_col"]
-    return {
-        cell: os.path.join(path, gen, f"{pcol}={cell}")
-        for cell, gen in man["cells"].items()
-    }
-
-
 def _mapping_dirs(path: str, pcol: str, cells: dict) -> set[str]:
     """Realpaths of the partition dirs one cell->gen mapping references."""
     return {
