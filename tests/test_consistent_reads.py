@@ -576,6 +576,34 @@ def test_corpus_status_reports_every_store(spark, consistent):
     assert not s["codes"]["present"] and not s["graphs"]["present"]
 
 
+def test_corpus_status_after_compaction(spark, consistent, tmp_path):
+    """corpus_status over FOLDED stores: each generation carries its
+    store's prefix, the horizon is the folded batch, and the log depths
+    drop.  Folds a copy of the fixture root, so the shared fixture stays
+    never-compacted."""
+    from vector_search_question_answer_api_spark.streaming import (
+        index_stream as IX,
+    )
+
+    src, _art, _exp = consistent
+    root = str(tmp_path / "root")
+    shutil.copytree(src, root)
+    before = IG.corpus_status(root)["stores"]
+    IX.compact_index(spark, os.path.join(root, "index"))
+    assert LXS.compact_postings(spark, IG.corpus_postings_path(root))
+    assert ann.compact_lsh_signatures(spark, IG.corpus_lsh_path(root))
+    s = IG.corpus_status(root)["stores"]
+    for name, prefix in (
+        ("index", ".gen-"), ("postings", ".pgen-"), ("lsh", ".sig-gen-"),
+    ):
+        assert s[name]["generation"].startswith(prefix), s[name]
+        assert s[name]["horizon"] == 2, s[name]  # the last folded batch
+    assert before["index"]["log_files"] >= 3 and s["index"]["log_files"] == 0
+    assert before["postings"]["log_batches"] == 3
+    assert s["postings"]["log_batches"] == 0
+    assert before["lsh"]["log_batches"] == 3 and s["lsh"]["log_batches"] == 0
+
+
 # --------------------------------------------------------------- r13:
 # the managed ANN artifacts join the consistency surface (VERDICT r12
 # What's missing #2): the cell stores stamp their manifests with the

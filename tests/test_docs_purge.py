@@ -102,7 +102,7 @@ def test_purged_text_is_physically_gone_after_grace(spark, store):
     droot = os.path.join(store, "docs")
     assert IG.purge_docs_versions(spark, store, before_batch=3) is True
     # grace period: the folded dirs are retired, not yet deleted
-    retired = IG._docs_retired(droot)
+    retired = IG._docs_store(droot).retired()
     assert retired and all(os.path.isdir(p) for p in retired)
     # second purge (same horizon: idempotent re-fold) grace-deletes them
     assert IG.purge_docs_versions(spark, store, before_batch=3) is True

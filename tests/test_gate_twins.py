@@ -441,7 +441,14 @@ def test_bm25_stored_twin_detects_ignored_log(spark, monkeypatch):
     bm25_topk gate's stored twin raise at the post-delete stage."""
     import vector_search_question_answer_api_spark.operators.lexical_store as LXS
 
-    monkeypatch.setattr(LXS, "_log_dirs", lambda path, sub: [])
+    real = LXS.postings_store
+
+    def store_without_log(path):
+        store = real(path)
+        store.log_dirs = lambda sub, up_to_batch=None: []
+        return store
+
+    monkeypatch.setattr(LXS, "postings_store", store_without_log)
     with pytest.raises(ValueError, match="tombstone was ignored"):
         inventory.queries()["bm25_topk"](spark, SF).count()
 

@@ -169,9 +169,9 @@ def test_maintained_equals_oneshot_through_lifecycle(spark, store):
     assert LX.compact_postings(spark, store) is True
     assert _ranked(LX.bm25_topk_stored(spark, store, q, k=4)) == before
     # log dirs are retired from resolution (grace: still on disk)
-    assert LX._log_dirs(store, LX._DL_LOG) == []
+    assert LX.postings_store(store).log_dirs(LX._DL_LOG) == []
     # deletion is physical in the fold: no doc-2 row predates batch 3
-    gen = LX._pg_base(store)
+    gen = LX._base_dir(LX.postings_store(store))
     base_ids = {
         int(r["doc_id"])
         for r in spark.read.parquet(os.path.join(gen, "doclens")).collect()
@@ -188,7 +188,7 @@ def test_maintained_equals_oneshot_through_lifecycle(spark, store):
         bm25_topk(_docs_df(spark, docs), q, k=4),
     )
     # second compaction grace-deletes the first fold's retired dirs
-    retired_before = LX._pg_retired(store)
+    retired_before = LX.postings_store(store).retired()
     assert any(os.path.exists(p) for p in retired_before)
     assert LX.compact_postings(spark, store) is True
     assert not any(os.path.exists(p) for p in retired_before)
@@ -248,7 +248,7 @@ def test_bounded_fold_excludes_current_batch_and_replays(spark, store):
     # batch 2's dirs survived the bounded fold un-retired
     assert {
         int(os.path.basename(d).split("=")[1])
-        for d in LX._log_dirs(store, LX._DL_LOG)
+        for d in LX.postings_store(store).log_dirs(LX._DL_LOG)
     } == {2}
     _append(b2, store, 2)  # the replaying handler overwrites
     del docs[0]
@@ -336,7 +336,8 @@ def test_rebuild_clears_generations(spark, store):
     docs = dict(DOCS_V0)
     docs.pop(5)
     LX.write_postings_index(_docs_df(spark, docs), store, n_buckets=8)
-    assert LX._pg_base(store) == store  # pointer state cleared
+    # pointer state cleared
+    assert LX._base_dir(LX.postings_store(store)) == store
     _assert_equal_rankings(
         LX.bm25_topk_stored(spark, store, q, k=4),
         bm25_topk(_docs_df(spark, docs), q, k=4),

@@ -57,14 +57,14 @@ def _reference_resolution(spark, path):
     over EVERYTHING — kept here as the value reference the log-sized
     read path must reproduce exactly."""
     sources = []
-    base_p = ann._sig_base_dir(path)
+    base_p = ann._base_dir(ann.signature_store(path))
     if base_p is not None:
         sources.append(
             spark.read.parquet(base_p)
             .select("doc_id", "sig")
             .withColumn("_batch", F.lit(-1).cast("long"))
         )
-    dirs = ann._sig_log_dirs(path)
+    dirs = ann.signature_store(path).log_dirs(ann._LSH_SIG_LOG)
     if dirs:
         sources.append(
             spark.read.option(
@@ -215,7 +215,7 @@ def test_compacted_equals_log_bearing_relation(spark, store):
     after = _sig_set(ann.read_lsh_signatures(spark, path))
     assert after == before
     # log dirs are retired from resolution (grace-kept on disk)
-    assert ann._sig_log_dirs(path) == []
+    assert ann.signature_store(path).log_dirs(ann._LSH_SIG_LOG) == []
     assert os.path.isfile(os.path.join(path, ann._SIG_MANIFEST))
     # pure scan now: no join, no window in the plan
     plan = (
@@ -241,7 +241,7 @@ def test_compacted_equals_log_bearing_relation(spark, store):
     assert got == want
     # second compaction folds the new batch AND physically sweeps the
     # grace-retired paths from the first
-    retired_first = ann._sig_retired(path)
+    retired_first = ann.signature_store(path).retired()
     assert ann.compact_lsh_signatures(spark, path) is True
     assert _sig_set(ann.read_lsh_signatures(spark, path)) == want
     for p_ in retired_first:
@@ -256,7 +256,10 @@ def test_bounded_fold_is_replay_safe(spark, store):
     before = _sig_set(ann.read_lsh_signatures(spark, path))
     assert ann.compact_lsh_signatures(spark, path, up_to_batch=2) is True
     # batch=2 (doc 20) survived the fold as a live log dir
-    assert [os.path.basename(d) for d in ann._sig_log_dirs(path)] == [
+    assert [
+        os.path.basename(d)
+        for d in ann.signature_store(path).log_dirs(ann._LSH_SIG_LOG)
+    ] == [
         "batch=2"
     ]
     assert _sig_set(ann.read_lsh_signatures(spark, path)) == before
@@ -390,7 +393,7 @@ def test_in_stream_compaction_cadence(spark, tmp_path):
     lsh_path = IG.corpus_lsh_path(root)
     # compaction ran: generation manifest exists, live log depth < total
     assert os.path.isfile(os.path.join(lsh_path, ann._SIG_MANIFEST))
-    live = ann._sig_log_dirs(lsh_path)
+    live = ann.signature_store(lsh_path).log_dirs(ann._LSH_SIG_LOG)
     assert len(live) <= 2, live  # batches since the last fold only
     index = IG.read_corpus_index(spark, root)
     assert index.count() == 23  # 24 docs - 1 deleted

@@ -959,8 +959,8 @@ def test_compaction_sweeps_crash_orphan_generations(spark, tmpdir):
     import os
 
     from vector_search_question_answer_api_spark.streaming.index_stream import (
-        _current_gen,
         compact_index,
+        index_store,
         read_index_latest,
     )
 
@@ -975,7 +975,7 @@ def test_compaction_sweeps_crash_orphan_generations(spark, tmpdir):
     )
     rows.write.mode("append").parquet(f"{out}/log")
     compact_index(spark, out)
-    cur = _current_gen(out)
+    cur = index_store(out).current_gen()
 
     # simulate the crash leftovers: a generation dir that no MANIFEST or
     # RETIRED entry references

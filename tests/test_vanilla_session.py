@@ -160,3 +160,30 @@ def test_liveness_and_corpus_guards(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     assert corpus_nonempty(docs) is True
     assert corpus_nonempty(docs.filter("doc_id < 0")) is False
+
+
+def test_layout_key_tracks_in_place_part_rewrite(tmp_path):
+    """The scan-layout memo key of a parquet DIRECTORY must change when a
+    part file inside it is rewritten in place — the directory's own stat
+    does not, so a directory-stat key would serve a stale decision."""
+    import os
+
+    from vector_search_question_answer_api_spark.sources.tables import (
+        _layout_key,
+    )
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    part = d / "part-00000.parquet"
+    part.write_bytes(b"x" * 10)
+    (d / "_SUCCESS").write_bytes(b"")
+    before = _layout_key(str(d), 4)
+    assert _layout_key(str(d), 4) == before  # stable while unchanged
+    dir_before = os.stat(d)
+    part.write_bytes(b"y" * 20)  # same name, rewritten in place
+    dir_after = os.stat(d)
+    assert (dir_after.st_mtime_ns, dir_after.st_size) == (
+        dir_before.st_mtime_ns,
+        dir_before.st_size,
+    )
+    assert _layout_key(str(d), 4) != before

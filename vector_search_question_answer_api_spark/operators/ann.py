@@ -35,7 +35,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_search_question_answer_api_spark.functions import vector as V
-from vector_search_question_answer_api_spark.sources.horizon import batch_id_of
+from vector_search_question_answer_api_spark.sources.generation_store import (
+    GenerationStore,
+    batch_id_of,
+)
 from vector_search_question_answer_api_spark.operators.search import topk_per_query
 
 DEFAULT_N_PLANES = 8
@@ -442,68 +445,26 @@ _SIG_RETIRED = "SIG_RETIRED"
 _SIG_HORIZON = "SIG_HORIZON"
 
 
-def _sig_base_dir(path: str) -> str | None:
+def signature_store(path: str) -> GenerationStore:
+    """The signature store's generation files (``.sig-gen-<n>`` bases,
+    ``signatures_log/batch=<id>`` maintenance log)."""
+    return GenerationStore(
+        path, _SIG_MANIFEST, _SIG_RETIRED, ".sig-gen-", _SIG_HORIZON
+    )
+
+
+def _base_dir(store: GenerationStore) -> str | None:
     """Absolute path of the current signature BASE: the generation the
     SIG_MANIFEST names (compacted store), else the legacy/initial
     ``signatures`` dir (write_lsh_index), else None (log-only store
     bootstrapped by the stream)."""
     import os
 
-    try:
-        with open(os.path.join(path, _SIG_MANIFEST), encoding="utf-8") as f:
-            gen = f.read().strip()
-        if gen:
-            return os.path.join(path, gen)
-    except FileNotFoundError:
-        pass
-    base = os.path.join(path, "signatures")
+    gen = store.current_gen()
+    if gen is not None:
+        return os.path.join(store.path, gen)
+    base = os.path.join(store.path, "signatures")
     return base if os.path.isdir(base) else None
-
-
-def _sig_retired(path: str) -> set[str]:
-    import os
-
-    try:
-        with open(os.path.join(path, _SIG_RETIRED), encoding="utf-8") as f:
-            return {os.path.realpath(ln.strip()) for ln in f if ln.strip()}
-    except FileNotFoundError:
-        return set()
-
-
-def _sig_horizon(path: str) -> int | None:
-    """Highest log batch id a compaction has folded into the base (see
-    ``sources/horizon.py`` for the shared protocol + crash rule)."""
-    from vector_search_question_answer_api_spark.sources.horizon import (
-        read_horizon,
-    )
-
-    return read_horizon(path, _SIG_HORIZON)
-
-
-def _stamp_sig_horizon(path: str, batch_id: int) -> None:
-    """Horizon BEFORE manifest — the ``sources/horizon.py`` crash rule."""
-    from vector_search_question_answer_api_spark.sources.horizon import (
-        stamp_horizon,
-    )
-
-    stamp_horizon(path, _SIG_HORIZON, batch_id)
-
-
-def _sig_log_dirs(path: str) -> list[str]:
-    """``batch=<id>`` log dirs, OLDEST first, excluding paths retired by
-    the last compaction (still on disk through the grace period — a new
-    resolve must not double-count rows a published generation already
-    folded)."""
-    import glob
-    import os
-
-    retired = _sig_retired(path)
-    dirs = [
-        d
-        for d in glob.glob(os.path.join(path, _LSH_SIG_LOG, "batch=*"))
-        if os.path.isdir(d) and os.path.realpath(d) not in retired
-    ]
-    return sorted(dirs, key=lambda d: batch_id_of(d))
 
 
 def write_lsh_artifact(
@@ -654,18 +615,10 @@ def write_lsh_index(
     except FileNotFoundError:
         pass
     # a rebuild supersedes any compacted generation too: drop the
-    # generation manifest/retire list and every .sig-gen-* dir so the
-    # fresh "signatures" base cannot be shadowed by a stale pointer
+    # generation manifest/retire list/horizon and every .sig-gen-* dir so
+    # the fresh "signatures" base cannot be shadowed by a stale pointer
     # (safe while the knob manifest is absent — readers refuse the store)
-    import glob
-
-    for f in (_SIG_MANIFEST, _SIG_RETIRED, _SIG_HORIZON):
-        try:
-            os.remove(os.path.join(path, f))
-        except FileNotFoundError:
-            pass
-    for d in glob.glob(os.path.join(path, ".sig-gen-*")):
-        shutil.rmtree(d, ignore_errors=True)
+    signature_store(path).clear()
     sigs = with_lsh_signatures(
         index.select(
             F.col(index_id_col).alias("doc_id"),
@@ -756,7 +709,7 @@ def append_lsh_signatures_batch(
         if (
             os.path.isdir(os.path.join(path, "signatures"))
             or os.path.isdir(os.path.join(path, _LSH_SIG_LOG))
-            or os.path.isfile(os.path.join(path, _SIG_MANIFEST))
+            or os.path.isfile(signature_store(path).manifest_path)
         ):
             raise ValueError(
                 f"append_lsh_signatures_batch: no manifest at {path!r} but "
@@ -837,7 +790,7 @@ def _resolve_sig_log(log: DataFrame) -> DataFrame:
 def _read_sig_log(spark, path: str, dirs: list[str]) -> DataFrame:
     """(doc_id, sig, _batch) rows of the given ``batch=<id>`` log dirs —
     basePath keeps the partition column while letting the reader exclude
-    grace-retired dirs (``_sig_log_dirs``)."""
+    grace-retired dirs (``GenerationStore.log_dirs``)."""
     import os
 
     return (
@@ -880,24 +833,9 @@ def read_lsh_signatures(
     scan with no shuffle at all.  Base rows are null-free by
     construction (both writers hash only live vectors), so the
     tombstone drop applies on the log side only."""
-    import os
-
-    base_p = _sig_base_dir(path)
-    log_dirs = _sig_log_dirs(path)
-    if up_to_batch is not None:
-        horizon = _sig_horizon(path)
-        if horizon is not None and int(up_to_batch) < horizon:
-            raise ValueError(
-                f"read_lsh_signatures: up_to_batch={int(up_to_batch)} is "
-                f"below the compaction horizon {horizon} at {path!r} — "
-                "the folded base keeps no per-batch provenance, so that "
-                "historical state is no longer resolvable"
-            )
-        log_dirs = [
-            d
-            for d in log_dirs
-            if batch_id_of(d) <= int(up_to_batch)
-        ]
+    store = signature_store(path)
+    base_p = _base_dir(store)
+    log_dirs = store.log_dirs(_LSH_SIG_LOG, up_to_batch)
     if base_p is None and not log_dirs:
         raise FileNotFoundError(f"no LSH signature store at {path}")
     base = (
@@ -945,7 +883,7 @@ def compact_lsh_signatures(
       dirs into ``SIG_RETIRED``; the NEXT compaction physically deletes
       them — the one-cycle grace period that keeps lazily-executed
       reader plans valid.  New resolves exclude retired dirs
-      (``_sig_log_dirs`` / the manifest pointer).
+      (``GenerationStore.log_dirs`` / the manifest pointer).
 
     ``up_to_batch=N`` bounds the fold to log batches < N — the in-stream
     cadence contract (``maintain_corpus(compact_lsh_every=)``): called at
@@ -960,10 +898,6 @@ def compact_lsh_signatures(
     is the canonical source — so no id-only marker is kept."""
     import os
 
-    from vector_search_question_answer_api_spark.sources.generation_store import (
-        GenerationStore,
-    )
-
     # manifest must exist: compacting a store without its knob manifest
     # would publish a generation readers refuse anyway (FileNotFoundError
     # propagates with the store path in the message)
@@ -971,11 +905,11 @@ def compact_lsh_signatures(
 
     # shared lifecycle (sources/generation_store, r13): grace-delete what
     # the previous compaction retired, sweep crashed-attempt orphans
-    store = GenerationStore(path, _SIG_MANIFEST, _SIG_RETIRED, ".sig-gen-")
-    cur = _sig_base_dir(path)
+    store = signature_store(path)
+    cur = _base_dir(store)
     store.housekeep(keep=[cur] if cur is not None else [])
 
-    snapshot = _sig_log_dirs(path)
+    snapshot = store.log_dirs(_LSH_SIG_LOG)
     if up_to_batch is not None:
         snapshot = [
             d
@@ -1007,11 +941,8 @@ def compact_lsh_signatures(
     )
     # horizon BEFORE the manifest: a crash between the two over-claims
     # (bounded reads below it raise needlessly) but never under-claims
-    # (serving folded rows as historical state) — see _stamp_sig_horizon
-    _stamp_sig_horizon(
-        path,
-        max(batch_id_of(d) for d in snapshot),
-    )
+    # (serving folded rows as historical state)
+    store.stamp_horizon(max(batch_id_of(d) for d in snapshot))
     retire = list(snapshot)
     if cur is not None:
         retire.append(cur)

@@ -51,7 +51,6 @@ rewrite, NO re-tokenization) and the 2-column doclens aggregate for
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -60,7 +59,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_search_question_answer_api_spark.functions import text as TXT
-from vector_search_question_answer_api_spark.sources.horizon import batch_id_of
+from vector_search_question_answer_api_spark.sources.generation_store import (
+    GenerationStore,
+    batch_id_of,
+)
 
 POSTINGS_FAMILY = "bm25-postings-ws-v1"
 _KNOB_MANIFEST = "_postings_manifest.json"
@@ -137,86 +139,25 @@ def _write_manifest(path: str, manifest: dict) -> None:
 # ------------------------------------------------------------- generations
 
 
-def _pg_base(path: str) -> str | None:
+def postings_store(path: str) -> GenerationStore:
+    """The postings store's generation files (``.pgen-<n>`` bases,
+    ``postings_log``/``doclens_log`` ``batch=<id>`` maintenance logs)."""
+    return GenerationStore(
+        path, _PG_MANIFEST, _PG_RETIRED, ".pgen-", _PG_HORIZON
+    )
+
+
+def _base_dir(store: GenerationStore) -> str | None:
     """Dir of the current base GENERATION (contains ``postings/`` +
-    ``doclens/``): the ``PG_MANIFEST`` pointer (compacted store), else
-    the store root itself when the initial build's dirs exist, else
-    None (log-only store bootstrapped by the stream)."""
-    try:
-        with open(os.path.join(path, _PG_MANIFEST), encoding="utf-8") as f:
-            gen = f.read().strip()
-        if gen:
-            return os.path.join(path, gen)
-    except FileNotFoundError:
-        pass
-    if os.path.isdir(os.path.join(path, "postings")):
-        return path
+    ``doclens/``): the generation ``PG_MANIFEST`` names (compacted
+    store), else the store root itself when the initial build's dirs
+    exist, else None (log-only store bootstrapped by the stream)."""
+    gen = store.current_gen()
+    if gen is not None:
+        return os.path.join(store.path, gen)
+    if os.path.isdir(os.path.join(store.path, "postings")):
+        return store.path
     return None
-
-
-def _pg_retired(path: str) -> set[str]:
-    try:
-        with open(os.path.join(path, _PG_RETIRED), encoding="utf-8") as f:
-            return {os.path.realpath(ln.strip()) for ln in f if ln.strip()}
-    except FileNotFoundError:
-        return set()
-
-
-def _pg_horizon(path: str) -> int | None:
-    """Highest log batch id a compaction has folded into the base (see
-    ``sources/horizon.py`` for the shared protocol + crash rule)."""
-    from vector_search_question_answer_api_spark.sources.horizon import (
-        read_horizon,
-    )
-
-    return read_horizon(path, _PG_HORIZON)
-
-
-def _stamp_pg_horizon(path: str, batch_id: int) -> None:
-    """Horizon BEFORE manifest — the ``sources/horizon.py`` crash rule."""
-    from vector_search_question_answer_api_spark.sources.horizon import (
-        stamp_horizon,
-    )
-
-    stamp_horizon(path, _PG_HORIZON, batch_id)
-
-
-def _bounded_log_dirs(
-    path: str, sub: str, up_to_batch: int | None
-) -> list[str]:
-    """``_log_dirs`` restricted to batches <= ``up_to_batch`` — the
-    consistent-read bound (r12).  Raises below the compaction horizon:
-    the folded base keeps no per-batch provenance, so older states are no
-    longer resolvable (the ``read_index_asof`` exactness discipline).  A
-    ``write_postings_index`` full rebuild clears the horizon along with
-    the log — it resets the store's history."""
-    dirs = _log_dirs(path, sub)
-    if up_to_batch is None:
-        return dirs
-    horizon = _pg_horizon(path)
-    if horizon is not None and int(up_to_batch) < horizon:
-        raise ValueError(
-            f"lexical_store: up_to_batch={int(up_to_batch)} is below the "
-            f"compaction horizon {horizon} at {path!r} — that historical "
-            "state is no longer resolvable"
-        )
-    return [
-        d
-        for d in dirs
-        if batch_id_of(d) <= int(up_to_batch)
-    ]
-
-
-def _log_dirs(path: str, sub: str) -> list[str]:
-    """``batch=<id>`` dirs of one log, OLDEST first, excluding dirs the
-    last compaction retired (still on disk through the grace period)."""
-    retired = _pg_retired(path)
-    dirs = [
-        d
-        for d in glob.glob(os.path.join(path, sub, "batch=*"))
-        if os.path.isdir(d) and os.path.realpath(d) not in retired
-    ]
-    return sorted(dirs, key=lambda d: batch_id_of(d))
 
 
 def _read_log(spark, path: str, sub: str, dirs: list[str]) -> DataFrame:
@@ -254,15 +195,9 @@ def write_postings_index(
         os.remove(os.path.join(path, _KNOB_MANIFEST))
     except FileNotFoundError:
         pass
-    for fname in (_PG_MANIFEST, _PG_RETIRED, _PG_HORIZON):
-        try:
-            os.remove(os.path.join(path, fname))
-        except FileNotFoundError:
-            pass
+    postings_store(path).clear()
     for d in (_POST_LOG, _DL_LOG):
         shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    for d in glob.glob(os.path.join(path, ".pgen-*")):
-        shutil.rmtree(d, ignore_errors=True)
 
     toks = _batch_tokens(documents, id_col, text_col, ts_col=None)
     posts = _postings_of(toks, n_buckets)
@@ -334,7 +269,7 @@ def append_postings_batch(
         if (
             os.path.isdir(os.path.join(path, "postings"))
             or os.path.isdir(os.path.join(path, _POST_LOG))
-            or os.path.isfile(os.path.join(path, _PG_MANIFEST))
+            or os.path.isfile(postings_store(path).manifest_path)
         ):
             raise ValueError(
                 f"append_postings_batch: no manifest at {path!r} but "
@@ -442,9 +377,10 @@ def _log_census(dl_log: DataFrame) -> DataFrame:
 def _resolved_parts(spark, path: str, up_to_batch: int | None = None):
     """(base_gen_dir, post_dirs, dl_dirs) of the current store state,
     log dirs bounded to ``up_to_batch`` when given (consistent reads)."""
-    base = _pg_base(path)
-    post_dirs = _bounded_log_dirs(path, _POST_LOG, up_to_batch)
-    dl_dirs = _bounded_log_dirs(path, _DL_LOG, up_to_batch)
+    store = postings_store(path)
+    base = _base_dir(store)
+    post_dirs = store.log_dirs(_POST_LOG, up_to_batch)
+    dl_dirs = store.log_dirs(_DL_LOG, up_to_batch)
     if base is None and not dl_dirs:
         raise FileNotFoundError(f"no postings store at {path}")
     return base, post_dirs, dl_dirs
@@ -507,7 +443,7 @@ def read_doclens(
 ) -> DataFrame:
     """Resolved (doc_id, dl) of live docs (``_resolve_doclens_frame``).
     ``up_to_batch`` bounds the log to a committed epoch (see
-    ``_bounded_log_dirs``).  ``_census`` (internal) shares one cached
+    ``GenerationStore.log_dirs``).  ``_census`` (internal) shares one cached
     :func:`_log_census` across the several resolutions of one serving
     call (``bm25_topk_stored``)."""
     read_postings_manifest(path)
@@ -545,7 +481,7 @@ def read_postings(
     broadcast anti-join on the doclens log's doc ids; log postings keep
     only each doc's newest LIVE version (broadcast join against the
     log-sized latest-live relation).  ``up_to_batch`` bounds the log to
-    a committed epoch (see ``_bounded_log_dirs``)."""
+    a committed epoch (see ``GenerationStore.log_dirs``)."""
     manifest = read_postings_manifest(path)
     n_buckets = int(manifest["n_buckets"])
     base, post_dirs, dl_dirs = _resolved_parts(spark, path, up_to_batch)
@@ -687,7 +623,7 @@ def bm25_topk_stored(
     # cadence at any corpus size), so the tracked persist is safe; the log
     # is read once per call — the readers below take the census and never
     # open the log themselves.
-    dl_dirs = _bounded_log_dirs(path, _DL_LOG, up_to_batch)
+    dl_dirs = postings_store(path).log_dirs(_DL_LOG, up_to_batch)
     census = None
     if dl_dirs:
         census = persist_tracked(
@@ -766,17 +702,13 @@ def compact_postings(
     Deleted docs simply VANISH from the fold; deletion evidence for
     downstream consumers lives in the index log
     (``read_index_tombstones``), not here."""
-    from vector_search_question_answer_api_spark.sources.generation_store import (
-        GenerationStore,
-    )
-
     manifest = read_postings_manifest(path)
     n_buckets = int(manifest["n_buckets"])
 
     # shared lifecycle (sources/generation_store, r13): grace-delete what
     # the previous compaction retired, sweep crashed-attempt orphans
-    store = GenerationStore(path, _PG_MANIFEST, _PG_RETIRED, ".pgen-")
-    cur = _pg_base(path)
+    store = postings_store(path)
+    cur = _base_dir(store)
     store.housekeep(keep=[cur] if cur is not None else [])
 
     def _bounded(dirs: list[str]) -> list[str]:
@@ -788,19 +720,19 @@ def compact_postings(
             if batch_id_of(d) < int(up_to_batch)
         ]
 
-    dl_dirs = _bounded(_log_dirs(path, _DL_LOG))
+    dl_dirs = _bounded(store.log_dirs(_DL_LOG))
     # the doclens write is the batch's COMMIT MARKER (append writes
     # postings first, doclens second — a crash between the two leaves a
     # postings dir the read path resolves away).  Fold and retire ONLY
     # committed batches: a postings-only dir stays in place untouched
     # for the replaying handler's overwrite — retiring it would make the
-    # re-appended batch invisible (_log_dirs excludes retired realpaths).
+    # re-appended batch invisible (log_dirs excludes retired realpaths).
     committed = {
         batch_id_of(d) for d in dl_dirs
     }
     post_dirs = [
         d
-        for d in _bounded(_log_dirs(path, _POST_LOG))
+        for d in _bounded(store.log_dirs(_POST_LOG))
         if batch_id_of(d) in committed
     ]
     if not dl_dirs:
@@ -848,13 +780,11 @@ def compact_postings(
     folded_dl.write.mode("overwrite").parquet(
         os.path.join(gen_dir, "doclens")
     )
-    # horizon BEFORE the manifest (see _stamp_pg_horizon): folded batches
-    # are the committed dl set — a postings-only crashed dir is neither
-    # folded nor retired, so it stays resolvable after its replay
-    _stamp_pg_horizon(
-        path,
-        max(batch_id_of(d) for d in dl_dirs),
-    )
+    # horizon BEFORE the manifest (the generation_store crash rule):
+    # folded batches are the committed dl set — a postings-only crashed
+    # dir is neither folded nor retired, so it stays resolvable after
+    # its replay
+    store.stamp_horizon(max(batch_id_of(d) for d in dl_dirs))
     retire = list(post_dirs + dl_dirs)
     if cur is not None and cur != path:
         retire.append(cur)

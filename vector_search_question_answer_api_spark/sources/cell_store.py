@@ -75,23 +75,19 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_search_question_answer_api_spark.sources.generation_store import (
+    GenerationStore,
+)
+
+
+def _store(path: str) -> GenerationStore:
+    return GenerationStore(path, "MANIFEST", "RETIRED", ".gen-")
+
 
 def cell_store_manifest(path: str) -> dict | None:
     """The parsed MANIFEST, or None when ``path`` is not a managed store
     (legacy flat artifact or empty dir)."""
-    try:
-        with open(os.path.join(path, "MANIFEST"), encoding="utf-8") as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-def _retired(path: str) -> list[str]:
-    try:
-        with open(os.path.join(path, "RETIRED"), encoding="utf-8") as f:
-            return [os.path.realpath(ln.strip()) for ln in f if ln.strip()]
-    except FileNotFoundError:
-        return []
+    return _store(path).manifest_json()
 
 
 def _next_gen(path: str) -> str:
@@ -125,15 +121,9 @@ def _housekeep(path: str, man: dict | None) -> None:
     """Grace-delete what the previous write retired, then sweep partition
     dirs referenced by neither MANIFEST (current + retained history) nor
     RETIRED (crash leftovers)."""
-    for stale in _retired(path):
-        if os.path.isdir(stale):
-            shutil.rmtree(stale, ignore_errors=True)
-        else:
-            try:
-                os.remove(stale)
-            except FileNotFoundError:
-                pass
-    referenced = set(_retired(path))
+    store = _store(path)
+    store.grace_delete()
+    referenced = set(store.retired())
     if man is not None:
         referenced.update(_all_referenced(path, man))
     for gen in glob.glob(os.path.join(path, ".gen-*")):
@@ -147,18 +137,11 @@ def _housekeep(path: str, man: dict | None) -> None:
 
 
 def _publish_manifest(path: str, man: dict) -> None:
-    tmp = os.path.join(path, ".MANIFEST.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(man, f, sort_keys=True)
-    os.replace(tmp, os.path.join(path, "MANIFEST"))  # the atomic publish
+    _store(path).publish_manifest(json.dumps(man, sort_keys=True))
 
 
 def _publish(path: str, man: dict, retire: list[str]) -> None:
-    _publish_manifest(path, man)
-    tmp_r = os.path.join(path, ".RETIRED.tmp")
-    with open(tmp_r, "w", encoding="utf-8") as f:
-        f.write("\n".join(os.path.realpath(p) for p in retire) + "\n")
-    os.replace(tmp_r, os.path.join(path, "RETIRED"))
+    _store(path).publish(json.dumps(man, sort_keys=True), retire)
 
 
 def cell_store_stamp_frontier(path: str, batch_id: int) -> None:

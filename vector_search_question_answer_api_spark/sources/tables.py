@@ -26,16 +26,30 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # count vs core count), not of the query — but the probe itself
 # (df.rdd.getNumPartitions()) materializes a JVM RDD from the analyzed
 # plan, a driver round-trip every load_table caller was paying on every
-# call.  Decision cached per (path, mtime, size, target) — the
-# mtime/size key legs (ADVICE r15) invalidate the memo when a tool
-# rewrites a table file in place, instead of serving a stale decision.
+# call.  Decision cached per (path, layout, target): a single file keys
+# on its own (mtime, size); a parquet DIRECTORY keys on its sorted
+# part-file (name, mtime, size) listing, because an in-place rewrite of
+# a part file changes that file's stat but not the directory's.  Either
+# way a tool that rewrites a table invalidates the memo instead of being
+# served a stale decision.
 _NEEDS_REPARTITION: dict = {}
 
 
 def _layout_key(path: str, target: int) -> tuple:
     try:
-        st = os.stat(path)
-        return (path, int(st.st_mtime_ns), int(st.st_size), target)
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (path, int(st.st_mtime_ns), int(st.st_size), target)
+        parts = []
+        for d, subdirs, files in os.walk(path):
+            # Spark's listing skips hidden and metadata entries
+            subdirs[:] = [x for x in subdirs if not x.startswith(("_", "."))]
+            for f in files:
+                if not f.startswith(("_", ".")):
+                    st = os.stat(os.path.join(d, f))
+                    name = os.path.relpath(os.path.join(d, f), path)
+                    parts.append((name, int(st.st_mtime_ns), int(st.st_size)))
+        return (path, tuple(sorted(parts)), target)
     except OSError:
         return (path, None, None, target)
 

@@ -64,62 +64,30 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _current_gen(path: str) -> str | None:
-    """Name of the manifest-referenced generation dir, or None."""
-    mf = os.path.join(path, "MANIFEST")
-    try:
-        with open(mf, encoding="utf-8") as f:
-            gen = f.read().strip()
-    except FileNotFoundError:
-        return None
-    return gen or None
+from vector_search_question_answer_api_spark.sources.generation_store import (
+    GenerationStore,
+)
 
 
-def index_fold_horizon(path: str) -> int | None:
-    """Highest ``_batch`` a compaction has folded into a generation, or
-    None for a never-compacted index.  A fold keeps only each doc's
-    latest row, so batch-bounded reads BELOW the horizon can no longer
-    resolve superseded versions — ``ingest_stream.read_corpus_index``
-    raises there (the lexical/LSH store discipline); at or above it they
-    stay exact (folded winners keep their original ``_batch``).  See
-    ``sources/horizon.py`` for the shared protocol + crash rule."""
-    from vector_search_question_answer_api_spark.sources.horizon import (
-        read_horizon,
-    )
-
-    return read_horizon(path, "HORIZON")
+def index_store(path: str) -> GenerationStore:
+    """The index's generation files: ``MANIFEST`` names the current
+    ``.gen-<n>``; ``RETIRED`` lists what the previous compaction
+    superseded (superseded generation + the log files it folded in),
+    kept on disk for one full compaction cycle — the grace period that
+    keeps lazily executed reader plans valid — and excluded from new
+    resolves; ``HORIZON`` is the highest ``_batch`` a compaction folded.
+    A fold keeps only each doc's latest row, so batch-bounded reads
+    below the horizon raise (``ingest_stream.read_corpus_index``); at or
+    above it they stay exact (folded winners keep their ``_batch``)."""
+    return GenerationStore(path, "MANIFEST", "RETIRED", ".gen-", "HORIZON")
 
 
-def _stamp_index_horizon(path: str, batch_id: int) -> None:
-    """Horizon BEFORE MANIFEST — the ``sources/horizon.py`` crash rule."""
-    from vector_search_question_answer_api_spark.sources.horizon import (
-        stamp_horizon,
-    )
-
-    stamp_horizon(path, "HORIZON", batch_id)
-
-
-def _retired(path: str) -> list[str]:
-    """Paths retired by the PREVIOUS compaction (superseded generation dir
-    + the log files it folded in), REALPATH-normalized on read so the
-    retire/exclude bookkeeping is insensitive to how the index path was
-    spelled (relative vs absolute vs symlinked — ADVICE r6).  They stay on
-    disk for one full compaction cycle — the grace period that keeps
-    lazily executed reader plans valid — and are excluded from new
-    resolves."""
-    try:
-        with open(os.path.join(path, "RETIRED"), encoding="utf-8") as f:
-            return [os.path.realpath(ln.strip()) for ln in f if ln.strip()]
-    except FileNotFoundError:
-        return []
-
-
-def _log_files(path: str) -> list[str]:
-    # compare realpaths on BOTH sides: a retired file must stay excluded
-    # even when compact_index and this reader spell the index path
-    # differently (ADVICE r6)
-    retired = set(_retired(path))
+def index_log_files(path: str) -> list[str]:
+    """Live log part files (the log is flat parquet, ``_batch`` a data
+    column).  Realpaths are compared on BOTH sides: a retired file must
+    stay excluded even when ``compact_index`` and this reader spell the
+    index path differently (ADVICE r6)."""
+    retired = set(index_store(path).retired())
     return sorted(
         f
         for f in glob.glob(
@@ -271,10 +239,10 @@ def _raw_log(spark: SparkSession, path: str, files: list[str] | None = None):
     """The un-resolved union of current generation + log rows (or an
     explicit log-file snapshot), or None when the path holds no index."""
     sources = []
-    gen = _current_gen(path)
+    gen = index_store(path).current_gen()
     if gen is not None:
         sources.append(spark.read.parquet(os.path.join(path, gen)))
-    lf = _log_files(path) if files is None else files
+    lf = index_log_files(path) if files is None else files
     if lf:
         sources.append(spark.read.parquet(*lf))
     if not sources:
@@ -460,43 +428,25 @@ def compact_index(
     ``_pre_publish_hook`` is a test seam invoked after the generation is
     written but before the manifest swap (tests read mid-compaction
     through it)."""
-    import shutil
-
     from vector_search_question_answer_api_spark.sources.compaction import (
         compact_write,
     )
 
-    # grace period elapsed: physically drop what the PREVIOUS compaction
-    # retired (no new resolve references these; see _log_files/_retired)
-    for stale in _retired(path):
-        if os.path.isdir(stale):
-            shutil.rmtree(stale, ignore_errors=True)
-        else:
-            try:
-                os.remove(stale)
-            except FileNotFoundError:
-                pass
-
-    old_gen = _current_gen(path)
-    # crash-window orphan sweep (ADVICE r6): a compaction that died between
+    # grace-delete what the PREVIOUS compaction retired, then sweep
+    # crash-window orphans (ADVICE r6): a compaction that died between
     # the MANIFEST publish and the RETIRED rewrite leaves the superseded
-    # .gen-<n> referenced by NEITHER file — it would leak forever since no
-    # resolve ever glob-lists generation dirs.  Any .gen-* that is neither
-    # current nor retired is such an orphan; dropping it here preserves the
-    # grace bound (the crash plus this compaction span a full cycle).
-    retired_now = set(_retired(path))
-    for d in glob.glob(os.path.join(path, ".gen-*")):
-        if (
-            os.path.isdir(d)
-            and os.path.basename(d) != old_gen
-            and os.path.realpath(d) not in retired_now
-        ):
-            shutil.rmtree(d, ignore_errors=True)
-    snapshot = _log_files(path)
+    # .gen-<n> referenced by NEITHER file — it would leak forever since
+    # no resolve ever glob-lists generation dirs.  Dropping it here
+    # preserves the grace bound (the crash plus this compaction span a
+    # full cycle).
+    store = index_store(path)
+    old_gen = store.current_gen()
+    store.housekeep(keep=[os.path.join(path, old_gen)] if old_gen else [])
+    snapshot = index_log_files(path)
     raw = _raw_log(spark, path, files=snapshot)
     if raw is None:
         raise FileNotFoundError(f"no index at {path}")
-    prev_horizon = index_fold_horizon(path)
+    prev_horizon = store.horizon()
     if (
         up_to_batch is not None
         and prev_horizon is not None
@@ -556,8 +506,7 @@ def compact_index(
     # SAME id with identical content, so either pick resolves alike.
     latest = _resolve_latest(raw, keep_tombstones=not drop_tombstones,
                              keep_meta=True)
-    n = int(old_gen.split("-")[-1]) + 1 if old_gen else 0
-    new_gen = f".gen-{n:06d}"
+    new_gen = store.next_gen(old_gen)
     compact_write(
         latest,
         os.path.join(path, new_gen),
@@ -593,26 +542,16 @@ def compact_index(
                 m = int(row["m"])
                 h = m if h is None else max(h, m)
         if h is not None and h >= 0:
-            _stamp_index_horizon(path, h)
+            store.stamp_horizon(h)
     if _pre_publish_hook is not None:
         _pre_publish_hook()
-    tmp = os.path.join(path, ".MANIFEST.tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(new_gen + "\n")
-    os.replace(tmp, os.path.join(path, "MANIFEST"))  # the atomic publish
-    # retire (grace-period delete at the NEXT compaction): superseded
-    # generation, folded log files, and — on first migration — the legacy
-    # flat part files the resolve consumed
+    # publish, then retire (grace-period delete at the NEXT compaction):
+    # superseded generation, folded log files, and — on first migration —
+    # the legacy flat part files the resolve consumed
     retire: list[str] = []
     if old_gen is not None:
         retire.append(os.path.join(path, old_gen))
     retire.extend(snapshot)
     if legacy_flat:
         retire.extend(glob.glob(os.path.join(path, "*.parquet")))
-    # realpath-normalize so later exclusions/deletions match regardless of
-    # how the caller spelled the index path (ADVICE r6)
-    retire = [os.path.realpath(p) for p in retire]
-    tmp_r = os.path.join(path, ".RETIRED.tmp")
-    with open(tmp_r, "w", encoding="utf-8") as f:
-        f.write("\n".join(retire) + "\n")
-    os.replace(tmp_r, os.path.join(path, "RETIRED"))
+    store.publish(new_gen + "\n", retire)

@@ -73,7 +73,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from vector_search_question_answer_api_spark.sources.horizon import batch_id_of
+from vector_search_question_answer_api_spark.sources.generation_store import (
+    GenerationStore,
+    batch_id_of,
+)
 
 from vector_search_question_answer_api_spark.streaming import (
     ann_maintain,
@@ -837,11 +840,12 @@ def corpus_status(root: str) -> dict:
 
     ix = p["index"]
     if os.path.isdir(ix):
+        store = IX.index_store(ix)
         out["stores"]["index"] = {
             "present": True,
-            "log_files": len(IX._log_files(ix)),
-            "generation": IX._current_gen(ix),
-            "horizon": IX.index_fold_horizon(ix),
+            "log_files": len(IX.index_log_files(ix)),
+            "generation": store.current_gen(),
+            "horizon": store.horizon(),
         }
     else:
         out["stores"]["index"] = {"present": False}
@@ -867,19 +871,12 @@ def corpus_status(root: str) -> dict:
     pg = p["postings"]
     try:
         LXS.read_postings_manifest(pg)
-        pg_base = LXS._pg_base(pg)
+        store = LXS.postings_store(pg)
         out["stores"]["postings"] = {
             "present": True,
-            "log_batches": len(LXS._bounded_log_dirs(pg, LXS._DL_LOG, None)),
-            # a real .pgen-* pointer only — the initial-build layout's
-            # base is the store root, which is no generation
-            "generation": (
-                os.path.basename(pg_base)
-                if pg_base is not None
-                and os.path.basename(pg_base).startswith(".pgen-")
-                else None
-            ),
-            "horizon": LXS._pg_horizon(pg),
+            "log_batches": len(store.log_dirs(LXS._DL_LOG)),
+            "generation": store.current_gen(),
+            "horizon": store.horizon(),
         }
     except FileNotFoundError:
         out["stores"]["postings"] = {"present": False}
@@ -887,17 +884,12 @@ def corpus_status(root: str) -> dict:
     lp = p["lsh"]
     try:
         art = ann.read_lsh_artifact(lp)
-        sig_base = ann._sig_base_dir(lp)
+        store = ann.signature_store(lp)
         out["stores"]["lsh"] = {
             "present": True,
-            "log_batches": len(ann._sig_log_dirs(lp)),
-            "generation": (
-                os.path.basename(sig_base)
-                if sig_base is not None
-                and os.path.basename(sig_base).startswith(".sig-gen-")
-                else None
-            ),
-            "horizon": ann._sig_horizon(lp),
+            "log_batches": len(store.log_dirs(ann._LSH_SIG_LOG)),
+            "generation": store.current_gen(),
+            "horizon": store.horizon(),
             "n_planes": int(art["n_planes"]),
             "n_tables": int(art["n_tables"]),
         }
@@ -966,14 +958,7 @@ def read_corpus_index(
     path = _subpaths(root)["index"]
     if up_to_batch is None:
         return IX.read_index_latest(spark, path)
-    horizon = IX.index_fold_horizon(path)
-    if horizon is not None and int(up_to_batch) < horizon:
-        raise ValueError(
-            f"read_corpus_index: up_to_batch={int(up_to_batch)} is below "
-            f"the index compaction horizon {horizon} at {path!r} — folds "
-            "keep only each doc's latest row, so that historical state "
-            "is no longer resolvable"
-        )
+    IX.index_store(path).check_horizon(up_to_batch)
     return IX.read_index_before_batch(spark, path, int(up_to_batch) + 1)
 
 
@@ -981,36 +966,17 @@ _DOCS_MANIFEST = "DOCS_MANIFEST"
 _DOCS_RETIRED = "DOCS_RETIRED"
 
 
+def _docs_store(droot: str) -> GenerationStore:
+    return GenerationStore(droot, _DOCS_MANIFEST, _DOCS_RETIRED, ".dgen-")
+
+
 def _docs_parts(droot: str):
     """(manifest dict | None, live batch dirs) of a docs store.  The
     manifest points at the current purge generation (``.dgen-*``); batch
     dirs exclude paths the last purge retired (grace period — still on
     disk so lazily-executed reader plans stay valid)."""
-    import glob
-    import json
-
-    man = None
-    try:
-        with open(os.path.join(droot, _DOCS_MANIFEST), encoding="utf-8") as f:
-            man = json.load(f)
-    except FileNotFoundError:
-        pass
-    retired = _docs_retired(droot)
-    dirs = [
-        d
-        for d in glob.glob(os.path.join(droot, "batch=*"))
-        if os.path.isdir(d) and os.path.realpath(d) not in retired
-    ]
-    dirs.sort(key=lambda d: batch_id_of(d))
-    return man, dirs
-
-
-def _docs_retired(droot: str) -> set[str]:
-    try:
-        with open(os.path.join(droot, _DOCS_RETIRED), encoding="utf-8") as f:
-            return {os.path.realpath(ln.strip()) for ln in f if ln.strip()}
-    except FileNotFoundError:
-        return set()
+    store = _docs_store(droot)
+    return store.manifest_json(), store.log_dirs("")
 
 
 def _docs_frame(spark: SparkSession, droot: str) -> DataFrame:
@@ -1163,11 +1129,7 @@ def purge_docs_versions(
         )
     # shared lifecycle (sources/generation_store, r13): grace-delete what
     # the previous purge retired, sweep crashed-attempt orphans
-    from vector_search_question_answer_api_spark.sources.generation_store import (
-        GenerationStore,
-    )
-
-    store = GenerationStore(droot, _DOCS_MANIFEST, _DOCS_RETIRED, ".dgen-")
+    store = _docs_store(droot)
     cur_gen = (
         os.path.join(droot, man["gen"]) if man is not None else None
     )

@@ -223,14 +223,16 @@ def profile_covered_up_to(path: str) -> "int | None":
     return None if m is None else int(m["covered_up_to"])
 
 
-def _prof_manifest(path: str) -> "dict | None":
-    import json
+def _prof_store(path: str):
+    from vector_search_question_answer_api_spark.sources.generation_store import (
+        GenerationStore,
+    )
 
-    try:
-        with open(os.path.join(path, _PROF_MANIFEST), encoding="utf-8") as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
+    return GenerationStore(path, _PROF_MANIFEST, _PROF_RETIRED, ".prof-gen-")
+
+
+def _prof_manifest(path: str) -> "dict | None":
+    return _prof_store(path).manifest_json()
 
 
 def rebuild_profile(
@@ -302,13 +304,9 @@ def rebuild_profile(
         )
         return
 
-    from vector_search_question_answer_api_spark.sources.generation_store import (
-        GenerationStore,
-    )
-
     # shared lifecycle (sources/generation_store, r13): grace-delete what
     # the previous rebuild retired, sweep crashed-attempt orphans
-    store = GenerationStore(path, _PROF_MANIFEST, _PROF_RETIRED, ".prof-gen-")
+    store = _prof_store(path)
     cur = store.manifest_json()
     cur_gen = cur["gen"] if cur else None
     store.housekeep(
@@ -382,11 +380,7 @@ def _rebuild_profile_sharded(
         cell_store_stamp_frontier,
         cell_store_write_full,
     )
-    from vector_search_question_answer_api_spark.sources.generation_store import (
-        GenerationStore,
-    )
-
-    store = GenerationStore(path, _PROF_MANIFEST, _PROF_RETIRED, ".prof-gen-")
+    store = _prof_store(path)
     cur = store.manifest_json()
     cur_gen = cur.get("gen") if cur else None
     store.housekeep(keep=[os.path.join(path, cur_gen)] if cur_gen else [])
