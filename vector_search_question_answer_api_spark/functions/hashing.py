@@ -42,42 +42,15 @@ def band_keys(signature: Column, n_bands: int, rows_per_band: int) -> Column:
     )
 
 
-def simhash_bits(tokens_col: Column, n_bits: int = 64) -> Column:
-    """SimHash fingerprint as an ``n_bits``-char '0'/'1' string.
-
-    For each distinct token, its md5 hex supplies one bit per position
-    (nibble ``b // 4``, bit ``3 - b % 4``); each bit votes +1/-1 and the
-    fingerprint takes the sign of the sum (ties -> 0).  A string-of-bits
-    representation keeps the value portable to the DuckDB oracle (no 64-bit
-    unsigned arithmetic differences).
-    """
-    assert n_bits <= 128
-    # Precompute one md5 per distinct token, then reuse it for every bit.
-    hashes = F.transform(F.array_distinct(tokens_col), lambda t: F.md5(t))
-    bit_exprs = []
-    for b in range(n_bits):
-        nibble_idx = b // 4 + 1  # 1-based substring position
-        shift = 3 - b % 4
-        vote = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + (
-                F.shiftright(
-                    F.conv(F.substring(h, nibble_idx, 1), 16, 10).cast("int"),
-                    shift,
-                ).bitwiseAND(F.lit(1))
-                * 2
-                - 1
-            ),
-        )
-        bit_exprs.append(F.when(vote > 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bit_exprs)
-
-
 def simhash_bits_arrow(tokens_col: Column, n_bits: int = 64) -> Column:
-    """Arrow-batched SimHash fingerprint — value-identical to
-    ``simhash_bits`` / the relational vote pipeline, computed map-side.
+    """Arrow-batched SimHash fingerprint, computed map-side.
+
+    For each distinct token, its md5 supplies one bit per position; each
+    bit votes +1/-1 and the fingerprint takes the sign of the sum (ties ->
+    '0'), as an ``n_bits``-char '0'/'1' string that stays portable to the
+    DuckDB oracle.  Value-identical to ``dedup.simhash_fingerprints``'
+    ``relational`` strategy (test_dedup) and to the oracle's
+    ``inventory._simhash_sql_expr``.
 
     Per input row: distinct tokens -> one md5 digest each -> unpack to a
     (tokens x n_bits) bit matrix -> column sums are the votes -> sign

@@ -1917,7 +1917,8 @@ def _minhash_stream_sig_twin_check(documents: DataFrame) -> None:
 
 def _simhash_sql_expr() -> str:
     """Generate the 64-bit simhash expression over `hs` (list of md5 hex of
-    distinct tokens) — one CASE per bit, matching functions/hashing.simhash_bits."""
+    distinct tokens) — one CASE per bit: nibble ``b // 4`` of each md5 votes
+    bit ``3 - b % 4``, matching functions/hashing.simhash_bits_arrow."""
     bits = []
     for b in range(64):
         nib = b // 4 + 1

@@ -146,8 +146,8 @@ def recommended_lsh_compaction_every(
     changes under a caller's feet.  Low read rates push the cadence out
     (the log stays shallow per read anyway at r<1); read-heavy serving
     pulls it toward compacting every batch.  Measured constants for the
-    bench geometry live in ``measurements/r12_lsh_log_depth.json``
-    (``tools/lsh_log_depth.py``)."""
+    bench geometry live in ``measurements/r12_lsh_log_depth.json``,
+    pinned by test_lsh_compaction."""
     import math
 
     if reads_per_batch <= 0 or marginal_resolve_sec <= 0:

@@ -305,7 +305,7 @@ def simhash_fingerprints(
 ) -> DataFrame:
     """(doc_id, simhash): 64-bit sign fingerprint as a '0'/'1' string.
 
-    Three value-identical strategies, fastest first:
+    Two value-identical strategies, fastest first:
 
     - ``arrow`` (default): one Arrow-batched projection per doc
       (functions/hashing.simhash_bits_arrow) — zero shuffle, numpy-
@@ -314,10 +314,10 @@ def simhash_fingerprints(
     - ``relational``: explode distinct tokens -> one md5 per token ->
       per-(doc,bit) vote rows -> hash-agg -> sign bits.  All-codegen but
       a 64x row blowup and two shuffles ahead of banding; kept as the
-      engine-only cross-check (test_dedup asserts arrow == relational).
-    - the nested HOF form (functions/hashing.simhash_bits, 64
-      interpreted aggregate-lambdas per row) computes identical values
-      ~10x slower again; it remains the per-value/oracle reference.
+      engine-side reference (test_dedup asserts arrow == relational).
+
+    The value reference outside the engine is the DuckDB oracle's
+    ``inventory._simhash_sql_expr``.
 
     Empty-token docs keep an all-'0' fingerprint (vote 0 -> '0')."""
     c = canonical_docs(documents)

@@ -663,8 +663,8 @@ def recommended_postings_compaction_every(
     the log-bearing read's resolution premium grows linearly in the
     depth the cadence allows, the fold amortizes over it.  Only the
     measured constants differ; the bench-geometry constants live in
-    ``measurements/r12_postings_log_depth.json``
-    (``tools/postings_log_depth.py``).  Advisory like every
+    ``measurements/r12_postings_log_depth.json``, pinned by
+    test_lexical_store.  Advisory like every
     ``recommended_*`` rule."""
     from vector_search_question_answer_api_spark.operators.ann import (
         recommended_lsh_compaction_every,

@@ -35,6 +35,54 @@ def _stop_hits(toks: Column, lang: str) -> Column:
     return F.size(F.array_intersect(F.array_distinct(toks), F.array(*[F.lit(w) for w in STOPWORDS[lang]])))
 
 
+def _lang_guess(en: Column, es: Column, fr: Column, de: Column) -> Column:
+    """Deterministic argmax over the stopword hits.  Tie order: en > es >
+    fr > de; all-zero -> 'unknown'."""
+    return (
+        F.when((en >= es) & (en >= fr) & (en >= de) & (en > 0), "en")
+        .when((es >= fr) & (es >= de) & (es > 0), "es")
+        .when((fr >= de) & (fr > 0), "fr")
+        .when(de > 0, "de")
+        .otherwise("unknown")
+    )
+
+
+def _bigrams(toks: str) -> Column:
+    """The word-bigram array of a token-array column ("a b" per adjacent
+    pair; empty below two tokens)."""
+    return F.when(
+        F.size(toks) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - 1),
+            lambda i: F.concat_ws(
+                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _top_frac(col: str) -> Column:
+    """Fraction of the array consumed by its most frequent element (0.0
+    when empty): ``array_max`` over ``size(filter(...))`` per distinct
+    element, O(u·n) per row."""
+    n = F.size(col)
+    top = F.array_max(
+        F.transform(
+            F.array_distinct(F.col(col)),
+            lambda d: F.size(F.filter(F.col(col), lambda x: x == d)),
+        )
+    )
+    return F.when(n > 0, top.cast("double") / n).otherwise(0.0)
+
+
+def _uniq_frac(col: str) -> Column:
+    """Distinct-element fraction of the array (0.0 when empty)."""
+    return F.when(
+        F.size(col) > 0,
+        F.size(F.array_distinct(col)).cast("double") / F.size(col),
+    ).otherwise(0.0)
+
+
 def token_stats(documents: DataFrame) -> DataFrame:
     """(doc_id, n_chars, n_tokens, n_uniq_tokens, est_bpe_tokens,
     mean_token_len)."""
@@ -62,13 +110,7 @@ def lang_scores(documents: DataFrame) -> DataFrame:
     proc = TXT.preprocess_text(F.col("text"))
     toks = _toks(proc)
     en, es, fr, de = (_stop_hits(toks, L) for L in ("en", "es", "fr", "de"))
-    guess = (
-        F.when((en >= es) & (en >= fr) & (en >= de) & (en > 0), "en")
-        .when((es >= fr) & (es >= de) & (es > 0), "es")
-        .when((fr >= de) & (fr > 0), "fr")
-        .when(de > 0, "de")
-        .otherwise("unknown")
-    )
+    guess = _lang_guess(en, es, fr, de)
     return documents.select(
         "doc_id",
         en.alias("en_hits"),
@@ -94,43 +136,14 @@ def repetition_scores(documents: DataFrame) -> DataFrame:
     """
     proc = TXT.preprocess_text(F.col("text"))
     base = documents.select("doc_id", _toks(proc).alias("toks"))
-    with_bg = base.select(
-        "doc_id",
-        "toks",
-        F.when(
-            F.size("toks") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - 1),
-                lambda i: F.concat_ws(
-                    " ", F.element_at("toks", i), F.element_at("toks", i + 1)
-                ),
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-        .alias("bg"),
-    )
-
-    def _top_frac(col: str) -> Column:
-        n = F.size(col)
-        top = F.array_max(
-            F.transform(
-                F.array_distinct(F.col(col)),
-                lambda d: F.size(F.filter(F.col(col), lambda x: x == d)),
-            )
-        )
-        return F.when(n > 0, top.cast("double") / n).otherwise(0.0)
-
-    uniq_bg = F.when(
-        F.size("bg") > 0,
-        F.size(F.array_distinct("bg")).cast("double") / F.size("bg"),
-    ).otherwise(0.0)
+    with_bg = base.select("doc_id", "toks", _bigrams("toks").alias("bg"))
     return with_bg.select(
         "doc_id",
         F.size("toks").cast("long").alias("n_tokens"),
         F.size("bg").cast("long").alias("n_bigrams"),
         (F.round(_top_frac("toks"), 6) + F.lit(0.0)).alias("top_token_frac"),
         (F.round(_top_frac("bg"), 6) + F.lit(0.0)).alias("top_bigram_frac"),
-        (F.round(uniq_bg, 6) + F.lit(0.0)).alias("uniq_bigram_frac"),
+        (F.round(_uniq_frac("bg"), 6) + F.lit(0.0)).alias("uniq_bigram_frac"),
     )
 
 
@@ -273,48 +286,14 @@ def text_metrics(documents: DataFrame) -> DataFrame:
         "text",
         F.col("lang").alias("declared_lang"),
         _toks(proc).alias("toks"),
-    ).select(
-        "*",
-        F.when(
-            F.size("toks") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - 1),
-                lambda i: F.concat_ws(
-                    " ", F.element_at("toks", i), F.element_at("toks", i + 1)
-                ),
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-        .alias("bg"),
-    )
+    ).select("*", _bigrams("toks").alias("bg"))
     toks = F.col("toks")
     en, es, fr, de = (_stop_hits(toks, L) for L in ("en", "es", "fr", "de"))
     q = quality_components(toks, stop_hits=en)
     n, mean_len, stop_ratio, uniq_ratio, score = (
         q["n"], q["mean_len"], q["stop_ratio"], q["uniq_ratio"], q["score"],
     )
-    guess = (
-        F.when((en >= es) & (en >= fr) & (en >= de) & (en > 0), "en")
-        .when((es >= fr) & (es >= de) & (es > 0), "es")
-        .when((fr >= de) & (fr > 0), "fr")
-        .when(de > 0, "de")
-        .otherwise("unknown")
-    )
-
-    def _top_frac(col: str) -> Column:
-        sz = F.size(col)
-        top = F.array_max(
-            F.transform(
-                F.array_distinct(F.col(col)),
-                lambda d: F.size(F.filter(F.col(col), lambda x: x == d)),
-            )
-        )
-        return F.when(sz > 0, top.cast("double") / sz).otherwise(0.0)
-
-    uniq_bg = F.when(
-        F.size("bg") > 0,
-        F.size(F.array_distinct("bg")).cast("double") / F.size("bg"),
-    ).otherwise(0.0)
+    guess = _lang_guess(en, es, fr, de)
     return staged.select(
         "doc_id",
         F.length(F.coalesce(F.col("text"), F.lit(""))).alias("n_chars"),
@@ -329,7 +308,7 @@ def text_metrics(documents: DataFrame) -> DataFrame:
         F.size("bg").cast("long").alias("n_bigrams"),
         (F.round(_top_frac("toks"), 6) + F.lit(0.0)).alias("top_token_frac"),
         (F.round(_top_frac("bg"), 6) + F.lit(0.0)).alias("top_bigram_frac"),
-        (F.round(uniq_bg, 6) + F.lit(0.0)).alias("uniq_bigram_frac"),
+        (F.round(_uniq_frac("bg"), 6) + F.lit(0.0)).alias("uniq_bigram_frac"),
         en.alias("en_hits"),
         es.alias("es_hits"),
         fr.alias("fr_hits"),

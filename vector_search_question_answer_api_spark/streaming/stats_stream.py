@@ -465,8 +465,8 @@ def recommended_profile_rebuild_every(
     the fold stores — whose compactions are log-sized rewrites of
     already-computed rows — ``rebuild_profile`` RE-SKETCHES THE WHOLE
     RESOLVED CORPUS, so ``C`` is a corpus pass.  The measured curve
-    (``measurements/r13_profile_rebuild_curve.json``,
-    ``tools/profile_rebuild_curve.py``) shows the two regimes honestly:
+    (``measurements/r13_profile_rebuild_curve.json``, pinned by
+    test_profile_rebuild) shows the two regimes honestly:
     at bench scale (1k-4k docs) ``C`` is JOB-OVERHEAD-dominated — flat
     across a 4x corpus, ~1.1-1.3 s — while ``m`` stays sketch-sized
     (~0.011 s/batch); once real sketch work exceeds overhead, ``C`` goes
