@@ -898,9 +898,10 @@ def _refresh_fns(spark, sf_dir):
     resolution incl. the membership lookup, re-encode of dirty cells,
     manifest swap + housekeeping).  The batch is CELL-LOCAL (1% of the
     corpus drawn from one coarse cell — the localized-update shape where
-    incrementality pays; tools/refresh_curve.py measures the scattered
-    case and the rebuild crossover).  One-time pin: post-refresh serving
-    over the store == serving over a fresh full rebuild."""
+    incrementality pays; the scattered case and the rebuild crossover
+    are recorded in measurements/r9_refresh_curve.json, SCALE.md r9).
+    One-time pin: post-refresh serving over the store == serving over a
+    fresh full rebuild."""
     import tempfile
 
     from pyspark.sql import functions as F

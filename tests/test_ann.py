@@ -257,21 +257,75 @@ def test_ivf_ondisk_layout_prunes_partitions(spark, sf_dir, tmp_path):
         index.unpersist()
 
 
-def test_lsh_signature_arrow_equals_expr(spark, normed):
-    """The Arrow signature kernel must be BIT-identical to the Catalyst HOF
-    form (same left-to-right float64 fold), including at sign boundaries —
-    this is what keeps the DuckDB oracle valid for the arrow default."""
-    from vector_search_question_answer_api_spark.operators.ann import with_lsh_signatures
+def _duckdb_signatures(rows, dim, n_planes, n_tables, center=None):
+    """{id: signatures} computed by DuckDB the way
+    ``inventory._ann_oracle_sql`` computes them — ``list_dot_product(v,
+    plane) >= offset`` over literal +/-1 planes — with the centered
+    offsets from ``_center_offsets`` (zero when uncentered)."""
+    import duckdb
+    import pandas as pd
+
+    from vector_search_question_answer_api_spark.operators.ann import (
+        _center_offsets,
+        hyperplanes,
+    )
+
+    planes = hyperplanes(dim, n_planes, n_tables)
+    offs = (
+        _center_offsets(center, dim, n_planes, n_tables)
+        if center is not None
+        else [0.0] * (n_tables * n_planes)
+    )
+    sig_exprs = []
+    for t in range(n_tables):
+        cases = " || ".join(
+            "CASE WHEN list_dot_product(v, ["
+            + ",".join(f"{float(x):.1f}" for x in planes[t][p])
+            # the offset as a string cast: a bare literal would parse as
+            # DECIMAL and round before the comparison
+            + f"]) >= '{float(offs[t * n_planes + p])!r}'::DOUBLE"
+            + " THEN '1' ELSE '0' END"
+            for p in range(n_planes)
+        )
+        sig_exprs.append(f"concat('t{t}:', {cases})")
+    con = duckdb.connect()
+    try:
+        con.register(
+            "vecs",
+            pd.DataFrame(
+                [(i, [float(x) for x in v]) for i, v in rows], columns=["id", "v"]
+            ),
+        )
+        got = con.sql(
+            f"SELECT id, [{', '.join(sig_exprs)}] FROM vecs"
+        ).fetchall()
+    finally:
+        con.close()
+    return {i: list(sigs) for i, sigs in got}
+
+
+def test_lsh_signature_arrow_equals_duckdb_oracle(spark, normed):
+    """The Arrow signature kernel must be BIT-identical to the DuckDB
+    oracle's ``list_dot_product(v, plane) >= offset`` (same left-to-right
+    float64 fold), including at sign boundaries — uncentered (the
+    ``ann_lsh_topk`` gate's form) and centered on the corpus mean."""
+    from vector_search_question_answer_api_spark.operators.ann import (
+        corpus_center,
+        with_lsh_signatures,
+    )
 
     base = normed.select("vec_id", F.col("nv").alias("v"))
-    arrow = with_lsh_signatures(base, "v", 64, n_planes=3, n_tables=16,
-                                strategy="arrow").select("vec_id", "lsh_sigs")
-    expr = with_lsh_signatures(base, "v", 64, n_planes=3, n_tables=16,
-                               strategy="expr").select("vec_id", "lsh_sigs")
-    diff = arrow.alias("a").join(expr.alias("e"), "vec_id").filter(
-        F.col("a.lsh_sigs") != F.col("e.lsh_sigs")
-    )
-    assert diff.count() == 0
+    rows = [(r["vec_id"], r["v"]) for r in base.collect()]
+    for center in (None, corpus_center(base, "v")):
+        got = {
+            r["vec_id"]: list(r["lsh_sigs"])
+            for r in with_lsh_signatures(
+                base, "v", 64, n_planes=3, n_tables=16, center=center
+            ).collect()
+        }
+        ref = _duckdb_signatures(rows, 64, 3, 16, center)
+        assert len(got) == len(rows) > 0
+        assert got == ref, "centered" if center else "uncentered"
 
 
 def test_numpy_hnsw_insertion_order_independent():
@@ -767,8 +821,7 @@ def test_lsh_centering_splits_clustered_corpus(spark):
     (none of them pass through it), the centered planes split it.  Also
     pins: (a) a query identical to a corpus vector shares every signature
     under ANY center — the transform is the same on both sides; (b) the
-    arrow kernel and the pure-Catalyst expr form stay bit-identical with
-    offsets."""
+    arrow kernel stays bit-identical to the DuckDB oracle with offsets."""
     import numpy as np
 
     from vector_search_question_answer_api_spark.operators.ann import (
@@ -806,11 +859,9 @@ def test_lsh_centering_splits_clustered_corpus(spark):
     )
     assert a.join(b, "id").filter(F.col("a") != F.col("b")).count() == 0
 
-    # (b) arrow == expr bit-identity with offsets
-    ex = with_lsh_signatures(
-        df, "v", 16, 8, 4, strategy="expr", center=center
-    ).select("id", F.col("lsh_sigs").alias("e"))
-    assert a.join(ex, "id").filter(F.col("a") != F.col("e")).count() == 0
+    # (b) arrow == DuckDB oracle bit-identity with offsets
+    got = {r["id"]: list(r["a"]) for r in a.collect()}
+    assert got == _duckdb_signatures(enumerate(pts), 16, 8, 4, center)
     df.unpersist()
 
 

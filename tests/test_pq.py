@@ -495,8 +495,8 @@ def test_default_args_recall_realistic_384(spark):
     """A 384-dim user taking DEFAULTS (train_pq_codebooks with no m) must
     land in the measured >=0.9 recall regime at the sizing rule's refine
     depth — the r9 fixture study showed the flat m=8 default plateaued at
-    0.84 no matter the refine (SCALE.md r9).  Protocol mirrors
-    tools/refine_curve.py --fixture (k=5, production monitor)."""
+    0.84 no matter the refine (SCALE.md r9).  Protocol mirrors the r9
+    refine-curve fixture study (k=5, production monitor)."""
     import os
 
     from vector_search_question_answer_api_spark.operators.pq import (

@@ -198,3 +198,27 @@ def test_text_metrics_equals_constituent_functions(spark):
         assert set(g) == set(w), (set(g) ^ set(w))
         for col, val in w.items():
             assert g[col] == val, (doc_id, col, g[col], val)
+
+
+def test_top_frac_equals_counter_reference(spark):
+    """The sort + run-length mode count equals a ``Counter`` over the same
+    array — ties, empty and one-element arrays included."""
+    import random
+    from collections import Counter
+
+    from vector_search_question_answer_api_spark.operators.text_analysis import (
+        _top_frac,
+    )
+
+    rng = random.Random(11)
+    arrays = [[], ["a"], ["b", "a"], ["a", "b", "a", "b"], ["z", "y", "z"]] + [
+        [rng.choice("abcde") for _ in range(rng.randint(0, 30))] for _ in range(300)
+    ]
+    df = spark.createDataFrame(list(enumerate(arrays)), "id long, xs array<string>")
+    got = {
+        r["id"]: r["f"]
+        for r in df.select("id", _top_frac("xs").alias("f")).collect()
+    }
+    for i, xs in enumerate(arrays):
+        want = max(Counter(xs).values()) / len(xs) if xs else 0.0
+        assert got[i] == want, (xs, got[i], want)

@@ -4,7 +4,7 @@ plans/<tag>/<query>_<suffix>.txt — the optimization-round evidence files
 (the judge checks plan claims against these).
 
 Usage: python tools/dump_plans.py <tag> <suffix> [sf_dir] [query ...]
-e.g.   python tools/dump_plans.py r15 before /root/testdata/sf0.1
+e.g.   python tools/dump_plans.py r16 before /root/testdata/sf0.1
 """
 
 from __future__ import annotations

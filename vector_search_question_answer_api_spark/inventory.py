@@ -737,7 +737,7 @@ def _filtered_knn_twin_check(normed: DataFrame) -> None:
       ranked corpus), must also EQUAL the filtered exact relation — a
       geometry-free pin of the id-semi-join + re-cut plumbing; recall
       under real (non-exhaustive) oversampling is measured in
-      tests/test_search.py and tools/filtered_curve.py, not here."""
+      tests/test_search.py and tabled in SCALE.md r7, not here."""
     from vector_search_question_answer_api_spark.operators.search import (
         filtered_knn,
         knn_exact_expr,

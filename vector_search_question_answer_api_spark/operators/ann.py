@@ -182,72 +182,23 @@ def hyperplanes(
     return tuple(out)
 
 
-def _sig_expr(vec: Column, table_planes, table_offsets=None) -> Column:
-    """The n_planes-bit signature of ``vec`` for one table, as a string
-    column — pure Catalyst (zip_with/aggregate), no UDF.
-
-    The table's planes ride as ONE nested-array literal and the bits are a
-    ``transform`` over it, keeping the expression tree O(1) in
-    n_planes x dim (the per-plane unrolled form cost seconds of
-    analyzer/codegen per query; values are bit-identical — same
-    left-to-right float64 summation).
-
-    ``table_offsets`` (optional, one float per plane) turns the bit into
-    ``sign(p.v - p.mu)`` — hyperplanes through a data centroid instead of
-    the origin (see :func:`with_lsh_signatures` ``center``)."""
-    planes_lit = V.nested_array_lit(table_planes)
-    v = vec.cast("array<double>")
-    if table_offsets is None:
-        bits = F.transform(
-            planes_lit,
-            lambda plane: F.when(
-                F.aggregate(
-                    F.zip_with(v, plane, lambda x, h: x * h),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                >= 0,
-                F.lit("1"),
-            ).otherwise(F.lit("0")),
-        )
-    else:
-        offs_lit = F.array(*[F.lit(float(o)) for o in table_offsets])
-        pairs = F.zip_with(
-            planes_lit, offs_lit, lambda p, o: F.struct(p.alias("p"), o.alias("o"))
-        )
-        bits = F.transform(
-            pairs,
-            lambda po: F.when(
-                F.aggregate(
-                    F.zip_with(v, po["p"], lambda x, h: x * h),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                >= po["o"],
-                F.lit("1"),
-            ).otherwise(F.lit("0")),
-        )
-    return F.array_join(bits, "")
-
-
 def _signatures_arrow(
     vec_col: Column, dim: int, n_planes: int, n_tables: int, center=None
 ) -> Column:
-    """Arrow-batched twin of the per-table ``_sig_expr`` HOF — all
-    n_tables x n_planes signature bits in one vectorized pass.
+    """All n_tables x n_planes signature bits in one Arrow-batched pass.
 
-    Bit-identity contract: the HOF computes each dot as
-    ``(((0.0 + x0*h0) + x1*h1) + ...)`` in float64.  The kernel reproduces
-    that EXACT addition order — one accumulate step per component ``j``,
-    vectorized across (rows x planes) — and the products themselves are
-    exact (h is +/-1, float->double widening is exact), so every signature
-    equals the HOF/oracle form bit-for-bit even when a dot sits at the
-    sign boundary.  tests/test_ann.py pins arrow == expr on real vectors.
+    Bit-identity contract: the reference is the DuckDB oracle
+    (``inventory._ann_oracle_sql``: ``list_dot_product(v, plane) >=
+    offset``), which folds each dot as ``(((0.0 + x0*h0) + x1*h1) + ...)``
+    in float64.  The kernel reproduces that EXACT addition order — one
+    accumulate step per component ``j``, vectorized across (rows x
+    planes) — and the products themselves are exact (h is +/-1,
+    float->double widening is exact), so every signature equals the
+    oracle's bit-for-bit even when a dot sits at the sign boundary.
+    tests/test_ann.py pins kernel == DuckDB, uncentered and centered.
 
-    Why it's the default: the HOF form is interpreted per lambda step —
-    n_tables*n_planes*dim steps/row (~10 ms/vector at 16x3x64) and it
-    throttled the whole ANN tier; the kernel is ~dim numpy axpy ops per
-    BATCH, constant per-row Python cost.
+    The kernel is ~dim numpy axpy ops per BATCH, constant per-row Python
+    cost (a per-lambda-step Catalyst form ran ~10 ms/vector at 16x3x64).
     """
     planes = hyperplanes(dim, n_planes, n_tables)
     import numpy as np
@@ -258,8 +209,8 @@ def _signatures_arrow(
         for p in range(n_planes):
             H[:, t * n_planes + p] = planes[t][p]
     # centered planes: bit = sign(p.v - p.mu); offsets from the shared
-    # helper (same left-to-right fold as the HOF dot) so the expr twin
-    # stays bit-identical at the boundary
+    # helper (same left-to-right fold as the dot) so the kernel stays
+    # bit-identical to the oracle at the boundary
     if center is not None:
         offsets = _center_offsets(center, dim, n_planes, n_tables)
     else:
@@ -287,7 +238,7 @@ def _signatures_arrow(
                     f"for dim={dim}"
                 )
             acc = np.zeros((M.shape[0], H.shape[1]), dtype=np.float64)
-            for j in range(dim):  # left-to-right, matching the HOF fold
+            for j in range(dim):  # left-to-right, matching the oracle fold
                 acc += M[:, j : j + 1] * H[j]
             bits = np.where(acc >= offsets, "1", "0")
         it = iter(range(len(rows)))
@@ -353,8 +304,9 @@ def corpus_center(
 
 def _center_offsets(center, dim: int, n_planes: int, n_tables: int):
     """offsets[t*n_planes+p] = plane . center, folded left-to-right in
-    float64 exactly like the signature dot — shared by both kernels so
-    arrow and expr stay bit-identical at the sign boundary."""
+    float64 exactly like the signature dot — the thresholds of both the
+    Arrow kernel and its DuckDB reference (``list_dot_product(v, plane)
+    >= offset``), so the two stay bit-identical at the sign boundary."""
     import numpy as np
 
     planes = hyperplanes(dim, n_planes, n_tables)
@@ -376,15 +328,14 @@ def with_lsh_signatures(
     n_planes: int = DEFAULT_N_PLANES,
     n_tables: int = DEFAULT_N_TABLES,
     out_col: str = "lsh_sigs",
-    strategy: str = "arrow",
     center=None,
 ) -> DataFrame:
     """Append ``out_col``: array of n_tables signature strings, each
     prefixed with its table id ("t0:010110...").
 
-    ``strategy="arrow"`` (default) computes all signatures in one
-    Arrow-batched kernel; ``"expr"`` is the pure-Catalyst HOF form kept as
-    the value reference (bit-identical — see ``_signatures_arrow``).
+    All signatures come from one Arrow-batched kernel; the DuckDB oracle
+    (``inventory._ann_oracle_sql``) is its value reference (bit-identical
+    — see ``_signatures_arrow``).
 
     ``center`` (optional, ``dim`` floats — see :func:`corpus_center`)
     shifts every hyperplane through that point: ``bit = sign(p.(v - mu))``.
@@ -402,29 +353,10 @@ def with_lsh_signatures(
         raise ValueError(
             f"center has {len(center)} components for dim={dim}"
         )
-    if strategy == "arrow":
-        return df.withColumn(
-            out_col,
-            _signatures_arrow(F.col(vec_col), dim, n_planes, n_tables, center),
-        )
-    planes = hyperplanes(dim, n_planes, n_tables)
-    offs = (
-        _center_offsets(center, dim, n_planes, n_tables)
-        if center is not None
-        else None
+    return df.withColumn(
+        out_col,
+        _signatures_arrow(F.col(vec_col), dim, n_planes, n_tables, center),
     )
-    sigs = [
-        F.concat(
-            F.lit(f"t{t}:"),
-            _sig_expr(
-                F.col(vec_col),
-                planes[t],
-                None if offs is None else offs[t * n_planes : (t + 1) * n_planes],
-            ),
-        )
-        for t in range(n_tables)
-    ]
-    return df.withColumn(out_col, F.array(*sigs))
 
 
 # The SRP family identity: hyperplane component (t,p,j) is +/-1 by md5

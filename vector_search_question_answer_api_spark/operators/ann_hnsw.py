@@ -729,7 +729,10 @@ def refresh_celled_hnsw_index(
     # cells — the dirty set isn't known yet — which only widens the
     # driver dict by n_cells rows; classification reads the same values
     # it read from the r13 two-job form ('c in stats' still means "the
-    # store holds blobs for this cell").
+    # store holds blobs for this cell").  The cost: a micro-batch with
+    # nothing dirty still pays that column-pruned stats scan of every
+    # cell — the accepted trade for one job fewer on every batch that
+    # does refresh.
     _nolong = F.lit(None).cast("long")
     census = census.select(
         "doc_id", "cell", "_k", "_chord",
@@ -1060,8 +1063,8 @@ def recommended_insert_efc(
 ) -> int:
     """Maintenance-time insert-beam width sized from measurement (r14 —
     VERDICT r13 next #6; the measured curve is
-    ``measurements/r14_insert_efc_curve.json`` via
-    ``tools/insert_efc_curve.py``, summarized in SCALE.md).
+    ``measurements/r14_insert_efc_curve.json``, summarized in SCALE.md
+    r14).
 
     The reference applies its BUILD constant ef_construction=200
     (services/index_service.py:91) at insert time too; the curve shows

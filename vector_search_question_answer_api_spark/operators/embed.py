@@ -39,9 +39,10 @@ def _token_seed(token: str) -> int:
 
 
 class _TokenVectorCache:
-    """Per-worker memo of token -> Gaussian vector (lazy singleton pattern —
-    the deterministic analog of holding one sentence-transformer per Python
-    worker)."""
+    """Memo of token -> Gaussian vector.  ``hashing_embed_numpy`` builds a
+    fresh one per call, i.e. once per Arrow batch on the executors, so it
+    dedups tokens within a batch only — not a per-worker memo that
+    survives across batches."""
 
     def __init__(self, dim: int):
         self.dim = dim

@@ -24,8 +24,8 @@ Faithfulness and divergences (documented, deliberate):
   it is strictly closer to the query than to every already-selected
   neighbor (r6 — the earlier keep-M-closest simplification plateaued at
   recall ~0.94 on clustered geometry at n=8k; the heuristic restores
-  the cross-cluster edges, measured curves in SCALE.md / tools/
-  ef_curve.py); both insertion and shrink-to-Mmax re-select with it;
+  the cross-cluster edges, measured ef curves in SCALE.md r6/r7);
+  both insertion and shrink-to-Mmax re-select with it;
 - vectors are expected L2-normalized; distance is cosine distance
   ``1 - dot`` exactly as the rest of the engine computes it;
 - deletion is hnswlib-style MARKING (r13): ``mark_deleted`` tombstones a

@@ -233,17 +233,17 @@ def filtered_knn(
       callable (queries, k) -> DataFrame[(query_id, doc_id, distance)]
       wrapping the tier of choice (celled graphs, IVF, PQ...).  Recall
       degrades with predicate selectivity s; MEASURED rule
-      (tools/filtered_curve.py, SCALE.md r7): oversample ≈ 2/s for a
-      0.95 target (the 1/s back-of-envelope leaves half the queries
-      short), recall is capped by the base tier's own unfiltered
-      recall, and below s ≈ 0.1 the required oversample climbs into
-      that ceiling — use for BROAD predicates (s >= 0.25) where
-      re-scanning the corpus per predicate would dominate.  The join
-      back to the index applies the predicate to ids only (semi-join
-      sized).  CAVEAT (tested): if the predicate is ANTI-CORRELATED with
-      the geometry (whole clusters/cells fail it), the matching rows sit
-      outside the probed neighborhoods and no reasonable oversample
-      recovers recall — that regime belongs to "exact".
+      (SCALE.md r7 selectivity table, pinned in tests/test_search.py):
+      oversample ≈ 2/s for a 0.95 target (the 1/s back-of-envelope
+      leaves half the queries short), recall is capped by the base
+      tier's own unfiltered recall, and below s ≈ 0.1 the required
+      oversample climbs into that ceiling — use for BROAD predicates
+      (s >= 0.25) where re-scanning the corpus per predicate would
+      dominate.  The join back to the index applies the predicate to
+      ids only (semi-join sized).  CAVEAT (tested): if the predicate is
+      ANTI-CORRELATED with the geometry (whole clusters/cells fail it),
+      the matching rows sit outside the probed neighborhoods and no
+      reasonable oversample recovers recall — that regime belongs to "exact".
 
     Graph-native filtered walks (predicate evaluated inside the beam) are
     deliberately NOT implemented: under selective filters they degrade to

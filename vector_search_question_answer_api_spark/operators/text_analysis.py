@@ -63,15 +63,26 @@ def _bigrams(toks: str) -> Column:
 
 def _top_frac(col: str) -> Column:
     """Fraction of the array consumed by its most frequent element (0.0
-    when empty): ``array_max`` over ``size(filter(...))`` per distinct
-    element, O(u·n) per row."""
-    n = F.size(col)
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(F.col(col)),
-            lambda d: F.size(F.filter(F.col(col), lambda x: x == d)),
+    when empty): ``array_sort`` then one run-length fold carrying
+    (prev, run, best), O(n log n) per row.  Elements are non-null (token
+    and bigram arrays never hold nulls)."""
+    s = F.array_sort(F.col(col))
+
+    def step(acc: Column, x: Column) -> Column:
+        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(1)
+        return F.struct(
+            x.alias("prev"),
+            run.alias("run"),
+            F.greatest(acc["best"], run).alias("best"),
         )
+
+    # prev only types the struct: with run at 0, the first step opens a
+    # run of 1 whatever prev holds
+    init = F.struct(
+        F.get(s, 0).alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
     )
+    top = F.aggregate(s, init, step, lambda acc: acc["best"])
+    n = F.size(col)
     return F.when(n > 0, top.cast("double") / n).otherwise(0.0)
 
 
@@ -129,10 +140,11 @@ def repetition_scores(documents: DataFrame) -> DataFrame:
     frequent token / word-bigram, and bigram diversity.  High top-fractions
     flag boilerplate and degenerate generations.
 
-    Pure HOFs: the per-row mode count is ``array_max`` over
-    ``size(filter(...))`` per distinct gram — O(u·n) per document, map-only,
-    no shuffle, replicated exactly by the DuckDB oracle.  Only the maximum
-    COUNT is emitted (never which gram), so ties cost no determinism.
+    Pure HOFs: the per-row mode count is a run-length fold over the
+    sorted grams — O(n log n) per document, map-only, no shuffle, the
+    same integer counts as the DuckDB oracle's per-distinct count.  Only
+    the maximum COUNT is emitted (never which gram), so ties cost no
+    determinism.
     """
     proc = TXT.preprocess_text(F.col("text"))
     base = documents.select("doc_id", _toks(proc).alias("toks"))
