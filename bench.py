@@ -236,11 +236,11 @@ def _r4_tier_fns(spark, sf_dir):
 
 
 def _hnsw_fn(spark, sf_dir):
-    """r5 bench entry: top-k against partitioned HNSW graphs (numpy
-    backend unless hnswlib is importable).  Graphs are built and cached
-    once outside the timed loop (index-build work, amortized in
-    production exactly like the ivfpq codes table); the timed number is
-    the broadcast-queries graph walk + global candidate merge."""
+    """r5 bench entry: top-k against partitioned HNSW graphs
+    (``NumpyHNSW``).  Graphs are built and cached once outside the timed
+    loop (index-build work, amortized in production exactly like the
+    ivfpq codes table); the timed number is the broadcast-queries graph
+    walk + global candidate merge."""
     from pyspark.sql import functions as F
 
     from vector_search_question_answer_api_spark.functions import vector as V

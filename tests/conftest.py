@@ -70,6 +70,7 @@ _SLOW_TESTS = {
     "test_hnsw_incremental.py::test_same_batch_upsert_and_delete_serves_resolved_state",  # 17.0s
     "test_hnsw_incremental.py::test_upsert_soak_serving_matches_rebuild_and_is_incremental",  # 28.1s
     "test_ingest_stream.py::test_ann_serving_equals_full_rebuild",  # 9.1s
+    "test_ingest_stream.py::test_fanout_stage_failure_leaves_no_commit_marker",  # 8.6s
     "test_ingest_stream.py::test_graph_radii_flag_seeds_existing_store",  # 9.5s
     "test_ingest_stream.py::test_maintained_lsh_signatures_equal_fresh_rebuild",  # 5.0s
     "test_inventory_parity.py::test_query_parity[ann_ivf_topk]",  # 16.6s

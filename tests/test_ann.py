@@ -176,26 +176,18 @@ def test_ivf_kmeans_recall_and_pruning_clustered(spark, clustered):
 
 
 def test_hnsw_tier_gated_or_correct(spark, normed):
-    """Tier B on the numpy backend (always available since r5): graphs are
+    """Tier B (``NumpyHNSW``, always available since r5): graphs are
     built per partition, queried with the reference's ef=50, and globally
     merged; recall vs exact must be >=0.9 at k=1 AND k=5 on the driver
-    corpus.  The hnswlib backend, when importable, must meet the same bar
-    (same assertion body runs for it)."""
+    corpus."""
     from vector_search_question_answer_api_spark.operators import ann_hnsw
 
     q, idx = _qi(normed, 10)
-    backends = ["numpy"] + (["hnswlib"] if ann_hnsw.HNSW_AVAILABLE else [])
-    for backend in backends:
-        graphs = ann_hnsw.build_partitioned_hnsw(idx, dim=64, backend=backend)
-        for k in (1, 5):
-            got = _topk_sets(ann_hnsw.hnsw_topk(spark, graphs, q, k=k))
-            exact = _topk_sets(knn_exact_expr(q, idx, k=k))
-            assert _recall(exact, got) >= 0.9, (backend, k)
-    if not ann_hnsw.HNSW_AVAILABLE:
-        import pytest as _pytest
-
-        with _pytest.raises(NotImplementedError):
-            ann_hnsw.build_partitioned_hnsw(idx, dim=64, backend="hnswlib")
+    graphs = ann_hnsw.build_partitioned_hnsw(idx, dim=64)
+    for k in (1, 5):
+        got = _topk_sets(ann_hnsw.hnsw_topk(spark, graphs, q, k=k))
+        exact = _topk_sets(knn_exact_expr(q, idx, k=k))
+        assert _recall(exact, got) >= 0.9, k
 
 
 def test_ivf_ondisk_layout_prunes_partitions(spark, sf_dir, tmp_path):
@@ -393,7 +385,7 @@ def test_celled_hnsw_exhaustive_probe_equals_ivf(spark, clustered):
     q, idx = _qi(clustered, 10)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     )
     got = {
         (r["query_id"], r["rank"]): (r["doc_id"], r["distance"])
@@ -424,7 +416,7 @@ def test_celled_hnsw_recall_at_working_ef(spark, clustered):
     q, idx = _qi(clustered, 25)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     )
     got = _topk_sets(
         ann_hnsw.celled_hnsw_topk(
@@ -503,7 +495,7 @@ def test_celled_hnsw_cogrouped_equals_collected(spark, clustered):
     q, idx = _qi(clustered, 15)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     ).cache()
     kwargs = dict(centroids=cents, k=5, ef=50, dim=64, n_cells=8, nprobe=4)
     got = {
@@ -530,7 +522,7 @@ def test_hnsw_chunked_equals_monolithic(spark, clustered):
 
     q, idx = _qi(clustered, 23)  # 23 rows -> chunks of 10,10,3
     graphs = ann_hnsw.build_partitioned_hnsw(
-        idx.repartition(4, "doc_id"), dim=64, backend="numpy"
+        idx.repartition(4, "doc_id"), dim=64
     ).cache()
     res = ann_hnsw.hnsw_topk_chunked(spark, graphs, q, k=5, ef=60, chunk_rows=10)
     got = {
@@ -562,7 +554,7 @@ def test_hnsw_chunked_explicit_spill_dir_sweeps_prior_calls(
 
     q, idx = _qi(clustered, 12)
     graphs = ann_hnsw.build_partitioned_hnsw(
-        idx.repartition(2, "doc_id"), dim=64, backend="numpy"
+        idx.repartition(2, "doc_id"), dim=64
     ).cache()
     spill = str(tmp_path / "spill")
     r1 = ann_hnsw.hnsw_topk_chunked(
@@ -599,7 +591,7 @@ def test_celled_hnsw_index_roundtrip_and_partition_pruning(
     q, idx = _qi(clustered, 10)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     )
     path = str(tmp_path / "hnsw_cells")
     ann_hnsw.write_celled_hnsw_index(graphs, path)
@@ -676,10 +668,10 @@ def test_celled_hnsw_salted_equals_unsalted_at_exhaustive_ef(spark, clustered):
     q, idx = _qi(clustered, 10)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     plain = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     ).cache()
     salted = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy",
+        idx, centroids=cents, dim=64, n_cells=8,
         cell_salts=4,
     ).cache()
     assert salted.count() > plain.count()
@@ -708,7 +700,7 @@ def test_celled_hnsw_salted_recall_at_working_ef(spark, clustered):
     q, idx = _qi(clustered, 25)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
     salted = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy",
+        idx, centroids=cents, dim=64, n_cells=8,
         cell_salts=4,
     )
     got = _topk_sets(
@@ -1128,7 +1120,7 @@ def test_pruned_celled_hnsw_equals_unpruned(spark, clustered):
         centroid_grid(64, 8),
     ):
         graphs = ann_hnsw.build_celled_hnsw(
-            idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+            idx, centroids=cents, dim=64, n_cells=8
         ).persist()
         radii = ann_hnsw.cell_radii(idx, centroids=cents, n_cells=8)
         assert len(radii) == 8 and all(r >= 0.0 for r in radii)
@@ -1153,7 +1145,7 @@ def test_pruned_celled_hnsw_equals_unpruned(spark, clustered):
     # phase-2 probes
     cents = train_centroids(idx, n_cells=8, n_iters=4)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     ).persist()
     radii = ann_hnsw.cell_radii(idx, centroids=cents, n_cells=8)
     routed1 = q.withColumn(
@@ -1197,7 +1189,7 @@ def test_cell_radii_sidecar_roundtrip_serves_pruned(spark, clustered, tmp_path):
     )
     cents = train_centroids(idx, n_cells=8, n_iters=3)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy"
+        idx, centroids=cents, dim=64, n_cells=8
     ).persist()
     radii = ann_hnsw.cell_radii(idx, centroids=cents, n_cells=8)
     path = str(tmp_path / "graph_store")
@@ -1255,7 +1247,7 @@ def test_pruned_equals_unpruned_on_salted_layout(spark, clustered):
     )
     cents = train_centroids(idx, n_cells=8, n_iters=4)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8, backend="numpy",
+        idx, centroids=cents, dim=64, n_cells=8,
         cell_salts=3,
     ).persist()
     # really salted: at least one cell holds more than one graph row

@@ -268,7 +268,7 @@ def test_celled_hnsw_refresh_matches_full_rebuild(spark, corpus, tmp_path):
     cents = centroid_grid(DIM, N_CELLS)
     path = str(tmp_path / "graphs")
     graphs = ann_hnsw.build_celled_hnsw(
-        corpus, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+        corpus, centroids=cents, dim=DIM, n_cells=N_CELLS
     )
     ann_hnsw.write_celled_hnsw_index_managed(graphs, path)
     before = _part_files(path)
@@ -279,7 +279,7 @@ def test_celled_hnsw_refresh_matches_full_rebuild(spark, corpus, tmp_path):
     )
     dirty = ann_hnsw.refresh_celled_hnsw_index(
         spark, path, v1, delta, prev_delta=prev_delta, centroids=cents,
-        dim=DIM, n_cells=N_CELLS, backend="numpy",
+        dim=DIM, n_cells=N_CELLS,
     )
     assert cell_old in dirty and cell_new in dirty
     after = _part_files(path)
@@ -308,7 +308,7 @@ def test_celled_hnsw_refresh_matches_full_rebuild(spark, corpus, tmp_path):
     refreshed = rows(ann_hnsw.read_celled_hnsw_index(spark, path))
     full = rows(
         ann_hnsw.build_celled_hnsw(
-            v1, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+            v1, centroids=cents, dim=DIM, n_cells=N_CELLS
         )
     )
     assert refreshed == full and refreshed
@@ -336,7 +336,7 @@ def test_managed_write_crash_before_graphs_leaves_no_manifest(
     cents = centroid_grid(DIM, N_CELLS)
     path = str(tmp_path / "graphs")
     graphs = ann_hnsw.build_celled_hnsw(
-        corpus, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+        corpus, centroids=cents, dim=DIM, n_cells=N_CELLS
     )
     ids = corpus.select(
         "doc_id", assign_cell(F.col("norm_embedding"), cents).alias("cell")
@@ -380,7 +380,6 @@ def test_graph_sidecar_makes_cell_moves_replay_safe(spark, corpus, tmp_path):
     ann_hnsw.write_celled_hnsw_index_managed(
         ann_hnsw.build_celled_hnsw(
             corpus, centroids=cents, dim=DIM, n_cells=N_CELLS,
-            backend="numpy",
         ),
         path,
         ids=corpus.select(
@@ -396,7 +395,7 @@ def test_graph_sidecar_makes_cell_moves_replay_safe(spark, corpus, tmp_path):
         # is what the store itself holds
         return ann_hnsw.refresh_celled_hnsw_index(
             spark, path, v1, delta, centroids=cents, dim=DIM,
-            n_cells=N_CELLS, backend="numpy",
+            n_cells=N_CELLS,
         )
 
     dirty = refresh()
@@ -418,7 +417,7 @@ def test_graph_sidecar_makes_cell_moves_replay_safe(spark, corpus, tmp_path):
 
     full = rows(
         ann_hnsw.build_celled_hnsw(
-            v1, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+            v1, centroids=cents, dim=DIM, n_cells=N_CELLS
         )
     )
     assert rows(ann_hnsw.read_celled_hnsw_index(spark, path)) == full
@@ -497,7 +496,7 @@ def test_streaming_upsert_refreshes_only_dirty_cells(spark, tmp_path):
                               n_cells=N_CELLS)
     ann_hnsw.write_celled_hnsw_index_managed(
         ann_hnsw.build_celled_hnsw(idx0, centroids=cents, dim=DIM,
-                                   n_cells=N_CELLS, backend="numpy"),
+                                   n_cells=N_CELLS),
         graphs,
     )
     codes_before, graphs_before = _part_files(codes), _part_files(graphs)
@@ -519,7 +518,6 @@ def test_streaming_upsert_refreshes_only_dirty_cells(spark, tmp_path):
         index_stream(stream), log_path, checkpoint=f"{root}/ckpt",
         codebooks=cbs, codes_path=codes, graphs_path=graphs,
         centroids=cents, dim=DIM, n_cells=N_CELLS, trigger_once=True,
-        backend="numpy",
     )
     assert q.awaitTermination(180), "maintenance stream did not finish"
 
@@ -575,7 +573,7 @@ def test_streaming_upsert_refreshes_only_dirty_cells(spark, tmp_path):
 
     refreshed = rows(ann_hnsw.read_celled_hnsw_index(spark, graphs))
     full = rows(ann_hnsw.build_celled_hnsw(fin, centroids=cents, dim=DIM,
-                                           n_cells=N_CELLS, backend="numpy"))
+                                           n_cells=N_CELLS))
     assert refreshed == full and refreshed
     idx0.unpersist()
     fin.unpersist()
@@ -793,7 +791,7 @@ def test_refresh_maintains_radii_sidecar(spark, cl_corpus, tmp_path):
     corpus, cents = cl_corpus
     path = str(tmp_path / "graphs")
     graphs = ann_hnsw.build_celled_hnsw(
-        corpus, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+        corpus, centroids=cents, dim=DIM, n_cells=N_CELLS
     )
     from vector_search_question_answer_api_spark.operators.ivf import (
         assign_cell,
@@ -810,7 +808,7 @@ def test_refresh_maintains_radii_sidecar(spark, cl_corpus, tmp_path):
     v1, delta, cell, old_r = _far_member_upsert(spark, corpus, cents)
     ann_hnsw.refresh_celled_hnsw_index(
         spark, path, v1, delta, centroids=cents, dim=DIM,
-        n_cells=N_CELLS, backend="numpy",
+        n_cells=N_CELLS,
     )
     fresh = ann_hnsw.cell_radii(v1, centroids=cents, dim=DIM)
     stored = ann_hnsw.read_cell_radii(path)
@@ -859,7 +857,7 @@ def test_refresh_radii_widen_publish_tighten_crash_window(
     corpus, cents = cl_corpus
     path = str(tmp_path / "graphs")
     graphs = ann_hnsw.build_celled_hnsw(
-        corpus, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+        corpus, centroids=cents, dim=DIM, n_cells=N_CELLS
     )
     ids = corpus.select(
         "doc_id", assign_cell(F.col("norm_embedding"), cents).alias("cell")
@@ -876,7 +874,7 @@ def test_refresh_radii_widen_publish_tighten_crash_window(
     with _pytest.raises(RuntimeError, match="crash before publish"):
         ann_hnsw.refresh_celled_hnsw_index(
             spark, path, v1, delta, centroids=cents, dim=DIM,
-            n_cells=N_CELLS, backend="numpy", _pre_publish_hook=boom,
+            n_cells=N_CELLS, _pre_publish_hook=boom,
         )
     fresh = ann_hnsw.cell_radii(v1, centroids=cents, dim=DIM)
     widened = ann_hnsw.read_cell_radii(path)
@@ -907,7 +905,7 @@ def test_refresh_radii_widen_publish_tighten_crash_window(
     # the replay (same batch, no crash) converges the sidecar to exact
     ann_hnsw.refresh_celled_hnsw_index(
         spark, path, v1, delta, centroids=cents, dim=DIM,
-        n_cells=N_CELLS, backend="numpy",
+        n_cells=N_CELLS,
     )
     stored = ann_hnsw.read_cell_radii(path)
     assert all(abs(a - b) < 1e-12 for a, b in zip(stored, fresh))

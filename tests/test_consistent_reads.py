@@ -727,7 +727,7 @@ def test_managed_graph_store_epoch_exact_serve_and_below_raise(
     rebuilt = _graph_rel(
         spark,
         ann_hnsw.build_celled_hnsw(
-            idx, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+            idx, centroids=cents, dim=DIM, n_cells=N_CELLS
         ),
         q, cents, n,
     )
@@ -867,7 +867,7 @@ def test_hybrid_graph_and_ivfpq_tiers_serve_committed_epoch(
         q.select("query_id", "query_text"), k=POOL, up_to_batch=e,
     )
     oneshot_graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+        idx, centroids=cents, dim=DIM, n_cells=N_CELLS
     )
     dense_graph = ann_hnsw.celled_hnsw_topk_cogrouped(
         oneshot_graphs, q.select("query_id", "qvec"), centroids=cents,
@@ -925,7 +925,7 @@ def test_inflight_managed_refresh_raises_at_committed_epoch(
     delta = idx.limit(3).select("doc_id", "norm_embedding")
     ann_hnsw.refresh_celled_hnsw_index(
         spark, IG.corpus_graphs_path(root2), idx, delta,
-        centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy",
+        centroids=cents, dim=DIM, n_cells=N_CELLS,
         batch_id=e + 1,
     )
     assert IG.corpus_committed_epoch(root2) == e  # marker never written
@@ -958,7 +958,7 @@ def test_unstamped_store_refuses_epoch_bounds(spark, tmp_path):
     )
     path = str(tmp_path / "graphs")
     graphs = ann_hnsw.build_celled_hnsw(
-        corpus, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+        corpus, centroids=cents, dim=DIM, n_cells=N_CELLS
     )
     # no batch_id at init -> untracked
     ann_hnsw.write_celled_hnsw_index_managed(graphs, path)
@@ -982,7 +982,7 @@ def test_unstamped_store_refuses_epoch_bounds(spark, tmp_path):
     delta = corpus.limit(2).select("doc_id", "norm_embedding")
     ann_hnsw.refresh_celled_hnsw_index(
         spark, path2, corpus, delta, centroids=cents, dim=DIM,
-        n_cells=N_CELLS, backend="numpy",
+        n_cells=N_CELLS,
     )
     with pytest.raises(ValueError, match="not\\s+epoch-stamped"):
         ann_hnsw.read_celled_hnsw_index(spark, path2, up_to_batch=0)
@@ -1096,7 +1096,6 @@ def test_managed_tiers_serve_retained_historical_epoch_exactly(
             spark,
             ann_hnsw.build_celled_hnsw(
                 idx_b, centroids=cents, dim=DIM, n_cells=N_CELLS,
-                backend="numpy",
             ),
             q, cents, n,
         )
@@ -1173,7 +1172,6 @@ def test_hybrid_historical_epoch_and_inflight_tear_healed_by_history(
     dense = ann_hnsw.celled_hnsw_topk_cogrouped(
         ann_hnsw.build_celled_hnsw(
             idx_b, centroids=cents, dim=DIM, n_cells=N_CELLS,
-            backend="numpy",
         ),
         q.select("query_id", "qvec"), centroids=cents,
         k=POOL, ef=int(n) + 8, dim=DIM, n_cells=N_CELLS, nprobe=N_CELLS,
@@ -1205,7 +1203,7 @@ def test_hybrid_historical_epoch_and_inflight_tear_healed_by_history(
     delta = idx.limit(3).select("doc_id", "norm_embedding")
     ann_hnsw.refresh_celled_hnsw_index(
         spark, IG.corpus_graphs_path(root2), idx, delta,
-        centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy",
+        centroids=cents, dim=DIM, n_cells=N_CELLS,
         batch_id=e + 1,
     )
     assert IG.corpus_committed_epoch(root2) == e  # marker never written

@@ -158,7 +158,7 @@ def test_delete_refreshes_ann_stores_to_post_delete_rebuild(spark, tmp_path):
     )
     ann_hnsw.write_celled_hnsw_index_managed(
         ann_hnsw.build_celled_hnsw(
-            index0, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+            index0, centroids=cents, dim=DIM, n_cells=N_CELLS
         ),
         graphs,
         ids=index0.select(
@@ -171,7 +171,6 @@ def test_delete_refreshes_ann_stores_to_post_delete_rebuild(spark, tmp_path):
     ann_maintain.refresh_search_artifacts_batch(
         dels, 1, path=idx_path, codebooks=cbs, codes_path=codes,
         graphs_path=graphs, centroids=cents, dim=DIM, n_cells=N_CELLS,
-        backend="numpy",
     )
     fin = IX.read_index_latest(spark, idx_path).select(
         "doc_id",
@@ -220,7 +219,7 @@ def test_delete_refreshes_ann_stores_to_post_delete_rebuild(spark, tmp_path):
     maintained = graph_rows(ann_hnsw.read_celled_hnsw_index(spark, graphs))
     full = graph_rows(
         ann_hnsw.build_celled_hnsw(
-            fin, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+            fin, centroids=cents, dim=DIM, n_cells=N_CELLS
         )
     )
     assert maintained == full and maintained
@@ -350,7 +349,6 @@ def test_ingest_delete_batch_end_to_end(spark, tmp_path):
         centroids=cents,
         dim=DIM,
         n_cells=N_CELLS,
-        backend="numpy",
         trigger_once=True,
         lsh_artifact=art_src,
         graph_radii=True,
@@ -399,7 +397,7 @@ def test_ingest_delete_batch_end_to_end(spark, tmp_path):
     maintained = rows(ann_hnsw.read_celled_hnsw_index(spark, f"{root}/graphs"))
     full = rows(
         ann_hnsw.build_celled_hnsw(
-            fin, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+            fin, centroids=cents, dim=DIM, n_cells=N_CELLS
         )
     )
     assert maintained == full and maintained

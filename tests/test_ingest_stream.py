@@ -5,6 +5,8 @@ equivalent afterwards."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,17 +23,22 @@ DIM, N_CELLS = 64, 8
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def ingested(spark, tmp_path_factory):
-    """Run the composed pipeline over sf0.001 documents split into two
-    micro-batches; yield (docs, root)."""
-    tmp = tmp_path_factory.mktemp("ingest")
-    docs = load_table(spark, SF, "documents").select(
+def _docs(spark):
+    """The sf0.001 documents as a stream source: one ts per doc_id."""
+    return load_table(spark, SF, "documents").select(
         "doc_id",
         F.timestamp_millis(F.col("doc_id") * 1000).alias("ts"),
         "text",
         "n_chars",
     )
+
+
+@pytest.fixture(scope="module")
+def ingested(spark, tmp_path_factory):
+    """Run the composed pipeline over sf0.001 documents split into two
+    micro-batches; yield (docs, root)."""
+    tmp = tmp_path_factory.mktemp("ingest")
+    docs = _docs(spark)
     docs.filter("doc_id % 2 = 0").coalesce(1).write.parquet(f"{tmp}/src/b0")
     docs.filter("doc_id % 2 = 1").coalesce(1).write.parquet(f"{tmp}/src/b1")
     stream = (
@@ -50,7 +57,6 @@ def ingested(spark, tmp_path_factory):
         centroids=cents,
         dim=DIM,
         n_cells=N_CELLS,
-        backend="numpy",
         span_k=8,
         cms_depth=3,
         cms_width=256,
@@ -157,7 +163,7 @@ def test_ann_serving_equals_full_rebuild(spark, ingested, tmp_path):
     )
     full = graph_rows(
         ann_hnsw.build_celled_hnsw(
-            fin, centroids=cents, dim=DIM, n_cells=N_CELLS, backend="numpy"
+            fin, centroids=cents, dim=DIM, n_cells=N_CELLS
         )
     )
     assert maintained == full and maintained
@@ -314,12 +320,7 @@ def lsh_ingested(spark, tmp_path_factory):
     )
 
     tmp = tmp_path_factory.mktemp("lsh_ingest")
-    docs = load_table(spark, SF, "documents").select(
-        "doc_id",
-        F.timestamp_millis(F.col("doc_id") * 1000).alias("ts"),
-        "text",
-        "n_chars",
-    )
+    docs = _docs(spark)
     b0 = docs.filter("doc_id < 40")
     b1 = docs.filter("doc_id >= 40 AND doc_id < 60").unionByName(
         docs.filter("doc_id < 8")
@@ -575,12 +576,7 @@ def test_graph_radii_flag_seeds_existing_store(spark, tmp_path):
     from vector_search_question_answer_api_spark.operators import ann_hnsw
 
     tmp = str(tmp_path)
-    docs = load_table(spark, SF, "documents").select(
-        "doc_id",
-        F.timestamp_millis(F.col("doc_id") * 1000).alias("ts"),
-        "text",
-        "n_chars",
-    )
+    docs = _docs(spark)
     docs.filter("doc_id % 2 = 0").coalesce(1).write.parquet(f"{tmp}/src/b0")
     cents = centroid_grid(DIM, N_CELLS)
 
@@ -595,7 +591,6 @@ def test_graph_radii_flag_seeds_existing_store(spark, tmp_path):
             centroids=cents,
             dim=DIM,
             n_cells=N_CELLS,
-            backend="numpy",
             trigger_once=True,
             graph_radii=True,
         )
@@ -612,7 +607,6 @@ def test_graph_radii_flag_seeds_existing_store(spark, tmp_path):
         centroids=cents,
         dim=DIM,
         n_cells=N_CELLS,
-        backend="numpy",
         trigger_once=True,
     )
     assert q0.awaitTermination(300)
@@ -628,3 +622,62 @@ def test_graph_radii_flag_seeds_existing_store(spark, tmp_path):
     stored = ann_hnsw.read_cell_radii(f"{tmp}/corpus/graphs")
     fresh = ann_hnsw.cell_radii(fin, centroids=cents, dim=DIM)
     assert all(abs(a - b) < 1e-9 for a, b in zip(stored, fresh))
+
+
+def test_fanout_stage_failure_leaves_no_commit_marker(
+    spark, tmp_path, monkeypatch
+):
+    """A failure in the per-batch fan-out fails the batch before its
+    commit marker: once in a pool-thread stage (the LSH append) and once
+    in the handler-thread chain (index-log append plus ANN refresh).  The
+    crashed batch leaves no marker and no committed epoch, and an
+    unpatched restart on the same checkpoint replays it to the stores of
+    an uncrashed run."""
+    from vector_search_question_answer_api_spark.operators import ann
+    from vector_search_question_answer_api_spark.streaming import ann_maintain
+
+    docs = _docs(spark).filter("doc_id < 24")
+    docs.coalesce(1).write.parquet(f"{tmp_path}/src/b0")
+    art = {"family": ann.LSH_FAMILY, "dim": DIM, "center": None,
+           "n_planes": ann.DEFAULT_N_PLANES, "n_tables": ann.DEFAULT_N_TABLES}
+
+    def run(name):
+        return IG.maintain_corpus(
+            spark.readStream.schema(docs.schema).parquet(f"{tmp_path}/src/*"),
+            f"{tmp_path}/{name}/corpus",
+            checkpoint=f"{tmp_path}/{name}/ckpt",
+            dim=DIM,
+            n_cells=N_CELLS,
+            trigger_once=True,
+            lsh_artifact=art,
+        )
+
+    def stores(root):
+        index = IG.read_corpus_index(spark, root).collect()
+        sigs = ann.read_lsh_signatures(spark, IG.corpus_lsh_path(root))
+        return (
+            {(r["doc_id"], tuple(r["norm_embedding"])) for r in index},
+            {(r["doc_id"], r["sig"]) for r in sigs.collect()},
+        )
+
+    assert run("clean").awaitTermination(300)
+    want = stores(f"{tmp_path}/clean/corpus")
+    assert len(want[0]) == 24 and want[1]
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected stage failure")
+
+    for name, module, attr in (
+        ("lsh_stage", ann, "append_lsh_signatures_batch"),
+        ("ann_chain", ann_maintain, "refresh_search_artifacts_batch"),
+    ):
+        root = f"{tmp_path}/{name}/corpus"
+        with monkeypatch.context() as mp:
+            mp.setattr(module, attr, boom)
+            with pytest.raises(Exception, match="injected stage failure"):
+                run(name).awaitTermination(300)
+        assert not os.path.exists(f"{root}/commits/batch-0.json"), name
+        assert IG.corpus_committed_epoch(root) is None, name
+        assert run(name).awaitTermination(300), name
+        assert IG.corpus_committed_epoch(root) == 0, name
+        assert stores(root) == want, name

@@ -1,11 +1,12 @@
 """Optional-dependency smoke tests (VERDICT r1 next-round #8).
 
-The production seams — sentence-transformers embedder, partitioned-HNSW
-tier — are gated on packages absent from this container.  These tests run
-the REAL paths whenever the packages appear (so the seams stop being dead
-code the moment the environment grows them) and skip cleanly otherwise.
-The gating behavior itself (NotImplementedError with a working default-path
-pointer) is asserted unconditionally.
+The sentence-transformers embedder seam is gated on a package this
+engine does not ship.  Its test runs the REAL path whenever the package is
+importable and skips cleanly otherwise; the gating behavior itself
+(NotImplementedError with a working default-path pointer) is asserted
+whenever the package is absent.  The partitioned-HNSW tier needs no
+optional package (``NumpyHNSW``), so its real-path smoke runs everywhere,
+as does the Mongo source seam's gate.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ from pyspark.sql import functions as F
 
 from vector_search_question_answer_api_spark.functions import vector as V
 from vector_search_question_answer_api_spark.operators.ann_hnsw import (
-    HNSW_AVAILABLE,
     build_partitioned_hnsw,
     hnsw_topk,
 )
@@ -46,8 +46,6 @@ def test_sentence_transformer_embedder_gated(spark, sf_dir):
 
 
 def test_partitioned_hnsw_real_path(spark, sf_dir):
-    # runs on the built-in numpy backend everywhere; auto-selects hnswlib
-    # when that is importable (same assertions either way)
     e = load_table(spark, sf_dir, "embeddings")
     index = e.select(
         F.col("vec_id").alias("doc_id"),
@@ -65,14 +63,6 @@ def test_partitioned_hnsw_real_path(spark, sf_dir):
     # self-retrieval: rank-1 hit is the query's own vector
     for qid, row in by_q.items():
         assert row["doc_id"] == qid
-
-
-@pytest.mark.skipif(HNSW_AVAILABLE, reason="hnswlib IS installed")
-def test_partitioned_hnsw_backend_gated(spark):
-    # the C++ backend stays an explicit opt-in error when absent; the
-    # default resolves to the numpy implementation instead of raising
-    with pytest.raises(NotImplementedError, match="numpy"):
-        build_partitioned_hnsw(None, dim=64, backend="hnswlib")
 
 
 def test_mongo_connector_gated(spark):

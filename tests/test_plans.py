@@ -209,7 +209,7 @@ def test_celled_hnsw_cogrouped_plan_shape(spark):
     )
     cents = centroid_grid(16, 4)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=16, n_cells=4, backend="numpy"
+        idx, centroids=cents, dim=16, n_cells=4
     )
     q = idx.limit(5).select(
         F.col("doc_id").alias("query_id"),

@@ -213,7 +213,7 @@ def test_filtered_knn_ann_postfilter_recall(spark):
     )
     tc = train_centroids(idx, dim=32, n_cells=4, n_iters=3)
     graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=tc, dim=32, n_cells=4, backend="numpy"
+        idx, centroids=tc, dim=32, n_cells=4
     ).cache()
 
     def tier(queries, kk):

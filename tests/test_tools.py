@@ -1,13 +1,16 @@
-"""The command-line tools stay importable, and nothing points at a deleted
-one.  Spark-free: importing a tool builds no session."""
+"""The command-line tools stay importable, nothing points at a deleted
+tool, and every slow-tier key names an existing test.  Spark-free:
+importing a tool builds no session."""
 
 from __future__ import annotations
 
+import ast
 import importlib
 import pathlib
 import re
 
 import pytest
+from conftest import _SLOW_TESTS
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 TOOLS = sorted(p.stem for p in (ROOT / "tools").glob("*.py") if p.stem != "__init__")
@@ -38,3 +41,24 @@ def test_tool_references_name_existing_files():
                 if not (ROOT / "tools" / f"{name}.py").exists():
                     missing.append(f"{path.relative_to(ROOT)}:{lineno}: {m.group(0)}")
     assert not missing, missing
+
+
+def test_slow_tier_keys_name_existing_tests():
+    # a key left behind by a renamed test would silently move the test
+    # into the default tier; keys are `file::test[param]` or
+    # `file::Class::test`
+    defined = {}
+    for path in (ROOT / "tests").glob("test_*.py"):
+        names = defined.setdefault(path.name, set())
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef):
+                names.add(node.name)
+            elif isinstance(node, ast.ClassDef):
+                names.update(f"{node.name}::{f.name}" for f in node.body
+                             if isinstance(f, ast.FunctionDef))
+    missing = []
+    for key in sorted(_SLOW_TESTS):
+        fname, _, name = key.partition("::")
+        if name.split("[")[0] not in defined.get(fname, ()):
+            missing.append(key)
+    assert _SLOW_TESTS and not missing, missing

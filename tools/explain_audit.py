@@ -122,7 +122,7 @@ def main() -> None:
         )
         cents = centroid_grid(64, 16)
         graphs = ann_hnsw.build_celled_hnsw(
-            idx, centroids=cents, dim=64, n_cells=16, backend="numpy"
+            idx, centroids=cents, dim=64, n_cells=16
         )
         q = idx.filter(F.col("doc_id") < 10).select(
             F.col("doc_id").alias("query_id"),

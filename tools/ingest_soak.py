@@ -202,7 +202,6 @@ def run(
             centroids=cents,
             dim=DIM,
             n_cells=n_cells,
-            backend="numpy",
             span_k=8,
             trigger_once=True,
         )

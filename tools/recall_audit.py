@@ -219,15 +219,14 @@ def audit(spark, emb, corpus_name, k, n_queries=10, dim=64):
              "centroids": "trained", "codebooks": "trained"},
         )
 
-    # partitioned HNSW graphs (numpy backend unless hnswlib is present)
+    # partitioned HNSW graphs
     from vector_search_question_answer_api_spark.operators import ann_hnsw
 
     graphs = ann_hnsw.build_partitioned_hnsw(normed, dim=dim)
     rec(
         "hnsw_partitioned",
         ann_hnsw.hnsw_topk(spark, graphs, q, k=k),
-        {"m": 16, "ef_construction": 200, "ef": 50,
-         "backend": "hnswlib" if ann_hnsw.HNSW_AVAILABLE else "numpy"},
+        {"m": 16, "ef_construction": 200, "ef": 50},
     )
     # cell-routed composition through the cogrouped serving path (r6)
     celled = ann_hnsw.build_celled_hnsw(

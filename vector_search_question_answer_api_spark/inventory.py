@@ -692,7 +692,7 @@ def knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     primary = _assert_twin(primary, twin, "knn_topk")
     if RUN_TWIN_CHECKS:
-        # r5: the partitioned GRAPH tier (numpy-HNSW backend, M=16/efc=200/
+        # r5: the partitioned GRAPH tier (NumpyHNSW, M=16/efc=200/
         # ef=50 per the reference) recall-checked against this gate's exact
         # relation on every correctness run — the graph algorithm itself is
         # driver-verified, not only pytest'd
@@ -701,7 +701,7 @@ def knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = normed.select(
             F.col("vec_id").alias("doc_id"), F.col("nv").alias("norm_embedding")
         )
-        graphs = ann_hnsw.build_partitioned_hnsw(idx, dim=64, backend="numpy")
+        graphs = ann_hnsw.build_partitioned_hnsw(idx, dim=64)
         got: dict[int, set] = {}
         for r in ann_hnsw.hnsw_topk(spark, graphs, q, k=5).collect():
             got.setdefault(int(r["query_id"]), set()).add(int(r["doc_id"]))
@@ -2735,7 +2735,7 @@ def _celled_hnsw_twin_check(normed: DataFrame) -> None:
 
     graphs = caching.persist_tracked(
         ann_hnsw.build_celled_hnsw(
-            idx, centroids=cents, dim=dim, n_cells=n_cells, backend="numpy"
+            idx, centroids=cents, dim=dim, n_cells=n_cells
         )
     )
     kwargs = dict(centroids=cents, k=k, ef=int(n), dim=dim,

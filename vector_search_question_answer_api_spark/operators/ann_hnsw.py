@@ -27,15 +27,10 @@ Serving shapes (the queries≪corpus broadcast contract, and beyond it):
 - ``hnsw_topk_chunked`` (r6): the flat tier under a large batch —
   bounded driver chunks, exact union of per-chunk top-k.
 
-Two interchangeable graph backends behind one surface (r5):
-
-- ``numpy`` (always available): :class:`operators.hnsw_numpy.NumpyHNSW`,
-  a from-scratch implementation of the HNSW algorithm itself —
-  hierarchical layers, greedy descent, ef-bounded beam search,
-  bidirectional M-links.  The tier is no longer environment-gated.
-- ``hnswlib`` (optional fast path): the C++ library the reference vendors,
-  used automatically when importable; tests assert both backends meet the
-  same recall bar.
+Every graph is a :class:`operators.hnsw_numpy.NumpyHNSW` (r5), a
+from-scratch implementation of the HNSW algorithm itself — hierarchical
+layers, greedy descent, ef-bounded beam search, bidirectional M-links —
+so the tier runs everywhere, and a stored blob is that object pickled.
 """
 
 from __future__ import annotations
@@ -50,15 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_search_question_answer_api_spark.functions import vector as V
+from vector_search_question_answer_api_spark.operators.hnsw_numpy import NumpyHNSW
 from vector_search_question_answer_api_spark.operators.search import topk_per_query
-
-try:  # pragma: no cover - not installed in this environment
-    import hnswlib  # type: ignore
-
-    HNSW_AVAILABLE = True
-except ImportError:
-    hnswlib = None
-    HNSW_AVAILABLE = False
 
 
 def _resolve_centroids_dim(centroids, dim, n_cells):
@@ -80,19 +68,6 @@ def _resolve_centroids_dim(centroids, dim, n_cells):
     return centroids, dim
 
 
-def _resolve_backend(backend: str | None) -> str:
-    if backend is None:
-        return "hnswlib" if HNSW_AVAILABLE else "numpy"
-    if backend == "hnswlib" and not HNSW_AVAILABLE:
-        raise NotImplementedError(
-            "hnswlib is not installed; use backend='numpy' (the built-in "
-            "HNSW implementation) or the LSH/IVF/PQ tiers"
-        )
-    if backend not in ("hnswlib", "numpy"):
-        raise ValueError(f"unknown hnsw backend {backend!r}")
-    return backend
-
-
 def build_partitioned_hnsw(
     index: DataFrame,
     dim: int | None = None,
@@ -100,14 +75,11 @@ def build_partitioned_hnsw(
     ef_construction: int = 200,
     vec_col: str = "norm_embedding",
     id_col: str = "doc_id",
-    backend: str | None = None,
 ) -> DataFrame:
     """(n, graph): one serialized HNSW graph per partition.  Reference
     build constants preserved (M=16, ef_construction=200,
-    services/index_service.py:89-92).  ``backend``: 'hnswlib' | 'numpy' |
-    None (auto: hnswlib when importable, else the built-in numpy
-    implementation).  ``dim`` defaults to the data's own width."""
-    backend = _resolve_backend(backend)
+    services/index_service.py:89-92).  ``dim`` defaults to the data's own
+    width."""
     if dim is None:
         dim = len(index.select(vec_col).first()[0])
 
@@ -121,20 +93,8 @@ def build_partitioned_hnsw(
             mats.append(np.array(list(pdf[vec_col]), dtype=np.float32))
         if not ids:
             return
-        mat = np.vstack(mats)
-        if backend == "hnswlib":
-            g = hnswlib.Index(space="cosine", dim=dim)
-            g.init_index(
-                max_elements=len(ids), M=m, ef_construction=ef_construction
-            )
-            g.add_items(mat, np.asarray(ids, dtype=np.int64))
-        else:
-            from vector_search_question_answer_api_spark.operators.hnsw_numpy import (
-                NumpyHNSW,
-            )
-
-            g = NumpyHNSW(dim, m=m, ef_construction=ef_construction)
-            g.add_items(mat, np.asarray(ids, dtype=np.int64))
+        g = NumpyHNSW(dim, m=m, ef_construction=ef_construction)
+        g.add_items(np.vstack(mats), np.asarray(ids, dtype=np.int64))
         yield pd.DataFrame(
             {
                 "n": [len(ids)],
@@ -156,7 +116,6 @@ def build_celled_hnsw(
     ef_construction: int = 200,
     vec_col: str = "norm_embedding",
     id_col: str = "doc_id",
-    backend: str | None = None,
     cell_salts: int = 1,
 ) -> DataFrame:
     """(cell, n, graph): one HNSW graph per IVF coarse cell — the
@@ -180,7 +139,6 @@ def build_celled_hnsw(
     over shards).  Per-task memory drops by the salt factor."""
     from vector_search_question_answer_api_spark.operators.ivf import assign_cell
 
-    backend = _resolve_backend(backend)
     centroids, dim = _resolve_centroids_dim(centroids, dim, n_cells)
     assigned = index.select(
         F.col(id_col).alias("doc_id"),
@@ -192,24 +150,12 @@ def build_celled_hnsw(
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = np.asarray(pdf["doc_id"], dtype=np.int64)
         cell = int(pdf["cell"].iloc[0])
+        # float64 end-to-end: the graph's distances then match the
+        # engine's HOF doubles to ~1e-15, so the ef>=cell-size walk
+        # reproduces ivf_topk within rounding (pinned in tests)
         mat64 = np.array(list(pdf["nv"]), dtype=np.float64)
-        if backend == "hnswlib":
-            mat = np.array(list(pdf["nv"]), dtype=np.float32)
-            g = hnswlib.Index(space="cosine", dim=dim)
-            g.init_index(
-                max_elements=len(ids), M=m, ef_construction=ef_construction
-            )
-            g.add_items(mat, ids)
-        else:
-            from vector_search_question_answer_api_spark.operators.hnsw_numpy import (
-                NumpyHNSW,
-            )
-
-            # float64 end-to-end: the numpy backend's distances then match
-            # the engine's HOF doubles to ~1e-15, so the ef>=cell-size
-            # walk reproduces ivf_topk within rounding (pinned in tests)
-            g = NumpyHNSW(dim, m=m, ef_construction=ef_construction)
-            g.add_items(mat64, ids)
+        g = NumpyHNSW(dim, m=m, ef_construction=ef_construction)
+        g.add_items(mat64, ids)
         cent = np.asarray(centroids[cell], dtype=np.float64)
         r = float(np.sqrt(((mat64 - cent) ** 2).sum(axis=1).max()))
         return pd.DataFrame(
@@ -280,10 +226,8 @@ def celled_hnsw_topk(
                 g.set_ef(max(ef, k + 1))
                 q_ids = np.array([qid for qid, _ in routed], dtype=np.int64)
                 q_mat = np.array([qv for _, qv in routed], dtype=np.float64)
-                labels, dists = g.knn_query(
-                    q_mat, k=min(k, g.get_current_count())
-                )
-                # drop the numpy backend's disconnection padding
+                labels, dists = g.knn_query(q_mat, k=k)
+                # drop the graph's disconnection padding
                 # (label -1 / dist +inf) so short results stay short
                 rq, rc = np.nonzero(np.isfinite(dists))
                 yield pd.DataFrame(
@@ -378,21 +322,13 @@ def _blob_live_radius(g, cent: np.ndarray) -> float:
     """Exact chord radius over the blob's LIVE members, computed from the
     vectors the graph already holds (r13 — replaces the resolved-view
     ``cell_radii`` scan in the refresh path).  NumpyHNSW stores float64
-    vectors, so this matches the Spark-HOF chord arithmetic to ~1e-15;
-    an hnswlib blob stores float32, where the pruned tier's float32-ulp
-    keep-slack absorbs the rounding."""
-    if hasattr(g, "get_live_count"):
-        if g.vecs is None or g.get_live_count() == 0:
-            return 0.0
-        mask = np.ones(len(g.links), dtype=bool)
-        for i in g._dead_set():
-            mask[int(i)] = False
-        vecs = np.asarray(g.vecs, dtype=np.float64)[mask]
-    else:
-        ids = g.get_ids_list()
-        if not len(ids):
-            return 0.0
-        vecs = np.asarray(g.get_items(ids), dtype=np.float64)
+    vectors, so this matches the Spark-HOF chord arithmetic to ~1e-15."""
+    if g.vecs is None or g.get_live_count() == 0:
+        return 0.0
+    mask = np.ones(len(g.links), dtype=bool)
+    for i in g._dead_set():
+        mask[int(i)] = False
+    vecs = np.asarray(g.vecs, dtype=np.float64)[mask]
     return float(np.sqrt(((vecs - cent) ** 2).sum(axis=1).max()))
 
 
@@ -407,29 +343,18 @@ def _incr_apply(
     vectors into ONE deterministically-chosen blob (fewest live entries,
     sha1-of-bytes tiebreak — cogroup row order is not stable).  Emits the
     cell's full new blob set; serving live-set equals a from-scratch
-    rebuild of the resolved cell (pinned in tests at exhaustive ef).
-
-    hnswlib blobs take the add-only path (``add_items`` REPLACES an
-    existing label in place, so no marking is needed and none is
-    possible without risking its k>live query raise); cells with true
-    removals never reach here on that backend (classification in
-    :func:`refresh_celled_hnsw_index` sends them to rebuild)."""
+    rebuild of the resolved cell (pinned in tests at exhaustive ef)."""
     import hashlib as _hl
 
-    empty = pd.DataFrame(
-        {"cell": [], "n": [], "n_dead": [], "r": [], "graph": []}
-    ).astype({"cell": "int32", "n": "int64", "n_dead": "int64",
-              "r": "float64", "graph": "object"})
     if gpdf.empty:
         # classification guarantees existing blobs for incremental cells,
         # so an empty graph side means the feed raced a manifest change.
         # Raise (r15, VERDICT r14 What's wrong #3): emitting nothing
         # would make cell_store_refresh DROP the cell from the manifest —
-        # silently unserving its live docs — the opposite of the
-        # loud-beats-silently-wrong rule the mixed-backend branch below
-        # applies.  Aborting the batch leaves the previous generation
-        # serving; a checkpoint replay re-classifies against the new
-        # manifest and lands cleanly.
+        # silently unserving its live docs — loud beats silently wrong.
+        # Aborting the batch leaves the previous generation serving; a
+        # checkpoint replay re-classifies against the new manifest and
+        # lands cleanly.
         batch_cells = (
             sorted({int(x) for x in fpdf["cell"]}) if not fpdf.empty else []
         )
@@ -452,80 +377,31 @@ def _incr_apply(
         if not fpdf.empty
         else fpdf
     )
-    add_labels = set(int(x) for x in adds["doc_id"]) if len(adds) else set()
-    hnsw_blobs = [
-        g for g in gs if hnswlib is not None and isinstance(g, hnswlib.Index)
-    ]
-    if hnsw_blobs:
-        if len(hnsw_blobs) != len(gs):
-            # a MIXED-backend cell cannot absorb a batch incrementally:
-            # an add label live in an hnswlib blob but inserted into a
-            # numpy blob would duplicate across blobs (classification
-            # keys on the caller's backend and cannot see blob mixes —
-            # loud beats silently wrong)
-            raise NotImplementedError(
-                f"cell {cell} mixes hnswlib and numpy graph blobs — "
-                "rebuild it (refresh_celled_hnsw_index(incremental="
-                "False)) before incremental maintenance"
-            )
-        pure_removals = set(labels_all) - add_labels
-        if pure_removals:
-            present = set()
-            for g in hnsw_blobs:
-                present.update(int(x) for x in g.get_ids_list())
-            if pure_removals & present:
-                raise NotImplementedError(
-                    "hnswlib graph blobs cannot absorb deletions "
-                    "incrementally; classification should have routed "
-                    f"cell {cell} to rebuild — pass backend='hnswlib' to "
-                    "refresh_celled_hnsw_index"
-                )
-    else:
-        for g in gs:
-            for lab in labels_all:
-                g.mark_deleted(lab)
+    for g in gs:
+        for lab in labels_all:
+            g.mark_deleted(lab)
     if len(adds):
-        target = min(
-            range(len(gs)),
-            key=lambda i: (
-                gs[i].get_live_count()
-                if hasattr(gs[i], "get_live_count")
-                else gs[i].get_current_count(),
-                i,
-            ),
-        )
-        g = gs[target]
+        g = gs[min(range(len(gs)), key=lambda i: (gs[i].get_live_count(), i))]
         labs = np.asarray(adds["doc_id"], dtype=np.int64)
-        if hnswlib is not None and isinstance(g, hnswlib.Index):
-            mat = np.array(list(adds["nv"]), dtype=np.float32)
-            need = g.get_current_count() + len(labs)
-            if need > g.get_max_elements():
-                g.resize_index(need)
-            g.add_items(mat, labs)
-        else:
-            mat = np.array(list(adds["nv"]), dtype=np.float64)
-            if insert_efc is not None:
-                # maintenance-time beam override (r14, measured curve in
-                # SCALE.md): the blob keeps its BUILD-time efc — restored
-                # before pickling so the knob is per-refresh, not sticky
-                build_efc = g.efc
-                g.efc = int(insert_efc)
-                try:
-                    g.add_items(mat, labs)
-                finally:
-                    g.efc = build_efc
-            else:
+        mat = np.array(list(adds["nv"]), dtype=np.float64)
+        if insert_efc is not None:
+            # maintenance-time beam override (r14, measured curve in
+            # SCALE.md): the blob keeps its BUILD-time efc — restored
+            # before pickling so the knob is per-refresh, not sticky
+            build_efc = g.efc
+            g.efc = int(insert_efc)
+            try:
                 g.add_items(mat, labs)
+            finally:
+                g.efc = build_efc
+        else:
+            g.add_items(mat, labs)
     cent = np.asarray(centroids[cell], dtype=np.float64)
     rows = {"cell": [], "n": [], "n_dead": [], "r": [], "graph": []}
     for g in gs:
-        if hasattr(g, "get_live_count"):
-            live, dead = g.get_live_count(), g.get_deleted_count()
-        else:
-            live, dead = g.get_current_count(), 0
         rows["cell"].append(cell)
-        rows["n"].append(live)
-        rows["n_dead"].append(dead)
+        rows["n"].append(g.get_live_count())
+        rows["n_dead"].append(g.get_deleted_count())
         rows["r"].append(_blob_live_radius(g, cent))
         rows["graph"].append(pickle.dumps(g))
     return pd.DataFrame(rows)
@@ -558,7 +434,6 @@ def refresh_celled_hnsw_index(
     ef_construction: int = 200,
     vec_col: str = "norm_embedding",
     id_col: str = "doc_id",
-    backend: str | None = None,
     cell_salts: int = 1,
     max_dead_frac: float = 0.2,
     incremental: bool = True,
@@ -581,22 +456,18 @@ def refresh_celled_hnsw_index(
       existing blobs absorb the batch — every batch doc_id is
       ``mark_deleted`` (old entry of an update, entry of a delete,
       replay idempotence) and new vectors are inserted
-      (``NumpyHNSW.add_items`` builds by sequential insert; hnswlib
-      pre-allocates headroom for exactly this, the reference's
-      ``max_elements=2n``, services/index_service.py:90).  Dead nodes
+      (``NumpyHNSW.add_items`` builds by sequential insert).  Dead nodes
       stay as graph CONNECTORS and are filtered from level-0 results
-      (hnswlib's own deletion discipline), so tombstones never poison
+      (hnswlib's ``markDelete`` discipline), so tombstones never poison
       the neighborhoods they stitch.
     - **rebuild** when insertion is unsound or no longer worth it: no
       membership sidecar (old-cell evidence would not be replay-safe),
       cells only known dirty via ``prev_delta`` (same reason), cells
       with no existing blobs (fresh/emptied — the "rebuild" IS the
-      insert), hnswlib cells with removals or multiple salted blobs
-      (its add-only replace semantics cannot express them), and cells
-      whose predicted dead fraction after this batch exceeds
-      ``max_dead_frac`` — the walk-efficiency backstop that bounds how
-      much tombstone mass a blob can accumulate before it is rebuilt
-      clean from the resolved view.
+      insert), and cells whose predicted dead fraction after this batch
+      exceeds ``max_dead_frac`` — the walk-efficiency backstop that
+      bounds how much tombstone mass a blob can accumulate before it is
+      rebuilt clean from the resolved view.
 
     Serving equivalence is exact on the LIVE set: an incrementally
     maintained cell answers exhaustive-ef queries identically to a
@@ -628,8 +499,7 @@ def refresh_celled_hnsw_index(
 
     ``insert_efc`` (r14 — VERDICT r13 next #6): maintenance-time beam
     width for the per-row INSERT searches, overriding the blob's
-    build-time ``efc`` for this refresh only (numpy backend; hnswlib
-    bakes efC at construction and ignores it).  The insert path's cost
+    build-time ``efc`` for this refresh only.  The insert path's cost
     is ~``insert_efc`` beam searches per row, so this is the maintenance
     throughput lever; the measured recall-vs-efc curve and the
     ``recommended_insert_efc`` rule live in SCALE.md
@@ -653,7 +523,7 @@ def refresh_celled_hnsw_index(
     # incremental/rebuild classification needs the counts, not just the
     # cell ids: adds per cell (batch-sized agg), removals per cell (the
     # same sidecar semi-join as before, grouped), and the store's own
-    # (n, n_dead, blobs) per cell (a column-pruned scan of the tiny
+    # (n, n_dead) per cell (a column-pruned scan of the tiny
     # metadata columns — graph blobs are never read for this).
     adds_df = delta.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("doc_id"),
@@ -723,7 +593,7 @@ def refresh_celled_hnsw_index(
             )
         )
     # r16 (guide §2.6 — fewer driver-synchronous jobs): the store's own
-    # per-cell (live, dead, blobs) stats ride the SAME census job as 's'
+    # per-cell (live, dead) stats ride the SAME census job as 's'
     # rows instead of a second collect after it.  The metadata scan is
     # column-pruned (the graph blobs are never read) and covers ALL
     # cells — the dirty set isn't known yet — which only widens the
@@ -761,7 +631,7 @@ def refresh_celled_hnsw_index(
     add_chord_per_cell: dict[int, float] = {}
     removals_per_cell: dict[int, int] = {}
     prev_cells: set[int] = set()
-    stats: dict[int, tuple[int, int, int]] = {}
+    stats: dict[int, tuple[int, int]] = {}
     intrabatch_dups = False
     for r in (
         census.groupBy("cell", "_k")
@@ -783,7 +653,7 @@ def refresh_celled_hnsw_index(
         elif k == "r":
             removals_per_cell[c] = cnt
         elif k == "s":
-            stats[c] = (int(r["sn"]), int(r["snd"]), cnt)
+            stats[c] = (int(r["sn"]), int(r["snd"]))
         else:
             prev_cells.add(c)
     dirty = sorted(
@@ -801,7 +671,6 @@ def refresh_celled_hnsw_index(
         return []
     # --- incremental/rebuild classification (r13; stats collected with
     # the census above since r16) ---
-    resolved_backend = _resolve_backend(backend)
     rebuild_cells: list[int] = []
     incr_cells: list[int] = []
     for c in dirty:
@@ -816,10 +685,7 @@ def refresh_celled_hnsw_index(
         ):
             rebuild_cells.append(c)
             continue
-        live, dead_n, blobs = stats[c]
-        if resolved_backend == "hnswlib" and (rm > 0 or blobs > 1):
-            rebuild_cells.append(c)
-            continue
+        live, dead_n = stats[c]
         total_after = live + dead_n + a
         # rm is an upper bound on NEW tombstones (a replayed batch can
         # re-count docs its crashed attempt already marked) — conservative:
@@ -917,7 +783,7 @@ def refresh_celled_hnsw_index(
                 ),
                 centroids=centroids, dim=dim, n_cells=n_cells, m=m,
                 ef_construction=ef_construction, vec_col=vec_col,
-                id_col=id_col, backend=backend, cell_salts=cell_salts,
+                id_col=id_col, cell_salts=cell_salts,
             )
         )
     if incr_cells:
@@ -1103,7 +969,6 @@ def purge_graph_tombstones(
     ef_construction: int = 200,
     vec_col: str = "norm_embedding",
     id_col: str = "doc_id",
-    backend: str | None = None,
     cell_salts: int = 1,
 ) -> list[int]:
     """QUIESCED physical purge of tombstone mass from a managed graph
@@ -1175,7 +1040,7 @@ def purge_graph_tombstones(
         index.filter(assign_cell(F.col(vec_col), centroids).isin(dirty)),
         centroids=centroids, dim=dim, n_cells=n_cells, m=m,
         ef_construction=ef_construction, vec_col=vec_col, id_col=id_col,
-        backend=backend, cell_salts=cell_salts,
+        cell_salts=cell_salts,
     )
     cell_store_refresh(
         spark, path, graphs, dirty, batch_id=man.get("batch")
@@ -1241,9 +1106,7 @@ def _cogrouped_walk(
         for blob in gpdf["graph"]:
             g = pickle.loads(bytes(blob))
             g.set_ef(max(ef, k + 1))
-            labels, dists = g.knn_query(
-                q_mat, k=min(k, g.get_current_count())
-            )
+            labels, dists = g.knn_query(q_mat, k=k)
             rq, rc = np.nonzero(np.isfinite(dists))
             out.append(
                 pd.DataFrame(
@@ -1549,15 +1412,14 @@ def _pruned_phase2_routing(
     the lower-bound test: keep iff ``d_k >= d_lb - eps`` with
     ``d_lb = max(0, ||q-c_j|| - r_j)^2/2`` (strict-< skips cannot drop a
     tie: if d_k < d_lb every cell-j candidate is strictly worse than the
-    phase-1 k-th).  ``eps`` covers float32 rounding (ADVICE r10): the
-    hnswlib backend reports distances in float32, so a cell-j candidate
-    whose TRUE distance sits a few float32 ulps above the exact-float64
-    ``d_lb`` can still ROUND below ``d_k`` in the unpruned tier's merge —
-    without slack the pruned tier could skip a cell holding such an
-    epsilon-tie.  A few ulps of relative slack (2^-21 ~ 4 float32 ulps)
-    plus a tiny absolute floor keeps the relation equal at the boundary;
-    extra kept probes only cost walks, never correctness.  (The numpy
-    backend is float64 end-to-end — the slack is then pure margin.)
+    phase-1 k-th).  ``eps`` is pure margin for float64 rounding (ADVICE
+    r10): the walk's distances (numpy ``1 - dot``) and the JVM-side
+    ``d_lb`` are both float64 but round through different operation
+    orders, so a cell-j candidate whose distance sits on the bound could
+    land a few ulps either side of it — without slack the pruned tier
+    could skip a cell holding such an epsilon-tie.  A relative slack of
+    2^-21 plus a tiny absolute floor keeps the relation equal at the
+    boundary; extra kept probes only cost walks, never correctness.
     Factored out so tests can count what pruning removes."""
     from vector_search_question_answer_api_spark.operators.ivf import probe_cells
 
@@ -1594,7 +1456,7 @@ def _pruned_phase2_routing(
         F.lit(0.0), chord - F.element_at(radii_lit, F.col("cell") + 1)
     )
     d_lb = lb_chord * lb_chord / F.lit(2.0)
-    # float32-ulp slack (see docstring); d_k = +inf keeps regardless
+    # rounding slack (see docstring); d_k = +inf keeps regardless
     eps = F.col("d_k") * F.lit(2.0**-21) + F.lit(2.0**-40)
     return routed.filter(F.col("d_k") >= d_lb - eps).select(
         "query_id", "qvec", "cell"
@@ -1644,10 +1506,10 @@ def celled_hnsw_topk_pruned(
     unpruned walker), the per-cell radius bounds every shard's members
     (shards partition the cell, so each shard radius <= r_j), and a
     skipped cell skips all of its shards together — lossless, pinned on a
-    salted clustered layout in tests.  The keep test carries a few-ulp
-    float32 slack so hnswlib's float32-rounded distances cannot break
-    relation equality on epsilon-ties (ADVICE r10; see
-    :func:`_pruned_phase2_routing`)."""
+    salted clustered layout in tests.  The keep test carries a small
+    rounding slack so float64 rounding between the walk and the JVM
+    bound cannot break relation equality on epsilon-ties (ADVICE r10;
+    see :func:`_pruned_phase2_routing`)."""
     from vector_search_question_answer_api_spark.caching import persist_tracked
     from vector_search_question_answer_api_spark.operators.ivf import probe_cells
 
@@ -1845,9 +1707,7 @@ def hnsw_topk(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Per-partition graph walk + global candidate merge.  Search breadth
-    ef=50 preserved from the reference (services/index_service.py:72).
-    Works with graphs from either backend (the serialized object answers
-    the same set_ef/knn_query/get_current_count surface)."""
+    ef=50 preserved from the reference (services/index_service.py:72)."""
     q_rows = queries.select(query_id_col, query_vec_col).collect()
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.array([r[1] for r in q_rows], dtype=np.float32)
@@ -1857,8 +1717,8 @@ def hnsw_topk(
             for blob in pdf["graph"]:
                 g = pickle.loads(bytes(blob))
                 g.set_ef(max(ef, k + 1))
-                labels, dists = g.knn_query(q_mat, k=min(k, g.get_current_count()))
-                # drop the numpy backend's disconnection padding
+                labels, dists = g.knn_query(q_mat, k=k)
+                # drop the graph's disconnection padding
                 # (label -1 / dist +inf) so short results stay short
                 rq, rc = np.nonzero(np.isfinite(dists))
                 yield pd.DataFrame(

@@ -1,17 +1,16 @@
 """Dependency-free HNSW (Malkov & Yashunin 2016, "Efficient and robust
 approximate nearest neighbor search using Hierarchical Navigable Small
-World graphs") in numpy + heapq — the always-available backend for the
-partitioned graph-ANN tier (operators/ann_hnsw.py).
+World graphs") in numpy + heapq — the one graph implementation behind
+the partitioned graph-ANN tier (operators/ann_hnsw.py).
 
 The reference's entire index is one hnswlib graph
 (services/index_service.py:87-96: cosine space, M=16, ef_construction=200,
-search ef=50).  hnswlib is not part of this engine's base stack, so until
-r5 the graph tier was an environment-gated seam with the LSH/IVF/PQ tiers
-as the working defaults.  This module implements the actual algorithm —
-hierarchical layers with exponentially decaying occupancy, greedy descent
-through upper layers, ef-bounded best-first beam search at each level,
-bidirectional M-links with shrink-to-Mmax — so the tier runs everywhere
-and hnswlib becomes the optional fast backend instead of a requirement.
+search ef=50).  This module implements the same algorithm, following
+hnswlib's choices where the paper leaves room — hierarchical layers with
+exponentially decaying occupancy, greedy descent through upper layers,
+ef-bounded best-first beam search at each level, bidirectional M-links
+with shrink-to-Mmax — so the tier runs everywhere without a native
+dependency.
 
 Faithfulness and divergences (documented, deliberate):
 
@@ -56,10 +55,9 @@ import numpy as np
 class NumpyHNSW:
     """One in-memory HNSW graph over L2-normalized vectors (cosine space).
 
-    API mirrors the hnswlib surface the engine touches: ``add_items``,
-    ``knn_query``, ``set_ef``, ``get_current_count`` — so
-    ``ann_hnsw.build_partitioned_hnsw`` / ``hnsw_topk`` run unchanged on
-    either backend.
+    The method names follow hnswlib's Python API (``add_items``,
+    ``knn_query``, ``set_ef``, ``mark_deleted``, ``get_current_count``),
+    the library the algorithm's details come from.
     """
 
     def __init__(
@@ -83,14 +81,14 @@ class NumpyHNSW:
         self.max_level = -1
         self.dead: set[int] = set()
 
-    # -- hnswlib-compatible surface -------------------------------------
+    # -- public surface --------------------------------------------------
     def set_ef(self, ef: int) -> None:
         self.ef = int(ef)
 
     def get_current_count(self) -> int:
-        """TOTAL node count including tombstoned entries — matching
-        hnswlib's ``get_current_count`` (element_count), which callers use
-        only as a k cap; short live results pad with the -1/+inf sentinel."""
+        """TOTAL node count including tombstoned entries (hnswlib's
+        ``element_count``); ``knn_query`` caps k at it, and short live
+        results pad with the -1/+inf sentinel."""
         return 0 if self.vecs is None else len(self.links)
 
     def _dead_set(self) -> set[int]:

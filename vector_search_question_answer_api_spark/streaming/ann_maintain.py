@@ -54,7 +54,6 @@ def maintain_search_artifacts(
     dim: int = 64,
     n_cells: int = 16,
     trigger_once: bool = False,
-    backend: str | None = None,
     compact_every_gens: int = 8,
     graph_max_dead_frac: float = 0.2,
 ):
@@ -91,7 +90,6 @@ def maintain_search_artifacts(
             centroids=centroids,
             dim=dim,
             n_cells=n_cells,
-            backend=backend,
             compact_every_gens=compact_every_gens,
             graph_max_dead_frac=graph_max_dead_frac,
         )
@@ -115,7 +113,6 @@ def refresh_search_artifacts_batch(
     centroids=None,
     dim: int = 64,
     n_cells: int = 16,
-    backend: str | None = None,
     compact_every_gens: int = 8,
     graph_max_dead_frac: float = 0.2,
     graph_insert_efc: "int | None" = None,
@@ -205,7 +202,7 @@ def refresh_search_artifacts_batch(
             ann_hnsw.refresh_celled_hnsw_index(
                 spark, graphs_path, index, delta,
                 prev_delta=prev_delta, centroids=centroids, dim=dim,
-                n_cells=n_cells, backend=backend, batch_id=batch_id,
+                n_cells=n_cells, batch_id=batch_id,
                 max_dead_frac=graph_max_dead_frac,
                 insert_efc=graph_insert_efc,
             )

@@ -110,7 +110,6 @@ def maintain_corpus(
     centroids=None,
     dim: int = 64,
     n_cells: int = 16,
-    backend: str | None = None,
     span_k: int = 8,
     cms_depth: int = STS.SK.DEFAULT_DEPTH,
     cms_width: int = STS.SK.DEFAULT_WIDTH,
@@ -661,7 +660,7 @@ def maintain_corpus(
                     path=p["index"], codebooks=codebooks,
                     codes_path=codes_ready, graphs_path=graphs_ready,
                     centroids=centroids, dim=dim, n_cells=n_cells,
-                    backend=backend, graph_max_dead_frac=graph_max_dead_frac,
+                    graph_max_dead_frac=graph_max_dead_frac,
                     graph_insert_efc=graph_insert_efc,
                 )
                 for f in futs:
@@ -711,7 +710,7 @@ def maintain_corpus(
                     ann_hnsw.write_celled_hnsw_index_managed(
                         ann_hnsw.build_celled_hnsw(
                             index, centroids=centroids, dim=dim,
-                            n_cells=n_cells, backend=backend,
+                            n_cells=n_cells,
                         ),
                         graphs_path,
                         # seed the membership sidecar: replay-safe old-cell
