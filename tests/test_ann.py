@@ -389,8 +389,8 @@ def test_celled_hnsw_exhaustive_probe_equals_ivf(spark, clustered):
     )
     got = {
         (r["query_id"], r["rank"]): (r["doc_id"], r["distance"])
-        for r in ann_hnsw.celled_hnsw_topk(
-            spark, graphs, q, centroids=cents, k=5, ef=600,
+        for r in ann_hnsw.celled_hnsw_topk_cogrouped(
+            graphs, q, centroids=cents, k=5, ef=600,
             dim=64, n_cells=8, nprobe=2,
         ).collect()
     }
@@ -419,8 +419,8 @@ def test_celled_hnsw_recall_at_working_ef(spark, clustered):
         idx, centroids=cents, dim=64, n_cells=8
     )
     got = _topk_sets(
-        ann_hnsw.celled_hnsw_topk(
-            spark, graphs, q, centroids=cents, k=10, ef=50,
+        ann_hnsw.celled_hnsw_topk_cogrouped(
+            graphs, q, centroids=cents, k=10, ef=50,
             dim=64, n_cells=8, nprobe=4,
         )
     )
@@ -454,15 +454,11 @@ def test_numpy_hnsw_short_reach_pads_with_sentinel():
     assert np.isinf(dists[:, 1:]).all()
 
 
-def test_hnsw_topk_drops_disconnection_padding(spark):
-    """The Spark-side walk must FILTER the sentinel rows: a graph whose
-    beam returns fewer than k candidates contributes only its real rows
-    to the merge — no doc_id=-1, no inf distances in the result."""
+def _severed_graph(spark):
+    """(points, graphs): a 20-node graph row whose level-0 links are all
+    cut, so every beam reaches only its entry node."""
     import pickle
 
-    import numpy as np
-
-    from vector_search_question_answer_api_spark.operators import ann_hnsw
     from vector_search_question_answer_api_spark.operators.hnsw_numpy import NumpyHNSW
 
     rng = np.random.RandomState(9)
@@ -475,6 +471,18 @@ def test_hnsw_topk_drops_disconnection_padding(spark):
     graphs = spark.createDataFrame(
         [(20, bytearray(pickle.dumps(g)))], "n long, graph binary"
     )
+    return pts, graphs
+
+
+def test_hnsw_topk_drops_disconnection_padding(spark):
+    """The Spark-side walk must FILTER the sentinel rows: a graph whose
+    beam returns fewer than k candidates contributes only its real rows
+    to the merge — no doc_id=-1, no inf distances in the result.  Both
+    walkers are pinned: the flat ``hnsw_topk`` and the celled tier's
+    cogrouped walk (the graph row and the routed queries in cell 0)."""
+    from vector_search_question_answer_api_spark.operators import ann_hnsw
+
+    pts, graphs = _severed_graph(spark)
     queries = spark.createDataFrame(
         [(int(i), [float(x) for x in pts[i]]) for i in range(3)],
         "query_id long, qvec array<double>",
@@ -483,110 +491,39 @@ def test_hnsw_topk_drops_disconnection_padding(spark):
     assert len(rows) == 3  # one reachable node per query, not 3*k
     assert all(r["doc_id"] >= 0 for r in rows)
     assert all(np.isfinite(r["distance"]) for r in rows)
+    cells = graphs.select(F.lit(0).alias("cell"), "n", "graph")
+    routed = queries.withColumn("cell", F.lit(0))
+    cand = ann_hnsw._cogrouped_walk(cells, routed, ef=50, k=5).collect()
+    assert len(cand) == 3
+    assert all(r["doc_id"] >= 0 for r in cand)
+    assert all(np.isfinite(r["distance"]) for r in cand)
 
 
-def test_celled_hnsw_cogrouped_equals_collected(spark, clustered):
-    """VERDICT r5 missing #3: the cogrouped (no driver collect) cell-routed
-    walk must emit exactly what the collected form emits — same ids,
-    ranks, distances."""
-    from vector_search_question_answer_api_spark.operators import ann_hnsw
-    from vector_search_question_answer_api_spark.operators.ivf import train_centroids
-
-    q, idx = _qi(clustered, 15)
-    cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
-    graphs = ann_hnsw.build_celled_hnsw(
-        idx, centroids=cents, dim=64, n_cells=8
-    ).cache()
-    kwargs = dict(centroids=cents, k=5, ef=50, dim=64, n_cells=8, nprobe=4)
-    got = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.celled_hnsw_topk_cogrouped(
-            graphs, q, **kwargs
-        ).collect()
-    }
-    want = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.celled_hnsw_topk(spark, graphs, q, **kwargs).collect()
-    }
-    assert got == want and got
-
-
-def test_hnsw_chunked_equals_monolithic(spark, clustered):
-    """Chunked query iteration (bounded driver memory) unions to exactly
-    the monolithic result, including a final partial chunk — and the
-    returned plan is ONE parquet scan of the eagerly spilled chunks, not
-    a per-chunk union tree (ADVICE r6: the lazy union kept every chunk's
-    closure and local relation alive until execution, so driver memory
-    scaled with the whole batch)."""
+def test_hnsw_topk_empty_query_batch(spark):
+    """Zero queries walk to zero rows: an empty query relation must give
+    an empty ``(query_id, doc_id, distance, score, rank)`` result, not a
+    worker error from ``knn_query`` reading the empty matrix as one
+    zero-width query."""
     from vector_search_question_answer_api_spark.operators import ann_hnsw
 
-    q, idx = _qi(clustered, 23)  # 23 rows -> chunks of 10,10,3
-    graphs = ann_hnsw.build_partitioned_hnsw(
-        idx.repartition(4, "doc_id"), dim=64
-    ).cache()
-    res = ann_hnsw.hnsw_topk_chunked(spark, graphs, q, k=5, ef=60, chunk_rows=10)
-    got = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in res.collect()
-    }
-    want = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.hnsw_topk(spark, graphs, q, k=5, ef=60).collect()
-    }
-    assert got == want and got
-    # plan-size pin: exactly one FileScan, zero Union nodes — constant in
-    # the number of chunks (3 here)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") == 1, plan
-    assert "Union" not in plan, plan
-
-
-def test_hnsw_chunked_explicit_spill_dir_sweeps_prior_calls(
-    spark, clustered, tmp_path
-):
-    """VERDICT r8 What's-wrong #2: an explicit ``spill_dir`` must not
-    accumulate one abandoned ``call-*`` subdirectory per call — entry
-    sweeps previous calls' spill, so two sequential calls leave at most
-    one live subdirectory (and the second call's result is correct)."""
-    import os
-
-    from vector_search_question_answer_api_spark.operators import ann_hnsw
-
-    q, idx = _qi(clustered, 12)
-    graphs = ann_hnsw.build_partitioned_hnsw(
-        idx.repartition(2, "doc_id"), dim=64
-    ).cache()
-    spill = str(tmp_path / "spill")
-    r1 = ann_hnsw.hnsw_topk_chunked(
-        spark, graphs, q, k=5, ef=60, chunk_rows=5, spill_dir=spill
-    )
-    r1.collect()  # consume before the directory is reused
-    assert len(os.listdir(spill)) == 1
-    r2 = ann_hnsw.hnsw_topk_chunked(
-        spark, graphs, q, k=5, ef=60, chunk_rows=5, spill_dir=spill
-    )
-    got = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in r2.collect()
-    }
-    want = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.hnsw_topk(spark, graphs, q, k=5, ef=60).collect()
-    }
-    assert got == want and got
-    assert len([d for d in os.listdir(spill) if d.startswith("call-")]) == 1
+    _, graphs = _severed_graph(spark)
+    queries = spark.createDataFrame([], "query_id long, qvec array<double>")
+    res = ann_hnsw.hnsw_topk(spark, graphs, queries, k=5)
+    assert res.columns == ["query_id", "doc_id", "distance", "score", "rank"]
+    assert res.collect() == []
 
 
 def test_celled_hnsw_index_roundtrip_and_partition_pruning(
     spark, clustered, tmp_path
 ):
     """The materialized graph index (cell-partitioned parquet of blobs)
-    answers identically to the in-memory graphs frame, and the collected
-    walk's probed-cell filter reaches the scan as a partition filter."""
-    from pyspark.sql import functions as F
-
+    answers identically to the in-memory graphs frame, and a probed-cell
+    filter on the re-read index reaches the scan as a partition filter."""
     from vector_search_question_answer_api_spark.operators import ann_hnsw
-    from vector_search_question_answer_api_spark.operators.ivf import train_centroids
+    from vector_search_question_answer_api_spark.operators.ivf import (
+        probe_cells,
+        train_centroids,
+    )
 
     q, idx = _qi(clustered, 10)
     cents = train_centroids(idx, dim=64, n_cells=8, n_iters=3)
@@ -599,9 +536,17 @@ def test_celled_hnsw_index_roundtrip_and_partition_pruning(
     kwargs = dict(centroids=cents, k=5, ef=50, dim=64, n_cells=8, nprobe=4)
     want = {
         (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
-        for r in ann_hnsw.celled_hnsw_topk(spark, graphs, q, **kwargs).collect()
+        for r in ann_hnsw.celled_hnsw_topk_cogrouped(graphs, q, **kwargs).collect()
     }
-    got_df = ann_hnsw.celled_hnsw_topk(spark, reread, q, **kwargs)
+    probed = [
+        r["cell"]
+        for r in q.select(
+            F.explode(probe_cells(F.col("qvec"), cents, 4)).alias("cell")
+        ).distinct().collect()
+    ]
+    got_df = ann_hnsw.celled_hnsw_topk_cogrouped(
+        reread.filter(F.col("cell").isin(probed)), q, **kwargs
+    )
     got = {
         (r["query_id"], r["rank"]): (r["doc_id"], round(r["distance"], 9))
         for r in got_df.collect()
@@ -660,8 +605,8 @@ def test_knn_graph_matches_exact_neighbors(spark, clustered):
 def test_celled_hnsw_salted_equals_unsalted_at_exhaustive_ef(spark, clustered):
     """cell_salts shards a hot cell into several graphs under the SAME
     cell key; the shards partition the cell, so at exhaustive ef the
-    salted layout must emit exactly the unsalted result in BOTH serving
-    shapes, and the salted build must emit more graph rows."""
+    salted layout must emit exactly the unsalted result, and the salted
+    build must emit more graph rows."""
     from vector_search_question_answer_api_spark.operators import ann_hnsw
     from vector_search_question_answer_api_spark.operators.ivf import train_centroids
 
@@ -683,8 +628,7 @@ def test_celled_hnsw_salted_equals_unsalted_at_exhaustive_ef(spark, clustered):
             for r in df.collect()
         }
 
-    want = keyed(ann_hnsw.celled_hnsw_topk(spark, plain, q, **kwargs))
-    assert keyed(ann_hnsw.celled_hnsw_topk(spark, salted, q, **kwargs)) == want
+    want = keyed(ann_hnsw.celled_hnsw_topk_cogrouped(plain, q, **kwargs))
     assert keyed(
         ann_hnsw.celled_hnsw_topk_cogrouped(salted, q, **kwargs)
     ) == want

@@ -136,21 +136,6 @@ def test_celled_hnsw_twin_detects_drift(spark, monkeypatch):
         inventory.queries()["ann_ivf_topk"](spark, SF).count()
 
 
-def test_celled_hnsw_serving_shape_twin_detects_drift(spark, monkeypatch):
-    """r6: the collected-vs-cogrouped serving-shape compare must fire when
-    the collected small-batch form diverges."""
-    import vector_search_question_answer_api_spark.operators.ann_hnsw as ah
-
-    real = ah.celled_hnsw_topk
-
-    def corrupted(*a, **k):
-        return real(*a, **k).withColumn("doc_id", F.col("doc_id") + 1)
-
-    monkeypatch.setattr(ah, "celled_hnsw_topk", corrupted)
-    with pytest.raises(ValueError, match="serving-shape mismatch"):
-        inventory.queries()["ann_ivf_topk"](spark, SF).count()
-
-
 def test_minhash_stream_twin_detects_signature_drift(spark, monkeypatch):
     """r6: the streaming-signature twin must fire when the stream's hash
     family diverges from the batch signatures."""

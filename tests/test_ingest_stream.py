@@ -628,13 +628,18 @@ def test_fanout_stage_failure_leaves_no_commit_marker(
     spark, tmp_path, monkeypatch
 ):
     """A failure in the per-batch fan-out fails the batch before its
-    commit marker: once in a pool-thread stage (the LSH append) and once
-    in the handler-thread chain (index-log append plus ANN refresh).  The
-    crashed batch leaves no marker and no committed epoch, and an
-    unpatched restart on the same checkpoint replays it to the stores of
-    an uncrashed run."""
+    commit marker: in each pool-thread stage that reads the embedded
+    batch (the vector-mean profile write and the LSH append), in a
+    text-side pool stage (the span append) and in the handler-thread
+    chain (index-log append plus ANN refresh).  The crashed batch leaves
+    no marker and no committed epoch, and an unpatched restart on the
+    same checkpoint replays it to the stores of an uncrashed run."""
     from vector_search_question_answer_api_spark.operators import ann
-    from vector_search_question_answer_api_spark.streaming import ann_maintain
+    from vector_search_question_answer_api_spark.streaming import (
+        ann_maintain,
+        span_stream,
+        stats_stream,
+    )
 
     docs = _docs(spark).filter("doc_id < 24")
     docs.coalesce(1).write.parquet(f"{tmp_path}/src/b0")
@@ -668,7 +673,9 @@ def test_fanout_stage_failure_leaves_no_commit_marker(
         raise RuntimeError("injected stage failure")
 
     for name, module, attr in (
+        ("vecmean_stage", stats_stream, "write_vecmean_batch"),
         ("lsh_stage", ann, "append_lsh_signatures_batch"),
+        ("span_stage", span_stream, "append_span_batch"),
         ("ann_chain", ann_maintain, "refresh_search_artifacts_batch"),
     ):
         root = f"{tmp_path}/{name}/corpus"

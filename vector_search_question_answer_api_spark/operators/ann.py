@@ -39,7 +39,7 @@ from vector_search_question_answer_api_spark.sources.generation_store import (
     GenerationStore,
     batch_id_of,
 )
-from vector_search_question_answer_api_spark.operators.search import topk_per_query
+from vector_search_question_answer_api_spark.operators.search import ranked_topk
 
 DEFAULT_N_PLANES = 8
 DEFAULT_N_TABLES = 8
@@ -964,14 +964,7 @@ def ann_lsh_topk_ondisk(
         "doc_id",
         (F.lit(1.0) - V.dot(F.col("qvec"), F.col("cvec"))).alias("distance"),
     )
-    top = topk_per_query(scored, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(scored, k)
 
 
 def lsh_candidates(
@@ -1070,11 +1063,4 @@ def ann_lsh_topk(
         "doc_id",
         (F.lit(1.0) - V.dot(F.col("qvec"), F.col("cvec"))).alias("distance"),
     )
-    top = topk_per_query(scored, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(scored, k)

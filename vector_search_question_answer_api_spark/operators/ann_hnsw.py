@@ -17,15 +17,13 @@ keeps the graph idea but makes it per-partition:
   nothing the per-partition graphs didn't; recall equals single-graph HNSW
   recall at the same ef.
 
-Serving shapes (the queries≪corpus broadcast contract, and beyond it):
+Serving shapes (one graph walk, :func:`_walk_graph`, under both):
 
-- ``hnsw_topk`` / ``celled_hnsw_topk``: small interactive batches — the
-  query matrix is collected once and closed over (bounded by contract);
-- ``celled_hnsw_topk_cogrouped`` (r6): offline batches of ANY size — the
-  query relation is routed to cells map-side and COGROUPED with the
-  graphs, never collected to the driver;
-- ``hnsw_topk_chunked`` (r6): the flat tier under a large batch —
-  bounded driver chunks, exact union of per-chunk top-k.
+- ``hnsw_topk``: the flat tier — the query matrix is collected once and
+  closed over (queries ≪ corpus, bounded by contract);
+- ``celled_hnsw_topk_cogrouped`` (r6): batches of ANY size — the query
+  relation is routed to cells map-side and COGROUPED with the graphs,
+  never collected to the driver.
 
 Every graph is a :class:`operators.hnsw_numpy.NumpyHNSW` (r5), a
 from-scratch implementation of the HNSW algorithm itself — hierarchical
@@ -46,7 +44,7 @@ from pyspark.sql import functions as F
 
 from vector_search_question_answer_api_spark.functions import vector as V
 from vector_search_question_answer_api_spark.operators.hnsw_numpy import NumpyHNSW
-from vector_search_question_answer_api_spark.operators.search import topk_per_query
+from vector_search_question_answer_api_spark.operators.search import ranked_topk
 
 
 def _resolve_centroids_dim(centroids, dim, n_cells):
@@ -122,9 +120,9 @@ def build_celled_hnsw(
     composed graph-ANN layout for scale (r5).  ``hnsw_topk``'s flat
     partitioned form walks EVERY partition's graph for every query; here
     the coarse quantizer routes each query to its ``nprobe`` best cells
-    (``celled_hnsw_topk``) so only those cells' graphs are walked — the
-    same coarse-prune × local-index multiply as IVFPQ, with a graph walk
-    instead of ADC codes inside the cell.  Cell graph sizes are bounded
+    (``celled_hnsw_topk_cogrouped``) so only those cells' graphs are
+    walked — the same coarse-prune × local-index multiply as IVFPQ, with
+    a graph walk instead of ADC codes inside the cell.  Cell graph sizes are bounded
     by the same rule as every IVF layout: pick n_cells so corpus/n_cells
     fits one task.
 
@@ -177,77 +175,6 @@ def build_celled_hnsw(
     # blobs or scanning the corpus.
     return assigned.groupBy("cell", "_salt").applyInPandas(
         build, schema="cell int, n long, n_dead long, r double, graph binary"
-    )
-
-
-def celled_hnsw_topk(
-    spark: SparkSession,
-    graphs: DataFrame,
-    queries: DataFrame,
-    centroids=None,
-    k: int = 3,
-    ef: int = 50,
-    dim: int | None = None,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    query_vec_col: str = "qvec",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Coarse-routed graph walk: each query is answered only by the
-    graphs of its ``nprobe`` best cells (nprobe/n_cells of the corpus'
-    graphs touched per query), then the per-cell candidates merge through
-    the usual global top-k.  With ``ef`` >= the probed cells' sizes the
-    walk is exhaustive within them, so the result equals ``ivf_topk`` for
-    the same (centroids, nprobe) — pinned in tests; recall vs exact is
-    governed by the probe exactly as in IVF."""
-    from vector_search_question_answer_api_spark.operators.ivf import probe_cells
-
-    centroids, dim = _resolve_centroids_dim(centroids, dim, n_cells)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qvec"),
-    ).withColumn("cells", probe_cells(F.col("qvec"), centroids, nprobe))
-    q_rows = q.select("query_id", "qvec", "cells").collect()
-    by_cell: dict[int, list] = {}
-    for r in q_rows:
-        for c in r["cells"]:
-            by_cell.setdefault(int(c), []).append(
-                (int(r["query_id"]), r["qvec"])
-            )
-    probed = sorted(by_cell)
-
-    def search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for cell, blob in zip(pdf["cell"], pdf["graph"]):
-                routed = by_cell.get(int(cell))
-                if not routed:
-                    continue
-                g = pickle.loads(bytes(blob))
-                g.set_ef(max(ef, k + 1))
-                q_ids = np.array([qid for qid, _ in routed], dtype=np.int64)
-                q_mat = np.array([qv for _, qv in routed], dtype=np.float64)
-                labels, dists = g.knn_query(q_mat, k=k)
-                # drop the graph's disconnection padding
-                # (label -1 / dist +inf) so short results stay short
-                rq, rc = np.nonzero(np.isfinite(dists))
-                yield pd.DataFrame(
-                    {
-                        "query_id": q_ids[rq],
-                        "doc_id": labels[rq, rc],
-                        "distance": dists[rq, rc],
-                    }
-                )
-
-    candidates = graphs.filter(F.col("cell").isin(probed)).mapInPandas(
-        search, schema="query_id long, doc_id long, distance double"
-    )
-    top = topk_per_query(candidates, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
     )
 
 
@@ -1056,9 +983,9 @@ def read_celled_hnsw_index(
     spark: SparkSession, path: str, up_to_batch: "int | None" = None
 ) -> DataFrame:
     """Re-open a materialized cell-routed graph index.  The returned
-    frame drops straight into ``celled_hnsw_topk[_cogrouped]``; passing
-    it through ``filter(F.col("cell").isin(...))`` (as `celled_hnsw_topk`
-    does) prunes to partition directories at the scan.
+    frame drops straight into ``celled_hnsw_topk_cogrouped``; passing
+    it through ``filter(F.col("cell").isin(...))`` prunes to partition
+    directories at the scan.
 
     ``up_to_batch=B`` (r13): the consistency bound — serves iff the
     managed store's last-change batch <= B, RAISES otherwise (in-place
@@ -1083,6 +1010,39 @@ def read_celled_hnsw_index(
     )
 
 
+_CANDIDATES = "query_id long, doc_id long, distance double"
+
+
+def _no_candidates() -> pd.DataFrame:
+    return pd.DataFrame({"query_id": [], "doc_id": [], "distance": []}).astype(
+        {"query_id": "int64", "doc_id": "int64", "distance": "float64"}
+    )
+
+
+def _walk_graph(
+    blob, q_ids: np.ndarray, q_mat: np.ndarray, ef: int, k: int
+) -> pd.DataFrame:
+    """The one per-graph walk both serving shapes run: unpickle ``blob``,
+    search at breadth ``max(ef, k + 1)`` and emit (query_id, doc_id,
+    distance) candidates.  The graph's disconnection padding (label -1 /
+    dist +inf) is dropped so short results stay short, and zero queries
+    give zero rows (``knn_query`` would read an empty matrix as one
+    zero-width query)."""
+    if len(q_ids) == 0:
+        return _no_candidates()
+    g = pickle.loads(bytes(blob))
+    g.set_ef(max(ef, k + 1))
+    labels, dists = g.knn_query(q_mat, k=k)
+    rq, rc = np.nonzero(np.isfinite(dists))
+    return pd.DataFrame(
+        {
+            "query_id": q_ids[rq],
+            "doc_id": labels[rq, rc],
+            "distance": dists[rq, rc],
+        }
+    )
+
+
 def _cogrouped_walk(
     graphs: DataFrame, routed: DataFrame, ef: int, k: int
 ) -> DataFrame:
@@ -1092,37 +1052,18 @@ def _cogrouped_walk(
     (query_id, doc_id, distance) candidates."""
 
     def walk(key, gpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        if gpdf.empty or qpdf.empty:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "distance": []}
-            ).astype({"query_id": "int64", "doc_id": "int64",
-                      "distance": "float64"})
         q_ids = np.asarray(qpdf["query_id"], dtype=np.int64)
         q_mat = np.array(list(qpdf["qvec"]), dtype=np.float64)
-        out = []
         # a cell may hold SEVERAL graph rows (cell_salts shards a hot
         # cell); the shards partition the cell, so walking each and
         # merging candidates is exactly the unsalted cell walk
-        for blob in gpdf["graph"]:
-            g = pickle.loads(bytes(blob))
-            g.set_ef(max(ef, k + 1))
-            labels, dists = g.knn_query(q_mat, k=k)
-            rq, rc = np.nonzero(np.isfinite(dists))
-            out.append(
-                pd.DataFrame(
-                    {
-                        "query_id": q_ids[rq],
-                        "doc_id": labels[rq, rc],
-                        "distance": dists[rq, rc],
-                    }
-                )
-            )
-        return pd.concat(out, ignore_index=True)
+        out = [_walk_graph(blob, q_ids, q_mat, ef, k) for blob in gpdf["graph"]]
+        return pd.concat(out, ignore_index=True) if out else _no_candidates()
 
     return (
         graphs.groupBy("cell")
         .cogroup(routed.select("query_id", "qvec", "cell").groupBy("cell"))
-        .applyInPandas(walk, schema="query_id long, doc_id long, distance double")
+        .applyInPandas(walk, schema=_CANDIDATES)
     )
 
 
@@ -1138,9 +1079,10 @@ def celled_hnsw_topk_cogrouped(
     query_vec_col: str = "qvec",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Cell-routed graph walk for query batches TOO LARGE to collect
-    (VERDICT r5, What's missing #3): the query relation never touches the
-    driver.  Queries explode to their ``nprobe`` probed cells (map-only),
+    """Cell-routed graph walk for query batches of any size (VERDICT r5,
+    What's missing #3): the query relation never touches the driver, so
+    the same plan serves a 1-query request and an offline batch too
+    large to collect.  Queries explode to their ``nprobe`` probed cells (map-only),
     then COGROUP with the graphs table on ``cell`` — each task gets one
     cell's serialized graph plus that cell's routed queries as Arrow
     batches, walks the graph, and emits candidates into the usual global
@@ -1148,9 +1090,10 @@ def celled_hnsw_topk_cogrouped(
     query row, as a plain equi-join would duplicate it), and per-task
     memory is one cell graph + one cell's query slice — both bounded by
     layout choices (n_cells, query partitioning), not by batch size.
-
-    Emits exactly what :func:`celled_hnsw_topk` emits for the same
-    inputs (pinned in tests)."""
+    With ``ef`` >= the probed cells' sizes the walk is exhaustive within
+    them, so the result equals ``ivf_topk`` for the same (centroids,
+    nprobe) — pinned in tests and in the ann_ivf_topk gate; recall vs
+    exact is governed by the probe exactly as in IVF."""
     from vector_search_question_answer_api_spark.operators.ivf import probe_cells
 
     centroids, dim = _resolve_centroids_dim(centroids, dim, n_cells)
@@ -1161,14 +1104,7 @@ def celled_hnsw_topk_cogrouped(
         "cell", F.explode(probe_cells(F.col("qvec"), centroids, nprobe))
     )
     candidates = _cogrouped_walk(graphs, routed, ef, k)
-    top = topk_per_query(candidates, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(candidates, k)
 
 
 def cell_radii(
@@ -1525,116 +1461,11 @@ def celled_hnsw_topk_pruned(
     # merge — tracked persist, released by the caller's cache_scope
     cand1 = persist_tracked(_cogrouped_walk(graphs, routed1, ef, k))
     if nprobe <= 1:
-        top = topk_per_query(cand1, k)
-    else:
-        dk = _phase1_dk(cand1, k)
-        keep = _pruned_phase2_routing(
-            q, dk, centroids, radii, nprobe
-        )
-        cand2 = _cogrouped_walk(graphs, keep, ef, k)
-        top = topk_per_query(cand1.unionByName(cand2), k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
-
-
-def hnsw_topk_chunked(
-    spark: SparkSession,
-    graphs: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    ef: int = 50,
-    chunk_rows: int = 4096,
-    query_vec_col: str = "qvec",
-    query_id_col: str = "query_id",
-    spill_dir: str | None = None,
-) -> DataFrame:
-    """Flat partitioned-HNSW walk for query batches larger than driver
-    memory: iterate the query relation in bounded chunks (``chunk_rows``
-    rows — driver holds at most chunk_rows x dim doubles at a time), run
-    the broadcast walk per chunk, and return the union of the per-chunk
-    top-k results.  Each chunk's merge is independent (top-k is per
-    query), so the union of per-chunk results IS the monolithic result —
-    pinned in tests.
-
-    ``toLocalIterator`` streams one partition at a time, so peak driver
-    memory is max(partition size, chunk size) rows, never the batch.
-    Each chunk's result is EAGERLY spilled to ``spill_dir`` (parquet
-    append) before the next chunk starts — the chunk's local relation,
-    its mapInPandas closure (which captures the chunk's query matrix),
-    and its plan are all released once the write job finishes, so peak
-    driver memory really is one chunk, not the batch, and the returned
-    DataFrame is a single parquet scan whose plan size is constant in
-    the number of chunks (ADVICE r6: the earlier lazy-unionByName form
-    kept every chunk's closure alive until the result executed, making
-    the claimed bound O(batch)).
-
-    ``spill_dir`` is SCRATCH space, not an artifact location: each call
-    writes under a unique ``call-*`` subdirectory of it (the chunk writes
-    are parquet appends, so two calls sharing one directory would silently
-    merge their rows — ADVICE r7), and the result is reachable ONLY via
-    the returned DataFrame's scan of that subdir.  The default is a
-    mkdtemp removed at interpreter exit; an explicit ``spill_dir`` is
-    swept of previous calls' ``call-*`` subdirs on entry (VERDICT r8:
-    otherwise one abandoned subdir accumulates per call), so consume or
-    persist a prior call's result before reusing the same directory.  To
-    keep a result as a reusable artifact, ``.write.parquet(...)`` it to a
-    path you own.  For truly unbounded batches the cell-routed
-    ``celled_hnsw_topk_cogrouped`` remains the zero-spill answer (queries
-    never touch the driver at all)."""
-    import atexit
-    import glob as _glob
-    import shutil
-    import tempfile
-
-    if spill_dir is None:
-        spill_dir = tempfile.mkdtemp(prefix="hnsw_chunk_spill_")
-        atexit.register(shutil.rmtree, spill_dir, ignore_errors=True)
-    else:
-        os.makedirs(spill_dir, exist_ok=True)
-        for p in _glob.glob(os.path.join(spill_dir, "call-*")):
-            shutil.rmtree(p, ignore_errors=True)
-    spill_dir = tempfile.mkdtemp(prefix="call-", dir=spill_dir)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qvec"),
-    )
-    wrote = False
-    ids: list[int] = []
-    vecs: list = []
-
-    def flush() -> None:
-        chunk = spark.createDataFrame(
-            list(zip(ids, vecs)), "query_id long, qvec array<double>"
-        )
-        hnsw_topk(
-            spark, graphs, chunk, k=k, ef=ef,
-            query_vec_col="qvec", query_id_col="query_id",
-        ).write.mode("append").parquet(spill_dir)
-
-    for row in q.toLocalIterator(prefetchPartitions=False):
-        ids.append(int(row["query_id"]))
-        vecs.append([float(x) for x in row["qvec"]])
-        if len(ids) >= chunk_rows:
-            flush()
-            wrote = True
-            ids, vecs = [], []
-    if ids:
-        flush()
-        wrote = True
-    if not wrote:
-        return spark.createDataFrame(
-            [],
-            "query_id long, doc_id long, distance double, "
-            "score double, rank int",
-        )
-    return spark.read.parquet(spill_dir).select(
-        "query_id", "doc_id", "distance", "score", "rank"
-    )
+        return ranked_topk(cand1, k)
+    dk = _phase1_dk(cand1, k)
+    keep = _pruned_phase2_routing(q, dk, centroids, radii, nprobe)
+    cand2 = _cogrouped_walk(graphs, keep, ef, k)
+    return ranked_topk(cand1.unionByName(cand2), k)
 
 
 def knn_graph(
@@ -1660,7 +1491,8 @@ def knn_graph(
     collected) query relation, so the whole n×k construction is two
     cell-keyed shuffles regardless of corpus size — the shape that
     survives 100 TB, vs the n×n similarity join it replaces.  Recall per
-    row is governed by (nprobe, ef) exactly as in ``celled_hnsw_topk``.
+    row is governed by (nprobe, ef) exactly as in
+    ``celled_hnsw_topk_cogrouped``.
 
     ``include_self=False`` (default) drops each row's trivial self-match
     (distance 0) BEFORE the top-k cut, so all k slots hold real
@@ -1687,14 +1519,7 @@ def knn_graph(
     pruned = raw.filter(F.col("query_id") != F.col("doc_id")).select(
         "query_id", "doc_id", "distance"
     )
-    top = topk_per_query(pruned, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(pruned, k)
 
 
 def hnsw_topk(
@@ -1715,28 +1540,7 @@ def hnsw_topk(
     def search(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for blob in pdf["graph"]:
-                g = pickle.loads(bytes(blob))
-                g.set_ef(max(ef, k + 1))
-                labels, dists = g.knn_query(q_mat, k=k)
-                # drop the graph's disconnection padding
-                # (label -1 / dist +inf) so short results stay short
-                rq, rc = np.nonzero(np.isfinite(dists))
-                yield pd.DataFrame(
-                    {
-                        "query_id": q_ids[rq],
-                        "doc_id": labels[rq, rc],
-                        "distance": dists[rq, rc],
-                    }
-                )
+                yield _walk_graph(blob, q_ids, q_mat, ef, k)
 
-    candidates = graphs.mapInPandas(
-        search, schema="query_id long, doc_id long, distance double"
-    )
-    top = topk_per_query(candidates, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    candidates = graphs.mapInPandas(search, schema=_CANDIDATES)
+    return ranked_topk(candidates, k)

@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_search_question_answer_api_spark.functions import vector as V
-from vector_search_question_answer_api_spark.operators.search import topk_per_query
+from vector_search_question_answer_api_spark.operators.search import ranked_topk
 
 DEFAULT_N_CELLS = 16
 DEFAULT_NPROBE = 4
@@ -218,14 +218,7 @@ def ivf_topk(
         "doc_id",
         (F.lit(1.0) - V.dot(F.col("qvec"), F.col("cvec"))).alias("distance"),
     )
-    top = topk_per_query(scored, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(scored, k)
 
 
 def write_ivf_index(
@@ -311,14 +304,7 @@ def ivf_topk_ondisk(
         "doc_id",
         (F.lit(1.0) - V.dot(F.col("qvec"), F.col("cvec"))).alias("distance"),
     )
-    top = topk_per_query(scored, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(scored, k)
 
 
 def train_centroids(

@@ -55,7 +55,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_search_question_answer_api_spark.functions import vector as V
-from vector_search_question_answer_api_spark.operators.search import topk_per_query
+from vector_search_question_answer_api_spark.operators.search import (
+    ranked_topk,
+    topk_per_query,
+)
 
 DEFAULT_M = 8
 DEFAULT_N_CODES = 16
@@ -344,16 +347,8 @@ def pq_topk(
             "doc_id",
             (F.lit(1.0) - V.dot(F.col("qvec"), F.col("cvec"))).alias("distance"),
         )
-        top = topk_per_query(exact, k)
-    else:
-        top = topk_per_query(scored, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+        return ranked_topk(exact, k)
+    return ranked_topk(scored, k)
 
 
 def ivfpq_topk(
@@ -442,14 +437,7 @@ def ivfpq_topk(
         "doc_id",
         (F.lit(1.0) - V.dot(F.col("qvec"), F.col("cvec"))).alias("distance"),
     )
-    top = topk_per_query(shortlist, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(shortlist, k)
 
 
 def write_ivfpq_index(
@@ -806,11 +794,4 @@ def ivfpq_topk_ondisk(
             (F.lit(1.0) - V.dot(F.col("qvec"), F.col("cvec"))).alias("distance"),
         )
     )
-    top = topk_per_query(exact, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(exact, k)

@@ -55,6 +55,21 @@ def topk_per_query(
     return ranked.filter(F.col("rank") <= limit)
 
 
+def ranked_topk(candidates: DataFrame, k) -> DataFrame:
+    """The tier output contract every top-k operator returns:
+    ``(query_id, doc_id, distance, score, rank)`` with ``score = 1 -
+    distance`` (controllers/search_controller.py:37), cut by
+    :func:`topk_per_query` from ``(query_id, doc_id, distance)``
+    candidates."""
+    return topk_per_query(candidates, k).select(
+        "query_id",
+        "doc_id",
+        "distance",
+        (F.lit(1.0) - F.col("distance")).alias("score"),
+        "rank",
+    )
+
+
 def knn_exact_expr(
     queries: DataFrame,
     index: DataFrame,
@@ -83,14 +98,7 @@ def knn_exact_expr(
     if max_distance is not None:
         # P6 gate (reference services/qa_service.py:157, strict '<').
         scored = scored.filter(F.col("distance") < F.lit(max_distance))
-    top = topk_per_query(scored, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(scored, k)
 
 
 def knn_exact_partitioned(
@@ -183,14 +191,7 @@ def knn_exact_partitioned(
     )
     if max_distance is not None:
         candidates = candidates.filter(F.col("distance") < F.lit(max_distance))
-    top = topk_per_query(candidates, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(candidates, k)
 
 
 def attach_documents(results: DataFrame, documents: DataFrame) -> DataFrame:
@@ -270,11 +271,4 @@ def filtered_knn(
         F.col(index_id_col).alias("doc_id")
     )
     pruned = raw.join(keep, "doc_id").select("query_id", "doc_id", "distance")
-    top = topk_per_query(pruned, k)
-    return top.select(
-        "query_id",
-        "doc_id",
-        "distance",
-        (F.lit(1.0) - F.col("distance")).alias("score"),
-        "rank",
-    )
+    return ranked_topk(pruned, k)
