@@ -100,8 +100,6 @@ _SLOW_TESTS = {
     "test_sessions.py::test_sequential_replays_release_tracked_state",  # 6.8s
     # test_spans.py's class tests (TestSpanPurge, TestSpanStore) are not
     # listed: the default tier has always run them and still does
-    "test_streaming.py::test_asof_stream_matches_batch",  # 7.4s
-    "test_streaming.py::test_asof_stream_matches_batch_sf001",  # 7.1s
     "test_streaming.py::test_compaction_grace_period_keeps_inflight_reader_plans_valid",  # 5.7s
     "test_streaming.py::test_embedding_neardup_stream_matches_batch_lsh_tier",  # 8.1s
     "test_streaming.py::test_index_stream_matches_batch_build",  # 8.4s

@@ -137,56 +137,3 @@ def test_bloom_filter_written(spark, tmp_path):
     assert sz(bloom) > sz(plain) + 10_000, (sz(bloom), sz(plain))
     assert spark.read.parquet(bloom).count() == 100_000
 
-
-def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    """Z-order on (x, y): every file covers a small hyper-rectangle, so
-    per-file footer ranges are narrow on BOTH columns — vs a 1-D sort
-    where the second column spans ~the full range in every file."""
-    from vector_search_question_answer_api_spark.sources.compaction import (
-        zorder_write,
-    )
-
-    n = 40_000
-    df = spark.range(n).select(
-        (F.col("id") % 200).alias("x"),
-        (F.col("id") / 200).cast("long").alias("y"),
-        F.col("id").alias("payload"),
-    )
-
-    zpath = str(tmp_path / "zorder")
-    zorder_write(df, zpath, ["x", "y"], bits=6, n_files=16, rows_per_file=n)
-    spath = str(tmp_path / "xsort")
-    compact_write(df, spath, n_files=16, rows_per_file=n, sort_by=["x"])
-
-    def avg_width(path, col, full):
-        rs = layout_stats(path, col)["ranges"]
-        return sum(hi - lo for lo, hi in rs) / len(rs) / full
-
-    # z-order: both dims narrow (each file ~a rectangle of the 200x200 grid)
-    assert avg_width(zpath, "x", 200) < 0.5
-    assert avg_width(zpath, "y", 200) < 0.5
-    # 1-D sort: x perfectly narrow, y spans the full range in every file
-    assert avg_width(spath, "x", 200) < 0.15
-    assert avg_width(spath, "y", 200) > 0.9
-
-    # relation round-trips exactly
-    got = spark.read.parquet(zpath).groupBy().agg(
-        F.count("*").alias("n"), F.sum("payload").alias("s")
-    ).first()
-    assert got["n"] == n and got["s"] == n * (n - 1) // 2
-
-
-def test_zorder_key_is_deterministic_and_bounded(spark):
-    from vector_search_question_answer_api_spark.sources.compaction import (
-        zorder_value,
-    )
-
-    df = spark.range(1000).select(
-        (F.col("id") % 31).alias("a"), (F.col("id") % 17).alias("b")
-    )
-    z1, key = zorder_value(df, ["a", "b"], bits=4)
-    z2, _ = zorder_value(df, ["a", "b"], bits=4)
-    rows1 = sorted(r[key] for r in z1.select(key).collect())
-    rows2 = sorted(r[key] for r in z2.select(key).collect())
-    assert rows1 == rows2
-    assert 0 <= rows1[0] and rows1[-1] < (1 << 8)  # 2 cols x 4 bits

@@ -256,8 +256,8 @@ def test_ivfpq_ondisk_matches_inmemory_and_defers_vectors(
     filter, and the codes artifact is materially smaller than the
     full-vector inverted file."""
     from vector_search_question_answer_api_spark.operators.ivf import (
+        assign_cell,
         train_centroids,
-        write_ivf_index,
     )
     from vector_search_question_answer_api_spark.operators.pq import (
         ivfpq_topk,
@@ -321,8 +321,13 @@ def test_ivfpq_ondisk_matches_inmemory_and_defers_vectors(
     assert not any("nv" in ln or "norm_embedding" in ln for ln in scans), scans
 
     # bytes accounting: codes artifact ≪ the full-vector inverted file
+    # (the same rows with their vectors, partitioned by the same cells)
     vec_path = str(tmp_path / "ivf_vectors")
-    write_ivf_index(idx, vec_path, centroids=cents, dim=64, n_cells=8)
+    idx.select(
+        "doc_id",
+        F.col("norm_embedding").alias("cvec"),
+        assign_cell(F.col("norm_embedding"), cents).alias("cell"),
+    ).write.partitionBy("cell").parquet(vec_path)
     codes_bytes = layout_stats(path)["bytes_total"]
     vec_bytes = layout_stats(vec_path)["bytes_total"]
     assert codes_bytes * 3 < vec_bytes, (codes_bytes, vec_bytes)

@@ -212,31 +212,6 @@ def test_streaming_profile_batch_replay_is_idempotent(spark, docs, tmp_path):
     assert once == twice
 
 
-def test_maintain_profile_streaming_query(spark, docs, tmp_path):
-    """End-to-end through a real Structured Streaming query (file source,
-    availableNow): merged store ≡ one-shot batch sketch."""
-    src = str(tmp_path / "src")
-    docs.select("doc_id", "text", "n_chars").write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).option("maxFilesPerTrigger", 1).parquet(src)
-    path = str(tmp_path / "profile")
-    q = SS.maintain_profile(
-        stream,
-        path,
-        checkpoint=str(tmp_path / "ckpt"),
-        trigger_once=True,
-        depth=3,
-        width=256,
-        n_bins=32,
-    )
-    q.awaitTermination(120)
-    merged = SS.read_profile_cms(spark, path)
-    whole = SK.cms_sketch(SK.token_stream(docs), depth=3, width=256)
-    assert merged.exceptAll(whole).count() == 0
-    assert whole.exceptAll(merged).count() == 0
-
-
 def test_corpus_profile_smoke(spark, docs):
     prof = SK.corpus_profile(docs, k=10, n_bins=32)
     assert prof["n_docs"] == docs.count()

@@ -429,28 +429,6 @@ class TestSpanStore:
         assert got == want
         assert got == {(10, 0, 13), (12, 0, 7)}
 
-    def test_streaming_query_end_to_end(self, spark, tmp_path):
-        from vector_search_question_answer_api_spark.streaming import (
-            span_stream as ST,
-        )
-
-        d = self._docs(spark)
-        src = str(tmp_path / "src")
-        d.write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        path = str(tmp_path / "store")
-        q = ST.maintain_span_store(
-            stream, path, checkpoint=str(tmp_path / "ckpt"), k=8, trigger_once=True
-        )
-        q.awaitTermination(120)
-        got = _spark_spans(ST.corpus_spans_from_store(spark, path, k=8))
-        want = _spark_spans(SP.duplicate_spans(d, k=8))
-        assert got == want and got
-
 
 class TestSpanPurge:
     """r11: purge_deleted_spans — the span store's right-to-be-forgotten

@@ -1,5 +1,6 @@
-"""Structured Streaming twins: windowed rollup == batch rollup; stateful
-session stream == batch replay (incl. state carry across micro-batches)."""
+"""Structured Streaming twins: stateful session stream == batch replay
+(incl. state carry across micro-batches), streaming index maintenance ==
+batch build, near-dup stream == batch LSH tier."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
-from vector_search_question_answer_api_spark.inventory import events_hourly_rollup
 from vector_search_question_answer_api_spark.operators.index_build import build_index
 from vector_search_question_answer_api_spark.operators.sessions import (
     prepare_qa_events,
@@ -18,7 +18,6 @@ from vector_search_question_answer_api_spark.operators.sessions import (
 )
 from vector_search_question_answer_api_spark.sources.tables import load_table
 from vector_search_question_answer_api_spark.streaming.session_stream import attach_session_state
-from vector_search_question_answer_api_spark.streaming.windowed import hourly_rollup_stream
 
 T0 = datetime(2024, 1, 1, 12, 0, 0)
 
@@ -31,35 +30,6 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="vector_search_question_answer_api_spark_stream_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_hourly_rollup_stream_matches_batch(spark, sf_dir, tmpdir):
-    events = load_table(spark, sf_dir, "events")
-    src = f"{tmpdir}/events"
-    events.write.parquet(src)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    out = hourly_rollup_stream(stream)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("rollup_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["hour_ms"], r["event_type"]): (r["n"], r["total_value"])
-            for r in spark.sql("SELECT * FROM rollup_out").collect()
-        }
-    finally:
-        q.stop()
-    expected = {
-        (r["hour_ms"], r["event_type"]): (r["n"], r["total_value"])
-        for r in events_hourly_rollup(spark, sf_dir).collect()
-    }
-    assert got == expected
 
 
 def _run_available_now(spark, out, dest: str, checkpoint: str):
@@ -265,328 +235,6 @@ def test_session_stream_legacy_checkpoint_fails_loudly(spark, tmpdir):
         )
     assert "SCHEMA_NOT_COMPATIBLE" in str(exc.value).upper()
     index.unpersist()
-
-
-def test_search_stream_matches_batch(spark, tmpdir):
-    """The streaming /search loop must produce exactly the batch kNN results
-    for the same queries."""
-    from pyspark.sql import functions as F
-
-    from vector_search_question_answer_api_spark.functions import vector as V
-    from vector_search_question_answer_api_spark.functions import text as TXT
-    from vector_search_question_answer_api_spark.operators.embed import HashingEmbedder
-    from vector_search_question_answer_api_spark.operators.search import knn_exact_expr
-    from vector_search_question_answer_api_spark.sources.tables import load_table
-    from vector_search_question_answer_api_spark.streaming.search_stream import (
-        search_stream_writer,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    index = build_index(docs).cache()
-    queries = spark.createDataFrame(
-        [(i, docs.filter(F.col("doc_id") == i).first()["text"]) for i in range(4)]
-        + [(99, "   ")],  # invalid: blank -> dropped by the P2 gate
-        "query_id long, text string",
-    )
-    src = f"{tmpdir}/qsrc"
-    queries.write.parquet(src)
-    stream = spark.readStream.schema(queries.schema).parquet(src)
-    q = search_stream_writer(
-        stream, index, f"{tmpdir}/qout", f"{tmpdir}/qckpt", k=3
-    )
-    assert q.awaitTermination(120)
-    got = spark.read.parquet(f"{tmpdir}/qout")
-    emb = HashingEmbedder()
-    # two-step: materialize the UDF column, THEN normalize (Spark forbids a
-    # Python UDF inside higher-order-function lambdas)
-    batch_q = (
-        queries.filter(F.col("query_id") != 99)
-        .select("query_id", emb(TXT.preprocess_text(F.col("text"))).alias("e"))
-        .select(
-            "query_id",
-            V.l2_normalize(F.col("e")).cast("array<double>").alias("qvec"),
-        )
-    )
-    want = {
-        (r["query_id"], r["rank"]): r["doc_id"]
-        for r in knn_exact_expr(batch_q, index, k=3).collect()
-    }
-    got_map = {
-        (r["query_id"], r["rank"]): r["doc_id"] for r in got.collect()
-    }
-    assert got_map == want
-    assert not any(k[0] == 99 for k in got_map)  # invalid query filtered
-
-
-def test_session_window_stream_matches_batch_sf001(spark, tmpdir):
-    """Batch == stream for the gap-session operator over the sf0.01 events
-    table (VERDICT r1 next-round #6: equivalence at real gate scale, not
-    toy size)."""
-    from vector_search_question_answer_api_spark.inventory import events_session_windows
-    from vector_search_question_answer_api_spark.streaming.windowed import (
-        session_window_stream,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    events = load_table(spark, sf, "events")
-    src = f"{tmpdir}/events001"
-    events.write.parquet(src)
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    out = session_window_stream(stream)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_win_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["user_id"], r["start_ms"], r["end_ms"], r["n_events"])
-            for r in spark.sql("SELECT * FROM sess_win_out").collect()
-        }
-    finally:
-        q.stop()
-    want = {
-        (r["user_id"], r["start_ms"], r["end_ms"], r["n_events"])
-        for r in events_session_windows(spark, sf).collect()
-    }
-    assert got == want
-
-
-def test_hourly_rollup_stream_matches_batch_sf001(spark, tmpdir):
-    """Batch == stream for the hourly rollup over the sf0.01 events table."""
-    sf = "/root/testdata/sf0.01"
-    events = load_table(spark, sf, "events")
-    src = f"{tmpdir}/events001_hr"
-    events.write.parquet(src)
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    out = hourly_rollup_stream(stream)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("rollup_out_001")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["hour_ms"], r["event_type"], r["n"], r["total_value"])
-            for r in spark.sql("SELECT * FROM rollup_out_001").collect()
-        }
-    finally:
-        q.stop()
-    want = {
-        (r["hour_ms"], r["event_type"], r["n"], r["total_value"])
-        for r in events_hourly_rollup(spark, sf).collect()
-    }
-    assert got == want
-
-
-def test_dedup_stream_matches_batch_survivors(spark, sf_dir, tmpdir):
-    """Streaming first-occurrence dedup == batch min-doc_id survivors when
-    arrival order is doc_id order (documents get synthetic increasing ts)."""
-    from vector_search_question_answer_api_spark.operators.dedup import (
-        dedup_exact_survivors,
-    )
-    from vector_search_question_answer_api_spark.streaming.dedup_stream import (
-        dedup_stream_exact,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.timestamp_millis(
-            F.lit(1704067200000) + F.col("doc_id") * 1000
-        ).alias("ts"),
-        "text",
-    )
-    src = f"{tmpdir}/docstream"
-    docs.write.parquet(src)
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    out = dedup_stream_exact(stream, watermark="10 minutes")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{tmpdir}/dedup_out")
-        .option("checkpointLocation", f"{tmpdir}/dedup_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "dedup stream did not finish"
-    got = {
-        (r["doc_id"], r["fp"])
-        for r in spark.read.parquet(f"{tmpdir}/dedup_out").collect()
-    }
-    want = {
-        (r["doc_id"], r["fp"])
-        for r in dedup_exact_survivors(
-            load_table(spark, sf_dir, "documents")
-        ).collect()
-    }
-    assert got == want
-
-
-def test_asof_stream_matches_batch(spark, tmpdir):
-    """Streaming as-of join == batch as-of join over sf0.001 events
-    (clicks vs purchases), state carried across two time-ordered
-    micro-batches; with and without tolerance."""
-    from vector_search_question_answer_api_spark.operators.temporal import asof_join
-    from vector_search_question_answer_api_spark.streaming.asof_stream import (
-        asof_join_stream,
-    )
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    src = f"{tmpdir}/events_halves"
-    # two files split by event-time so each key's rows arrive in order
-    tmid = events.agg(F.expr("percentile(unix_millis(ts), 0.5)")).collect()[0][0]
-    events.filter(F.unix_millis("ts") <= tmid).coalesce(1).write.parquet(
-        f"{src}/p1"
-    )
-    events.filter(F.unix_millis("ts") > tmid).coalesce(1).write.parquet(
-        f"{src}/p2"
-    )
-
-    for tol in (None, 6 * 3600 * 1000):
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
-        )
-        lstream = stream.filter(F.col("event_type") == "click").select(
-            "user_id", "event_id", "ts"
-        )
-        rstream = stream.filter(F.col("event_type") == "purchase").select(
-            "user_id", "event_id", "ts", "value"
-        )
-        out = asof_join_stream(lstream, rstream, tolerance_ms=tol)
-        qname = f"asof_out_{'none' if tol is None else tol}"
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", f"{tmpdir}/ckpt_{qname}")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                r["event_id"]: (
-                    r["asof_event_id"],
-                    r["asof_value"],
-                    r["asof_ts"],
-                )
-                for r in spark.sql(f"SELECT * FROM {qname}").collect()
-            }
-        finally:
-            q.stop()
-
-        clicks = events.filter(F.col("event_type") == "click").select(
-            "user_id", "event_id", "ts"
-        )
-        purchases = events.filter(F.col("event_type") == "purchase").select(
-            "user_id", "event_id", "ts", "value"
-        )
-        expected = {
-            r["event_id"]: (r["asof_event_id"], r["asof_value"], r["asof_ts"])
-            for r in asof_join(
-                clicks,
-                purchases,
-                on="user_id",
-                right_id="event_id",
-                payload_cols=["value"],
-                tolerance_ms=tol,
-            ).collect()
-        }
-        assert len(got) == len(expected) > 0
-        mismatches = {
-            k: (got[k], expected[k])
-            for k in expected
-            if got.get(k) != expected[k]
-        }
-        assert not mismatches, f"tol={tol}: {len(mismatches)} mismatches: {list(mismatches.items())[:3]}"
-
-
-def test_asof_stream_matches_batch_sf001(spark, tmpdir):
-    """Batch == stream for the as-of join over the sf0.01 events table
-    (VERDICT r3 #5: the session/dedup streams got sf0.01 equivalence runs
-    in r2; this promotes the as-of stream too).  Four time-ordered
-    micro-batches, full value comparison."""
-    from vector_search_question_answer_api_spark.operators.temporal import asof_join
-    from vector_search_question_answer_api_spark.streaming.asof_stream import (
-        asof_join_stream,
-    )
-
-    events = load_table(spark, "/root/testdata/sf0.01", "events")
-    src = f"{tmpdir}/events001_asof"
-    qs = events.approxQuantile("event_id", [0.25, 0.5, 0.75], 0.0)
-    # split by event_id quantiles of the TS-ordered table: events are
-    # written time-ordered, so id quartiles are time quartiles
-    bounds = [int(x) for x in qs]
-    ts_bounds = (
-        events.filter(F.col("event_id").isin(bounds))
-        .select("event_id", F.unix_millis("ts").alias("ms"))
-        .collect()
-    )
-    cuts = sorted(r["ms"] for r in ts_bounds)
-    lo = None
-    for i, hi in enumerate([*cuts, None]):
-        part = events
-        if lo is not None:
-            part = part.filter(F.unix_millis("ts") > lo)
-        if hi is not None:
-            part = part.filter(F.unix_millis("ts") <= hi)
-        part.coalesce(1).write.parquet(f"{src}/p{i}")
-        lo = hi
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    lstream = stream.filter(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts"
-    )
-    rstream = stream.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    out = asof_join_stream(lstream, rstream)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("asof_out_001")
-        .option("checkpointLocation", f"{tmpdir}/ckpt_asof_001")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r["event_id"]: (r["asof_event_id"], r["asof_value"], r["asof_ts"])
-            for r in spark.sql("SELECT * FROM asof_out_001").collect()
-        }
-    finally:
-        q.stop()
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts"
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", "ts", "value"
-    )
-    expected = {
-        r["event_id"]: (r["asof_event_id"], r["asof_value"], r["asof_ts"])
-        for r in asof_join(
-            clicks,
-            purchases,
-            on="user_id",
-            right_id="event_id",
-            payload_cols=["value"],
-        ).collect()
-    }
-    assert len(got) == len(expected) > 0
-    mismatches = {
-        k: (got.get(k), expected[k])
-        for k in expected
-        if got.get(k) != expected[k]
-    }
-    assert not mismatches, f"{len(mismatches)} mismatches: {list(mismatches.items())[:3]}"
 
 
 def test_index_stream_matches_batch_build(spark, tmpdir):

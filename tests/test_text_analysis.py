@@ -6,9 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vector_search_question_answer_api_spark.operators.text_analysis import (
-    lang_scores,
-    quality_scores,
-    token_stats,
+    text_metrics,
 )
 
 
@@ -29,7 +27,7 @@ def synth_docs(spark):
 
 
 def test_token_stats(synth_docs):
-    got = {r["doc_id"]: r for r in token_stats(synth_docs).collect()}
+    got = {r["doc_id"]: r for r in text_metrics(synth_docs).collect()}
     assert got[0]["n_tokens"] == 11
     assert got[0]["n_uniq_tokens"] == 10  # 'the' twice
     assert got[4]["n_tokens"] == 0
@@ -41,7 +39,9 @@ def test_token_stats(synth_docs):
 
 
 def test_lang_id(synth_docs):
-    got = {r["doc_id"]: r["guessed_lang"] for r in lang_scores(synth_docs).collect()}
+    got = {
+        r["doc_id"]: r["guessed_lang"] for r in text_metrics(synth_docs).collect()
+    }
     assert got[0] == "en"
     assert got[1] == "es"
     assert got[2] == "de"
@@ -50,7 +50,7 @@ def test_lang_id(synth_docs):
 
 
 def test_quality_scores(synth_docs):
-    got = {r["doc_id"]: r for r in quality_scores(synth_docs).collect()}
+    got = {r["doc_id"]: r for r in text_metrics(synth_docs).collect()}
     for r in got.values():
         assert 0.0 <= r["quality_score"] <= 1.0
     # well-formed english text scores high
@@ -141,63 +141,21 @@ def test_winnowing_edge_cases(spark):
 
 
 def test_repetition_scores_flags_degenerate_text(spark):
-    from vector_search_question_answer_api_spark.operators.text_analysis import (
-        repetition_scores,
-    )
-
     docs = spark.createDataFrame(
         [
-            (0, "spam spam spam spam spam spam"),
-            (1, "every token in this sentence differs from the others fully"),
-            (2, ""),
+            (0, "spam spam spam spam spam spam", "en"),
+            (1, "every token in this sentence differs from the others fully", "en"),
+            (2, "", "en"),
         ],
-        "doc_id long, text string",
+        "doc_id long, text string, lang string",
     )
-    got = {r["doc_id"]: r for r in repetition_scores(docs).collect()}
+    got = {r["doc_id"]: r for r in text_metrics(docs).collect()}
     assert got[0]["top_token_frac"] == 1.0
     assert got[0]["top_bigram_frac"] == 1.0
     assert got[0]["uniq_bigram_frac"] < 0.5
     assert got[1]["top_token_frac"] < 0.2
     assert got[1]["uniq_bigram_frac"] == 1.0
     assert got[2]["n_tokens"] == 0 and got[2]["top_token_frac"] == 0.0
-
-
-def test_text_metrics_equals_constituent_functions(spark):
-    """The consolidated one-pass text_metrics relation (r4) must equal the
-    join of the four functions it replaced, column for column."""
-    from vector_search_question_answer_api_spark.operators.text_analysis import (
-        lang_scores,
-        quality_scores,
-        repetition_scores,
-        text_metrics,
-        token_stats,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (0, "The quick brown fox jumps over the lazy dog", "en"),
-            (1, "el la de y que en un una es por si", "es"),
-            (2, "spam spam spam spam spam", "en"),
-            (3, "", "fr"),
-            (4, None, "de"),
-            (5, "word", "en"),
-        ],
-        "doc_id long, text string, lang string",
-    )
-    joined = (
-        token_stats(docs)
-        .join(repetition_scores(docs).drop("n_tokens"), "doc_id")
-        .join(lang_scores(docs), "doc_id")
-        .join(quality_scores(docs).drop("n_tokens", "mean_token_len"), "doc_id")
-    )
-    got = {r["doc_id"]: r.asDict() for r in text_metrics(docs).collect()}
-    want = {r["doc_id"]: r.asDict() for r in joined.collect()}
-    assert set(got) == set(want)
-    for doc_id, w in want.items():
-        g = got[doc_id]
-        assert set(g) == set(w), (set(g) ^ set(w))
-        for col, val in w.items():
-            assert g[col] == val, (doc_id, col, g[col], val)
 
 
 def test_top_frac_equals_counter_reference(spark):

@@ -100,32 +100,29 @@ def test_clamp_k(spark):
     assert out == [3, 1, 3, 20, 20, 20]
 
 
-def test_fold_history(spark):
-    df = spark.createDataFrame(
-        [
-            (
-                [
-                    {"question": "q1", "answer": "a1"},
-                    {"question": "q2", "answer": "a2"},
-                ],
-            )
-        ],
-        "history array<struct<question:string,answer:string>>",
+
+def test_stub_answer_forms_agree(spark):
+    """The replay fold answers with ``stub_answer_py`` and the stateless
+    QA gate with the Column ``stub_answer``: the same string for a missing,
+    a short and a >60-char context, and a short and a >60-char question."""
+    from vector_search_question_answer_api_spark.operators.qa import (
+        stub_answer,
+        stub_answer_py,
     )
-    out = df.select(TXT.fold_history(F.col("history"))).collect()[0][0]
-    assert out == "Q: q1\nA: a1\nQ: q2\nA: a2\n"
 
-
-def test_word_shingles(spark):
-    df = spark.createDataFrame([("a b c d",), ("a b",), ("",)], "t string")
-    out = [
-        r[0]
-        for r in df.select(TXT.word_shingles(F.col("t"), 3).alias("s")).collect()
-    ]
-    assert out[0] == ["a b c", "b c d"]
-    assert out[1] == []
-    assert out[2] == []
-
+    contexts = [None, "doc:7", "a long retrieved product context " * 3]
+    questions = ["which strain helps sleep?", "and what about daytime use " * 4]
+    df = spark.createDataFrame(
+        [(c, q) for c in contexts for q in questions],
+        "context string, question string",
+    )
+    got = df.select(
+        "context", "question",
+        stub_answer(F.col("context"), F.col("question")).alias("answer"),
+    ).collect()
+    assert len(got) == 6
+    for r in got:
+        assert r["answer"] == stub_answer_py(r["context"], r["question"]), r
 
 @pytest.mark.parametrize(
     "text,expected",

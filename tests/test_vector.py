@@ -1,4 +1,4 @@
-"""V5-V7 vector function tests vs numpy, plus property-style checks
+"""V6/V7 vector function tests vs numpy, plus property-style checks
 (SURVEY.md §5.1/5.6)."""
 
 from __future__ import annotations
@@ -38,23 +38,6 @@ def np_cos(a, b):
     return float(np.dot(a, b) / (na * nb))
 
 
-def test_cosine_matches_numpy(vec_df):
-    got = vec_df.select(
-        "i", "j", V.cosine_similarity(F.col("a"), F.col("b")).alias("sim")
-    ).collect()
-    for r in got:
-        expected = np_cos(np.array(VECS[r["i"]]), np.array(VECS[r["j"]]))
-        assert abs(r["sim"] - expected) < 1e-12
-
-
-def test_distance_bounds(vec_df):
-    got = vec_df.select(
-        V.cosine_distance(F.col("a"), F.col("b")).alias("d")
-    ).collect()
-    for r in got:
-        assert -1e-12 <= r["d"] <= 2.0 + 1e-12
-
-
 def test_normalize_unit_norm(spark):
     df = spark.createDataFrame([(v,) for v in VECS], "v array<double>")
     got = df.select(V.l2_norm(V.l2_normalize(F.col("v"))).alias("n")).collect()
@@ -65,12 +48,27 @@ def test_normalize_unit_norm(spark):
             assert abs(r["n"] - 1.0) < 1e-12
 
 
-def test_normalize_then_dot_equals_cosine(vec_df):
+def test_cosine_matches_numpy(vec_df):
+    # the engine's cosine: dot of L2-normalized vectors (0 for a zero vector)
     got = vec_df.select(
         "i",
         "j",
-        V.dot(V.l2_normalize(F.col("a")), V.l2_normalize(F.col("b"))).alias("d"),
-        V.cosine_similarity(F.col("a"), F.col("b")).alias("s"),
+        V.dot(V.l2_normalize(F.col("a")), V.l2_normalize(F.col("b"))).alias("sim"),
+    ).collect()
+    for r in got:
+        expected = np_cos(np.array(VECS[r["i"]]), np.array(VECS[r["j"]]))
+        assert abs(r["sim"] - expected) < 1e-12
+
+
+def test_normalize_then_dot_equals_cosine(vec_df):
+    # normalize-then-dot equals dot / (|a| |b|) built from the same columns
+    a, b = F.col("a"), F.col("b")
+    na, nb = V.l2_norm(a), V.l2_norm(b)
+    got = vec_df.select(
+        V.dot(V.l2_normalize(a), V.l2_normalize(b)).alias("d"),
+        F.when((na > 0) & (nb > 0), V.dot(a, b) / (na * nb))
+        .otherwise(F.lit(0.0))
+        .alias("s"),
     ).collect()
     for r in got:
         assert abs(r["d"] - r["s"]) < 1e-12

@@ -2,8 +2,9 @@
 data-processing capabilities of the reference vector-search QA API
 (``neirinzaralwin/vector-search-question-answer-api``), re-expressed Spark-first.
 
-The engine is a library of composable DataFrame transformations plus two
-pluggable UDF seams (embedder, generator) — not a web server.  Parity targets
+The engine is a library of composable DataFrame transformations plus a
+pluggable embedder UDF seam and a deterministic stub answer generator
+(``operators/qa``) — not a web server.  Parity targets
 are catalogued in SURVEY.md §2; every operator cites the reference file:line
 it re-expresses.
 """

@@ -79,19 +79,6 @@ def truncate_ellipsis(col: Column, n: int = 100) -> Column:
     ).otherwise(col)
 
 
-def fold_history(history: Column) -> Column:
-    """F10: conversation-history fold to text — ``Q: …\\nA: …\\n`` per
-    exchange (reference services/qa_service.py:76-81). Higher-order
-    function, no UDF."""
-    return F.array_join(
-        F.transform(
-            history,
-            lambda x: F.format_string("Q: %s\nA: %s\n", x["question"], x["answer"]),
-        ),
-        "",
-    )
-
-
 def assemble_prompt(context: Column, history_text: Column, question: Column) -> Column:
     """F9: prompt template interpolation (reference services/qa_service.py:84-94)."""
     return F.format_string(
@@ -116,11 +103,6 @@ def valid_query(col: Column, max_chars: int = 500) -> Column:
 def clamp_k(col: Column, default_k: int = 3, max_k: int = 20) -> Column:
     """P4+P5: k default and clamp (reference controllers/search_controller.py:13)."""
     return F.least(F.coalesce(col.cast("int"), F.lit(default_k)), F.lit(max_k))
-
-
-def iso_timestamp() -> Column:
-    """F11 (reference controllers/index_controller.py:17)."""
-    return F.date_format(F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
 
 
 # Tokenization for text analytics / dedup (engine extension; whitespace
@@ -156,8 +138,3 @@ def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
             ).otherwise(F.concat(a, F.lit(" "), b)),
         )
     return F.filter(out, lambda s: s.isNotNull())
-
-
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """k-word shingles of raw text (tokenize + shingle in one expression)."""
-    return word_shingles_from_tokens(tokens(col), k)

@@ -66,14 +66,3 @@ def l2_normalize(a: Column) -> Column:
             a, F.array_repeat(n, F.size(a)), lambda x, nn: x.cast("double") / nn
         )
     )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """V5/V6: cos(a,b); 0 when either vector is zero."""
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(a, b) / denom)
-
-
-def cosine_distance(a: Column, b: Column) -> Column:
-    """V5: ``1 - cos`` (hnswlib cosine-space distance)."""
-    return F.lit(1.0) - cosine_similarity(a, b)

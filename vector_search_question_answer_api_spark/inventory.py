@@ -26,6 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from vector_search_question_answer_api_spark.config import DEFAULT_CONFIG
 from vector_search_question_answer_api_spark.functions import text as TXT
 from vector_search_question_answer_api_spark.functions import vector as V
 from vector_search_question_answer_api_spark.operators.search import knn_exact_expr
@@ -486,9 +487,8 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 via the NATIVE session-window operator: F.session_window merges
-    gap<=30min events in one grouped agg (streaming twin:
-    streaming/windowed.session_window_stream shares the expression).
-    Window end = last event + gap, matching the oracle's max(ts)+30min."""
+    gap<=30min events in one grouped agg.  Window end = last event + gap,
+    matching the oracle's max(ts)+30min."""
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(
@@ -1286,8 +1286,6 @@ def search_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stateful replay as rows-only (embedder UDF + keyed fold are not
 # SQL-expressible).
 
-_FALLBACK_CTX = "No specific product information is available."
-
 _QA_PROMPT_SQL = f"""
     WITH n AS (SELECT count(*) AS n_docs FROM documents),
     base AS (
@@ -1303,7 +1301,7 @@ _QA_PROMPT_SQL = f"""
     answered AS (
       SELECT *,
              concat('Answer about [',
-                    substr(coalesce(context_text, '{_FALLBACK_CTX}'), 1, 60),
+                    substr(coalesce(context_text, '{DEFAULT_CONFIG.fallback_context}'), 1, 60),
                     ']: ', substr(question, 1, 60)) AS answer
       FROM base
     ),
@@ -1318,7 +1316,7 @@ _QA_PROMPT_SQL = f"""
     )
     SELECT event_id, session_id, question, answer,
            concat('You are a helpful product assistant.', chr(10),
-                  'Context: ', coalesce(context_text, '{_FALLBACK_CTX}'), chr(10),
+                  'Context: ', coalesce(context_text, '{DEFAULT_CONFIG.fallback_context}'), chr(10),
                   'Conversation so far:', chr(10), history_text,
                   'Question: ', question, chr(10), 'Answer:') AS prompt,
            CAST(json_object('question', question, 'answer', answer,
@@ -1339,6 +1337,7 @@ def qa_prompt_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer — all native Catalyst exprs (reference services/qa_service.py:
     67-94).  Questions/contexts derive deterministically from events x
     documents."""
+    from vector_search_question_answer_api_spark.operators.qa import stub_answer
     from vector_search_question_answer_api_spark.sources.sinks import (
         qa_response_json,
     )
@@ -1371,14 +1370,11 @@ def qa_prompt_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    ctx = F.coalesce(F.col("context_text"), F.lit(_FALLBACK_CTX))
+    ctx = F.coalesce(
+        F.col("context_text"), F.lit(DEFAULT_CONFIG.fallback_context)
+    )
     answered = base.withColumn(
-        "answer",
-        F.format_string(
-            "Answer about [%s]: %s",
-            F.substring(ctx, 1, 60),
-            F.substring(F.col("question"), 1, 60),
-        ),
+        "answer", stub_answer(F.col("context_text"), F.col("question"))
     )
     w = (
         Window.partitionBy("session_id")
@@ -1402,16 +1398,7 @@ def qa_prompt_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         hist.withColumn(
             "prompt",
-            F.format_string(
-                "You are a helpful product assistant.\n"
-                "Context: %s\n"
-                "Conversation so far:\n%s"
-                "Question: %s\n"
-                "Answer:",
-                ctx,
-                F.col("history_text"),
-                F.col("question"),
-            ),
+            TXT.assemble_prompt(ctx, F.col("history_text"), F.col("question")),
         )
         .select(
             "event_id", "session_id", "question", "answer", "prompt",
@@ -2127,12 +2114,12 @@ _STOPLIST_SQL = {
     """,
 )
 def text_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consolidated per-document text analytics (r4: the former
-    token_stats + repetition_scores + lang_id_heuristic + quality_scores
-    gates as ONE oracle-hashed relation): token/char/BPE-ish counts,
-    Gopher-style repetition diagnostics, stopword lang-ID, and the
-    composite quality heuristic — a single map-only projection over staged
-    (toks, bg) arrays, no joins, no shuffle (one scan at any scale)."""
+    """Consolidated per-document text analytics (r4: the former token,
+    repetition, lang-ID and quality gates as ONE oracle-hashed relation):
+    token/char/BPE-ish counts, Gopher-style repetition diagnostics,
+    stopword lang-ID, and the composite quality heuristic — a single
+    map-only projection over staged (toks, bg) arrays, no joins, no
+    shuffle (one scan at any scale)."""
     from vector_search_question_answer_api_spark.operators.text_analysis import (
         text_metrics,
     )

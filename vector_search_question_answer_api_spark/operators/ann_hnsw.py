@@ -181,11 +181,10 @@ def build_celled_hnsw(
 def write_celled_hnsw_index(graphs: DataFrame, path: str) -> None:
     """Materialize the cell-routed graph index: ``(n, graph)`` parquet
     ``partitionBy("cell")`` — the cell directories ARE the coarse index
-    (the same layout rule as ``ivf.write_ivf_index`` /
-    ``pq.write_ivfpq_index``), one serialized graph blob per cell, so a
-    query batch lists and reads only its probed cells' directories.
-    Graph blobs round-trip byte-identically through parquet binary
-    columns (pinned in tests)."""
+    (the same layout rule as ``pq.write_ivfpq_index``), one serialized
+    graph blob per cell, so a query batch lists and reads only its probed
+    cells' directories.  Graph blobs round-trip byte-identically through
+    parquet binary columns (pinned in tests)."""
     graphs.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 

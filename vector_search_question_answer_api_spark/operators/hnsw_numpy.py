@@ -336,7 +336,11 @@ class NumpyHNSW:
         down), matching hnswlib."""
         if self.vecs is None or not len(self.links):
             raise ValueError("empty index")
-        qmat = np.atleast_2d(np.asarray(qmat, dtype=np.float64))
+        qmat = np.asarray(qmat, dtype=np.float64)
+        if qmat.size == 0:
+            # no queries, not one zero-width query
+            qmat = qmat.reshape(0, self.vecs.shape[1])
+        qmat = np.atleast_2d(qmat)
         k = min(k, self.get_current_count())
         ef = max(self.ef if ef is None else ef, k)
         out_l = np.full((len(qmat), k), -1, dtype=np.int64)

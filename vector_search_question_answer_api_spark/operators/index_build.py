@@ -2,8 +2,9 @@
 
 Reference: startup ``init_index_service`` scans the corpus, preprocesses,
 batch-embeds, and builds an HNSW graph persisted to disk
-(services/index_service.py:49-96); ``refresh_index`` is a full rebuild
-(services/index_service.py:112-115).
+(services/index_service.py:49-96); its refresh endpoint is a full rebuild
+(services/index_service.py:112-115) — here ``build_index`` + ``save_index``,
+or the incremental ``streaming/ingest_stream.maintain_corpus``.
 
 Spark-first re-expression: the "index" is DATA, not a graph — a parquet
 table of L2-normalized embeddings keyed by ``doc_id``, overwritten on
@@ -76,14 +77,3 @@ def is_fresh(index: DataFrame, documents: DataFrame) -> bool:
     services/index_service.py:75-77 rebuilds iff
     ``index.get_current_count() != len(products_data)``)."""
     return index.count() == documents.count()
-
-
-def refresh_index(
-    spark: SparkSession, documents: DataFrame, path: str, embedder=None
-) -> DataFrame:
-    """POST /refresh-index semantics: unconditional full rebuild + overwrite
-    (reference controllers/index_controller.py:8-21 ->
-    services/index_service.py:112-115)."""
-    index = build_index(documents, embedder)
-    save_index(index, path)
-    return load_index(spark, path)

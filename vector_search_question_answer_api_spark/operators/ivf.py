@@ -19,9 +19,10 @@ natively because it is *pure data partitioning*:
 Scale shape: cell assignment is embarrassingly parallel; the probe join is
 a broadcast (queries small) or shuffled hash join on ``cell`` whose key
 cardinality (n_cells) is chosen to match the cluster (e.g. 4-16x executor
-count at 100 TB, giving both pruning and parallelism).  The corpus can be
-physically ``repartition("cell")``-ed / bucketed once so repeated query
-batches join co-located — the on-disk layout IS the inverted file.
+count at 100 TB, giving both pruning and parallelism).  The served on-disk
+forms are the managed cell stores (``pq.write_ivfpq_index`` and the
+celled-graph store in ``ann_hnsw``): the partition column IS the coarse
+quantizer, so a probe reads only the probed cells.
 
 Two centroid sources:
 
@@ -213,92 +214,6 @@ def ivf_topk(
         .select("query_id", "qvec", F.explode("cells").alias("cell"))
     )
     cand = c.join(F.broadcast(q), "cell")
-    scored = cand.select(
-        "query_id",
-        "doc_id",
-        (F.lit(1.0) - V.dot(F.col("qvec"), F.col("cvec"))).alias("distance"),
-    )
-    return ranked_topk(scored, k)
-
-
-def write_ivf_index(
-    index: DataFrame,
-    path: str,
-    centroids=None,
-    dim: int | None = None,
-    n_cells: int = DEFAULT_N_CELLS,
-    index_vec_col: str = "norm_embedding",
-    index_id_col: str = "doc_id",
-) -> None:
-    """Materialize the ON-DISK inverted file: assign every vector its cell
-    once, then write parquet ``partitionBy("cell")`` — one directory per
-    cell.  This is the physical layout the module docstring promises at
-    100 TB: the partition column IS the coarse quantizer, so a query batch
-    that probes ``nprobe`` of ``n_cells`` cells reads only those
-    directories (partition pruning at the scan — no assignment recompute,
-    no full-corpus read, ever)."""
-    if centroids is None:
-        dim = _resolve_dim(centroids, dim, index, index_vec_col)
-        centroids = centroid_grid(dim, n_cells)
-    else:
-        _resolve_dim(centroids, dim)
-    assigned = index.select(
-        F.col(index_id_col).alias("doc_id"),
-        F.col(index_vec_col).alias("cvec"),
-    ).withColumn("cell", assign_cell(F.col("cvec"), centroids))
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-
-def ivf_topk_ondisk(
-    spark,
-    queries: DataFrame,
-    path: str,
-    centroids=None,
-    k: int = 3,
-    dim: int | None = None,
-    n_cells: int = DEFAULT_N_CELLS,
-    nprobe: int = DEFAULT_NPROBE,
-    query_vec_col: str = "qvec",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Approximate cosine top-k against the partitioned on-disk inverted
-    file.  The probed-cell set is pushed as a STATIC partition filter
-    (``cell IN (...)``) so only nprobe/n_cells of the corpus directories
-    are scanned — the plan shows it in ``PartitionFilters``; pinned by
-    tests/test_ann.py.
-
-    The probed-cell union is computed driver-side from the query vectors
-    (queries are the small side by the same contract as every kNN entry
-    point; the cell set is at most n_cells values regardless of query
-    count).  Emits exactly what ``ivf_topk`` emits for the same inputs.
-    """
-    if centroids is None:
-        dim = _resolve_dim(centroids, dim, queries, query_vec_col)
-        centroids = centroid_grid(dim, n_cells)
-    else:
-        _resolve_dim(centroids, dim)
-    q = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("qvec"),
-        )
-        .withColumn("cells", probe_cells(F.col("qvec"), centroids, nprobe))
-    )
-    # distinct BEFORE collect: the driver sees at most n_cells rows no
-    # matter how large the query batch is (same bound-the-collect fix as
-    # pq.ivfpq_topk_ondisk — collecting one row per query scaled with the
-    # batch and contradicted the docstring's n_cells bound).
-    probed = sorted(
-        int(r["cell"])
-        for r in q.select(F.explode("cells").alias("cell")).distinct().collect()
-    )
-    qx = q.select("query_id", "qvec", F.explode("cells").alias("cell"))
-    from vector_search_question_answer_api_spark.sources.cell_store import (
-        open_cell_table,
-    )
-
-    corpus = open_cell_table(spark, path).filter(F.col("cell").isin(probed))
-    cand = corpus.join(F.broadcast(qx), "cell")
     scored = cand.select(
         "query_id",
         "doc_id",

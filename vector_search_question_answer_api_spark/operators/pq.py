@@ -40,8 +40,8 @@ Python in the scan path):
   ordering — precision of the final ranking is restored at the cost of
   fetching ``refine*k`` full vectors per query (FAISS's IVFPQ+R shape).
 
-Compose with IVF for the full 100 TB layout: ``write_ivf_index`` the
-*codes* table partitioned by coarse cell, probe nprobe cells, ADC-score
+Compose with IVF for the full 100 TB layout: ``write_ivfpq_index`` writes
+the *codes* table partitioned by coarse cell, probe nprobe cells, ADC-score
 inside them (coarse pruning x 32x payload compression multiply).
 """
 
@@ -374,8 +374,8 @@ def ivfpq_topk(
     (nprobe/n_cells) x (1/32) x corpus.
 
     Cell assignment and PQ encoding are both map-only; in production both
-    are materialized ONCE (``ivf.write_ivf_index`` over the codes table —
-    partition dirs ARE the cells) so a query batch scans only probed-cell
+    are materialized ONCE (:func:`write_ivfpq_index` over the codes table
+    — partition dirs ARE the cells) so a query batch scans only probed-cell
     directories of byte codes.  Here the composition is expressed over the
     in-memory frames; the candidate join is the same broadcast-queries
     equi-join on ``cell`` as ``ivf.ivf_topk``.
@@ -452,7 +452,7 @@ def write_ivfpq_index(
 ) -> None:
     """Materialize the on-disk IVFPQ layout: ``(doc_id, codes)`` parquet
     ``partitionBy("cell")`` — the cell directories ARE the coarse index
-    (as ``ivf.write_ivf_index``) and the payload per row is ``m`` small
+    (as in the managed cell stores) and the payload per row is ``m`` small
     ints instead of ``dim`` floats (~32x).  The vector column is DROPPED
     from the artifact by construction, so no read of this table can ever
     touch vector bytes — the deferred-fetch contract of

@@ -1,29 +1,29 @@
-"""QA generation seam (U2) + prompt assembly — the stateless half of the
-/qa pipeline (SURVEY.md §3.2 steps f-i).
+"""QA answer generation — the U2 generator seam of the /qa pipeline
+(SURVEY.md §3.2 steps f-i).
 
 Reference: prompt template at services/qa_service.py:84-94, history fold at
 :76-81, generic fallback context at :67-73, generation via Ollama HTTP POST
 at :99-111 (temperature 0.7, top_p 0.9, max_tokens 300).
 
-The generator is a pluggable seam exactly like the embedder (U1):
+The engine answers with the deterministic stub the SURVEY.md §5 test double
+describes: the answer is a pure function of (context, question), in two
+forms that must agree (pinned in tests/test_text_functions.py):
 
-- ``StubGenerator`` — deterministic template echo (the SURVEY.md §5 test
-  double): answer is a pure function of (context, question).
-- ``OllamaGenerator`` — the production seam: batch HTTP inside
-  ``mapInPandas`` (one session per partition batch, amortized connections);
-  requires a reachable server, so constructing it here raises unless
-  configured.
+- :func:`stub_answer` — a native Catalyst expression, used by the stateless
+  ``qa_prompt_pipeline`` gate next to ``functions/text.assemble_prompt``;
+- :func:`stub_answer_py` — the same template in Python, used inside the
+  stateful session fold (``operators/sessions.replay_sessions``).
+
+A real model slots in where these are called: batch HTTP POSTs per Arrow
+batch inside ``mapInPandas``, one session per partition batch.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from vector_search_question_answer_api_spark.config import DEFAULT_CONFIG
-from vector_search_question_answer_api_spark.functions import text as TXT
 
 
 def stub_answer_py(context: str | None, question: str) -> str:
@@ -33,52 +33,12 @@ def stub_answer_py(context: str | None, question: str) -> str:
     return f"Answer about [{ctx[:60]}]: {question[:60]}"
 
 
-@dataclass(frozen=True)
-class StubGenerator:
-    """U2 test double — expressible as a native Catalyst expression, so the
+def stub_answer(context: Column, question: Column) -> Column:
+    """Deterministic template answer as a Catalyst expression, so the
     stateless QA path stays JVM-side end to end."""
-
-    def expr(self, context: Column, question: Column) -> Column:
-        ctx = F.coalesce(context, F.lit(DEFAULT_CONFIG.fallback_context))
-        return F.format_string(
-            "Answer about [%s]: %s",
-            F.substring(ctx, 1, 60),
-            F.substring(question, 1, 60),
-        )
-
-
-class OllamaGenerator:
-    """Production generator seam (reference services/qa_service.py:99-111).
-    Not constructible in this container — no model server; the shape is
-    ``mapInPandas`` batching HTTP POSTs per Arrow batch."""
-
-    def __init__(self, url: str | None = None, model: str = "llama3"):
-        if url is None:
-            raise NotImplementedError(
-                "no Ollama server in this environment; use StubGenerator "
-                "for deterministic tests"
-            )
-        self.url, self.model = url, model
-
-
-def qa_stateless(
-    questions: DataFrame,
-    context_col: str = "context_text",
-    question_col: str = "question",
-    history_col: str = "history",
-) -> DataFrame:
-    """The stateless QA columns: folded history, assembled prompt, stubbed
-    answer (SURVEY.md §3.2 steps f-h; P8 fallback + F9/F10)."""
-    gen = StubGenerator()
-    history_text = TXT.fold_history(F.col(history_col))
-    ctx = F.coalesce(
-        F.col(context_col), F.lit(DEFAULT_CONFIG.fallback_context)
-    )
-    return (
-        questions.withColumn("history_text", history_text)
-        .withColumn(
-            "prompt",
-            TXT.assemble_prompt(ctx, F.col("history_text"), F.col(question_col)),
-        )
-        .withColumn("answer", gen.expr(F.col(context_col), F.col(question_col)))
+    ctx = F.coalesce(context, F.lit(DEFAULT_CONFIG.fallback_context))
+    return F.format_string(
+        "Answer about [%s]: %s",
+        F.substring(ctx, 1, 60),
+        F.substring(question, 1, 60),
     )

@@ -287,12 +287,6 @@ def hll_sketch(
     return df.agg(F.hll_sketch_agg(F.col(col), F.lit(lgk)).alias("hll"))
 
 
-def hll_merge(sketch_parts: DataFrame) -> DataFrame:
-    """Union per-batch HLL sketch rows into one: the read-side half of
-    incremental cardinality maintenance."""
-    return sketch_parts.agg(F.hll_union_agg(F.col("hll"), F.lit(True)).alias("hll"))
-
-
 def hll_estimate(sketch: DataFrame) -> int:
     """Driver-side estimate from a single-row sketch relation."""
     return int(sketch.select(F.hll_sketch_estimate("hll").alias("n")).collect()[0]["n"])

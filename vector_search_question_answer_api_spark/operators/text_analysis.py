@@ -94,71 +94,6 @@ def _uniq_frac(col: str) -> Column:
     ).otherwise(0.0)
 
 
-def token_stats(documents: DataFrame) -> DataFrame:
-    """(doc_id, n_chars, n_tokens, n_uniq_tokens, est_bpe_tokens,
-    mean_token_len)."""
-    proc = TXT.preprocess_text(F.col("text"))
-    toks = _toks(proc)
-    n_tokens = F.size(toks)
-    sum_len = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return documents.select(
-        "doc_id",
-        F.length(F.coalesce(F.col("text"), F.lit(""))).alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_uniq_tokens"),
-        F.size(F.regexp_extract_all(F.coalesce(F.col("text"), F.lit("")), F.lit(BPE_ISH_PATTERN), 0)).alias(
-            "est_bpe_tokens"
-        ),
-        (F.round(
-            F.when(n_tokens > 0, sum_len.cast("double") / n_tokens).otherwise(0.0), 6
-        ) + F.lit(0.0)).alias("mean_token_len"),
-    )
-
-
-def lang_scores(documents: DataFrame) -> DataFrame:
-    """Per-language stopword-hit counts + deterministic argmax guess.
-    Tie order: en > es > fr > de; all-zero -> 'unknown'."""
-    proc = TXT.preprocess_text(F.col("text"))
-    toks = _toks(proc)
-    en, es, fr, de = (_stop_hits(toks, L) for L in ("en", "es", "fr", "de"))
-    guess = _lang_guess(en, es, fr, de)
-    return documents.select(
-        "doc_id",
-        en.alias("en_hits"),
-        es.alias("es_hits"),
-        fr.alias("fr_hits"),
-        de.alias("de_hits"),
-        guess.alias("guessed_lang"),
-        F.col("lang").alias("declared_lang"),
-    )
-
-
-def repetition_scores(documents: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, n_bigrams, top_token_frac, top_bigram_frac,
-    uniq_bigram_frac): repetition diagnostics in the Gopher/C4 filter
-    family — the fraction of the document consumed by its single most
-    frequent token / word-bigram, and bigram diversity.  High top-fractions
-    flag boilerplate and degenerate generations.
-
-    Pure HOFs: the per-row mode count is a run-length fold over the
-    sorted grams — O(n log n) per document, map-only, no shuffle, the
-    same integer counts as the DuckDB oracle's per-distinct count.  Only
-    the maximum COUNT is emitted (never which gram), so ties cost no
-    determinism.
-    """
-    proc = TXT.preprocess_text(F.col("text"))
-    base = documents.select("doc_id", _toks(proc).alias("toks"))
-    with_bg = base.select("doc_id", "toks", _bigrams("toks").alias("bg"))
-    return with_bg.select(
-        "doc_id",
-        F.size("toks").cast("long").alias("n_tokens"),
-        F.size("bg").cast("long").alias("n_bigrams"),
-        (F.round(_top_frac("toks"), 6) + F.lit(0.0)).alias("top_token_frac"),
-        (F.round(_top_frac("bg"), 6) + F.lit(0.0)).alias("top_bigram_frac"),
-        (F.round(_uniq_frac("bg"), 6) + F.lit(0.0)).alias("uniq_bigram_frac"),
-    )
-
-
 def winnowing_fingerprints(
     documents: DataFrame, k: int = 8, w: int = 4
 ) -> DataFrame:
@@ -225,9 +160,9 @@ def quality_components(
 ) -> dict[str, Column]:
     """The composite quality heuristic's ingredients over a token-array
     column: n / mean_len / stop_ratio / uniq_ratio / score (un-rounded).
-    ONE definition shared by quality_scores, text_metrics, and the
-    pipeline filter funnel, so the published quality_score and the
-    funnel's keep/drop decisions can never drift apart.  The expression
+    ONE definition shared by text_metrics and the pipeline filter funnel,
+    so the published quality_score and the funnel's keep/drop decisions
+    can never drift apart.  The expression
     shapes (when-chains, operand order) are part of the oracle contract —
     both engines must perform the identical float operations.
 
@@ -261,37 +196,22 @@ def quality_components(
     }
 
 
-def quality_scores(documents: DataFrame) -> DataFrame:
-    """Composite document-quality heuristic in [0,1]:
-    0.25*(10<=n_tokens<=2000) + 0.25*(3<=mean_tok_len<=10)
-    + 0.25*(stopword_ratio>=0.01) + 0.25*uniq_ratio.
-    (Gopher/C4-style length & repetition filters, reduced to a
-    deterministic, SQL-checkable formula.)"""
-    proc = TXT.preprocess_text(F.col("text"))
-    toks = _toks(proc)
-    q = quality_components(toks)
-    n, mean_len, stop_ratio, uniq_ratio, score = (
-        q["n"], q["mean_len"], q["stop_ratio"], q["uniq_ratio"], q["score"],
-    )
-    return documents.select(
-        "doc_id",
-        n.alias("n_tokens"),
-        (F.round(mean_len, 6) + F.lit(0.0)).alias("mean_token_len"),
-        (F.round(stop_ratio, 6) + F.lit(0.0)).alias("stop_ratio"),
-        (F.round(uniq_ratio, 6) + F.lit(0.0)).alias("uniq_ratio"),
-        (F.round(score, 6) + F.lit(0.0)).alias("quality_score"),
-    )
-
-
 def text_metrics(documents: DataFrame) -> DataFrame:
-    """The consolidated per-document text-metrics relation: everything
-    token_stats + repetition_scores + lang_scores + quality_scores emit,
-    in ONE map-only projection — the (toks, bg) arrays are staged as real
-    columns once and every metric reads them, so the preprocess/tokenize
-    chain is never re-evaluated per metric family and there is no join or
-    shuffle anywhere (at 100 TB this is one scan, not four).  Column set
-    is the union of the four constituent functions (shared columns —
-    n_tokens, mean_token_len — emitted once)."""
+    """The per-document text-metrics relation in ONE map-only projection:
+    token stats (n_chars .. mean_token_len), repetition diagnostics (the
+    fraction of the document consumed by its single most frequent token /
+    word-bigram, and bigram diversity — Gopher/C4 filter family), per-
+    language stopword hits with a deterministic argmax guess (tie order
+    en > es > fr > de; all-zero -> 'unknown'), and the composite quality
+    score 0.25*(10<=n_tokens<=2000) + 0.25*(3<=mean_tok_len<=10)
+    + 0.25*(stopword_ratio>=0.01) + 0.25*uniq_ratio.
+
+    The (toks, bg) arrays are staged as real columns once and every metric
+    reads them, so the preprocess/tokenize chain is never re-evaluated per
+    metric family and there is no join or shuffle anywhere.  The per-row
+    mode count is a run-length fold over the sorted grams (``_top_frac``):
+    only the maximum COUNT is emitted, never which gram, so ties cost no
+    determinism."""
     proc = TXT.preprocess_text(F.col("text"))
     staged = documents.select(
         "doc_id",

@@ -14,12 +14,10 @@ A 100 TB pipeline's read performance is decided when the data is WRITTEN:
   1-D z-order): a range predicate then touches only the files whose
   slice intersects it.
 
-Both are one shuffle at ingest, amortized over every later scan — the
-same trade ``sources/bucketed.py`` makes for join keys, applied to range
-predicates.  File size is capped by the writer's ``maxRecordsPerFile``
-(rows-per-file derived from a sampled average row width when the caller
-gives a byte target), which bounds file size without a second pass over
-the data.
+Both are one shuffle at ingest, amortized over every later scan.  File
+size is capped by the writer's ``maxRecordsPerFile`` (rows-per-file
+derived from a sampled average row width when the caller gives a byte
+target), which bounds file size without a second pass over the data.
 """
 
 from __future__ import annotations
@@ -140,79 +138,3 @@ def layout_stats(path: str, column: str | None = None) -> dict:
         out["ranges"] = ranges
     return out
 
-
-def zorder_value(
-    df: DataFrame, cols: list[str], bits: int = 8
-) -> "tuple[DataFrame, str]":
-    """Attach a Morton (z-order) key interleaving rank-bucketed bits of
-    ``cols`` — multi-dimensional clustering where a single sort key can
-    only serve one dimension.
-
-    Each column is first RANK-normalized into ``2^bits`` equi-depth
-    buckets via ONE ``approxQuantile`` driver action covering every
-    column (equal-width ``width_bucket`` would collapse under skew; the
-    per-column-call form cost len(cols) scans at ingest — VERDICT r4
-    #6); the bucket ids' bits are then interleaved into one long.  Both
-    steps are pure codegen expressions — the boundary tables ride as
-    literals (2^bits doubles per column).
-
-    Returns (df + key column, key column name).  The key is meaningful
-    only for ORDERING — consumers cluster by it and drop it.
-    """
-    n_buckets = 1 << bits
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    key = "__zorder"
-    out = df
-    bucket_cols = []
-    all_bounds = df.approxQuantile(list(cols), probs, 0.001)
-    for c, bounds in zip(cols, all_bounds):
-        blit = F.array(*[F.lit(float(b)) for b in bounds])
-        v = F.col(c).cast("double")
-        bucket = F.aggregate(
-            F.transform(blit, lambda b: (b <= v).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        bc = f"__zb_{c}"
-        out = out.withColumn(bc, bucket)
-        bucket_cols.append(bc)
-    n = len(cols)
-    z = F.lit(0).cast("long")
-    for bit in range(bits):
-        for j, bc in enumerate(bucket_cols):
-            z = z + F.shiftleft(
-                F.shiftright(F.col(bc), bit).bitwiseAND(F.lit(1)),
-                bit * n + j,
-            )
-    return out.withColumn(key, z).drop(*bucket_cols), key
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    target_file_mb: int = 256,
-    rows_per_file: int | None = None,
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Compact + z-order-cluster on multiple columns: every output file
-    covers a small hyper-rectangle of the (cols...) space, so predicates
-    on ANY of the z-ordered columns prune files/row groups — the
-    multi-dimensional generalization of ``compact_write(sort_by=...)``
-    (which gives perfect pruning on one column and none on the others).
-    One quantile pass + one range shuffle; the z key is dropped before
-    writing (projection after the in-partition sort keeps the order)."""
-    zdf, key = zorder_value(df, cols, bits)
-    if rows_per_file is None:
-        row_bytes = max(estimate_row_bytes(df), 1.0)
-        rows_per_file = max(int(target_file_mb * 1024 * 1024 / row_bytes), 1)
-    if n_files is None:
-        n_files = max(math.ceil(zdf.count() / rows_per_file), 1)
-    out = (
-        zdf.repartitionByRange(n_files, F.col(key))
-        .sortWithinPartitions(key)
-        .drop(key)
-    )
-    out.write.mode(mode).option("maxRecordsPerFile", rows_per_file).parquet(path)

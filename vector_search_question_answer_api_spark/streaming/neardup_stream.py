@@ -1,6 +1,5 @@
 """Streaming NEAR-duplicate detection — the MinHash-LSH tier as a
-continuous operator (the fuzzy sibling of ``dedup_stream.dedup_stream_exact``;
-batch twin: ``operators/dedup.minhash_lsh_pairs``).
+continuous operator (batch twin: ``operators/dedup.minhash_lsh_pairs``).
 
 A training-data ingest pipeline wants "is this document a near-copy of
 anything already admitted?" answered AS documents arrive.  The batch tier

@@ -156,26 +156,6 @@ def append_span_batch(
     _agg_publish(agg_dir, live, retired)
 
 
-def maintain_span_store(
-    doc_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    k: int = SPN.DEFAULT_K,
-    trigger_once: bool = False,
-):
-    """Structured Streaming driver: foreachBatch → :func:`append_span_batch`."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        append_span_batch(batch_df, path, batch_id, k=k)
-
-    writer = doc_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def read_occurrences(spark: SparkSession, path: str) -> DataFrame:
     """All stored occurrence rows (columnar, already hashed).  A store
     that has been through :func:`purge_deleted_spans` carries an occ-side

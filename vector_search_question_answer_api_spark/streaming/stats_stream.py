@@ -48,8 +48,8 @@ def write_profile_batch(
 ) -> None:
     """Sketch ONE micro-batch of documents (doc_id, text, n_chars) and
     persist the bounded sketch rows under ``batch=<id>`` (overwrite, see
-    module docstring).  Reused directly by the foreachBatch sink and by
-    tests driving batches by hand."""
+    module docstring).  The profile stage of
+    ``ingest_stream.maintain_corpus``; tests drive batches by hand."""
     sub = f"batch={int(batch_id)}"
     toks = SK.token_stream(batch_df)
     SK.cms_sketch(toks, depth=depth, width=width).write.mode("overwrite").parquet(
@@ -159,38 +159,6 @@ def read_profile_center(spark: SparkSession, path: str) -> tuple:
     if any(r["mu"] is None for r in rows):
         return ()
     return tuple(float(r["mu"]) for r in rows)
-
-
-def maintain_profile(
-    doc_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_once: bool = False,
-    depth: int = SK.DEFAULT_DEPTH,
-    width: int = SK.DEFAULT_WIDTH,
-    n_bins: int = 64,
-    chars_hi: float = 4096.0,
-):
-    """Start the profile-maintenance query over a document stream
-    (doc_id, text, n_chars, ...)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_profile_batch(
-            batch_df,
-            path,
-            batch_id,
-            depth=depth,
-            width=width,
-            n_bins=n_bins,
-            chars_hi=chars_hi,
-        )
-
-    writer = doc_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # profile generations (rebuild_profile): PROF_MANIFEST records the current
@@ -559,5 +527,7 @@ def read_profile_hist(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_profile_hll(spark: SparkSession, path: str) -> DataFrame:
-    """Single-row union of the per-batch HLL sketches."""
-    return SK.hll_merge(_read_parts(spark, path, "hll"))
+    """Single-row union of the per-batch HLL sketches: the read-side half of
+    incremental cardinality maintenance."""
+    parts = _read_parts(spark, path, "hll")
+    return parts.agg(F.hll_union_agg(F.col("hll"), F.lit(True)).alias("hll"))
