@@ -62,3 +62,22 @@ def test_slow_tier_keys_name_existing_tests():
         if name.split("[")[0] not in defined.get(fname, ()):
             missing.append(key)
     assert _SLOW_TESTS and not missing, missing
+
+
+def test_dump_plans_masks_run_specific_ids():
+    from tools.dump_plans import mask_ids
+
+    def plan(stage, plan_id, expr):
+        return (
+            f"+- ShuffleQueryStage (9)\n\n(9) ShuffleQueryStage\n"
+            f"Output [1]: [doc_id#{expr}L]\nArguments: {stage}\n\n"
+            f"(10) Project [codegen id : {stage + 4}]\n\n"
+            f"(8) Exchange\nArguments: hashpartitioning(doc_id#{expr}L, 4), "
+            f"REPARTITION_BY_NUM, [plan_id={plan_id}]\n"
+        )
+
+    a, b = plan(0, 4047, 4144), plan(1, 5120, 6001)
+    assert a != b and mask_ids(a) == mask_ids(b)
+    # operator ids and partition counts are plan structure, not run ids
+    assert "(9) ShuffleQueryStage" in mask_ids(a)
+    assert mask_ids(a) != mask_ids(a.replace(", 4)", ", 8)"))

@@ -5,14 +5,35 @@ plans/<tag>/<query>_<suffix>.txt — the optimization-round evidence files
 
 Usage: python tools/dump_plans.py <tag> <suffix> [sf_dir] [query ...]
 e.g.   python tools/dump_plans.py r16 before /root/testdata/sf0.1
+
+The ids Spark hands out per session or in the order AQE creates query
+stages (query-stage ids, whole-stage ``codegen id``s, ``plan_id=`` and
+``#<n>`` expression ids) are masked, so two dumps of the same plans compare
+equal with a plain ``diff``; the ``*`` markers still show which operators
+are code-generated.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_MASKS = (
+    (re.compile(r"(QueryStage\n(?:Output \[\d+\]: .*\n)?Arguments: )\d+"), r"\1?"),
+    (re.compile(r"codegen id : \d+"), "codegen id : ?"),
+    (re.compile(r"plan_id=\d+"), "plan_id=?"),
+    (re.compile(r"#\d+"), "#?"),
+)
+
+
+def mask_ids(txt: str) -> str:
+    """``txt`` with its run-specific stage, plan and expression ids masked."""
+    for pattern, repl in _MASKS:
+        txt = pattern.sub(repl, txt)
+    return txt
 
 
 def main() -> None:
@@ -49,7 +70,7 @@ def main() -> None:
             txt = f"EXPLAIN FAILED: {type(e).__name__}: {e}\n"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(f"== {name} @ {sf_dir} ==\n\n{txt}")
+            f.write(f"== {name} @ {sf_dir} ==\n\n{mask_ids(txt)}")
         print(path)
     spark.stop()
 

@@ -15,6 +15,8 @@ Two implementations behind one seam:
   the L2-normalized sum of its token vectors.  This is the test/CI embedder
   (SURVEY.md §5 requires deterministic correctness gates) and follows the
   classic "hashing trick" / random-projection construction (Achlioptas 2003).
+  Token vectors are memoized once per process and ``dim``, i.e. per Python
+  worker on the executors (``_token_cache``).
 - ``SentenceTransformerEmbedder`` — the production seam, gated behind an
   import-try since the model stack is not in this container.
 """
@@ -38,14 +40,23 @@ def _token_seed(token: str) -> int:
     return int(hashlib.md5(token.encode("utf-8")).hexdigest()[:8], 16)
 
 
+_TOKEN_MEMO_BYTES = 32 << 20  # float64 vector bytes per dim per process
+
+
 class _TokenVectorCache:
-    """Memo of token -> Gaussian vector.  ``hashing_embed_numpy`` builds a
-    fresh one per call, i.e. once per Arrow batch on the executors, so it
-    dedups tokens within a batch only — not a per-worker memo that
-    survives across batches."""
+    """Memo of token -> Gaussian vector for one ``dim``.
+
+    One instance per ``dim`` lives for the whole process (``_token_cache``),
+    so on an executor it is a per-worker memo that survives across Arrow
+    batches and tasks: Python workers are reused, and the embed UDF pickles
+    ``hashing_embed_numpy`` by module.  A vector is a pure function of
+    ``(token, dim)``, so sharing the memo cannot change an embedding.  It
+    holds at most ``_TOKEN_MEMO_BYTES`` of vectors; once full, misses are
+    computed and not inserted."""
 
     def __init__(self, dim: int):
         self.dim = dim
+        self._cap = max(1, _TOKEN_MEMO_BYTES // (dim * 8))
         self._cache: dict[str, np.ndarray] = {}
 
     def get(self, token: str) -> np.ndarray:
@@ -53,19 +64,31 @@ class _TokenVectorCache:
         if v is None:
             rng = np.random.RandomState(_token_seed(token))
             v = rng.standard_normal(self.dim).astype(np.float64)
-            if len(self._cache) < 1_000_000:  # bound worker memory
+            v.flags.writeable = False
+            if len(self._cache) < self._cap:
                 self._cache[token] = v
         return v
 
 
+_TOKEN_CACHES: dict[int, _TokenVectorCache] = {}
+
+
+def _token_cache(dim: int) -> _TokenVectorCache:
+    cache = _TOKEN_CACHES.get(dim)
+    if cache is None:
+        cache = _TOKEN_CACHES.setdefault(dim, _TokenVectorCache(dim))
+    return cache
+
+
 def hashing_embed_numpy(texts: list[str | None], dim: int = 64) -> np.ndarray:
-    """Reference implementation (driver-side / tests): embed a list of texts.
+    """Embed a list of texts: the body of ``HashingEmbedder``'s UDF, also
+    called driver-side by the inventory reference and tests.
 
     Tokenization is whitespace split of the (already preprocessed) text —
     mirrors the reference feeding ``preprocess_description`` output straight
     to ``model.encode`` (services/index_service.py:63-64).
     """
-    cache = _TokenVectorCache(dim)
+    cache = _token_cache(dim)
     out = np.zeros((len(texts), dim), dtype=np.float64)
     for i, text in enumerate(texts):
         if not text:

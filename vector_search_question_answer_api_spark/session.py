@@ -12,6 +12,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+
+
+def _workers_can_import_engine(master: str) -> bool:
+    """Whether the Python daemon can be launched from this package.
+
+    A local worker's ``sys.path`` is the working directory (``python -m``)
+    followed by ``PYTHONPATH``; a remote executor sees neither, and a zip
+    shipped with ``addPyFile`` reaches workers only after the daemon
+    started.  Elsewhere the stock ``pyspark.daemon`` stays in place."""
+    if not master.startswith("local"):
+        return False
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(p and os.path.realpath(p) == _ENGINE_ROOT for p in paths)
+
 
 def get_spark(
     app_name: str = "vector_search_question_answer_api_spark",
@@ -69,6 +84,13 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
     )
+    if _workers_can_import_engine(master):
+        # worker_daemon.py: tasks stop re-reading pyspark.zip (SCALE.md
+        # "what a Python stage costs")
+        builder = builder.config(
+            "spark.python.daemon.module",
+            "vector_search_question_answer_api_spark.worker_daemon",
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
