@@ -100,9 +100,13 @@ def _measure(fn, pre=None, runs: "int | None" = None) -> dict:
     cache_scope releases only the caches THIS attempt creates —
     unpersist_all() would drain the process-global registry and could
     yank caches out from under other live plans if bench ever runs
-    embedded (ADVICE r3)."""
+    embedded (ADVICE r3).  The serving snapshots (``caching.epoch_cached``)
+    are released before every attempt, untimed, so a stored-serving
+    entry times its cold request — the snapshot build included — on
+    every run, comparable with ledgers from before the snapshots."""
     times: list[float] = []
     for _ in range(runs or 5):
+        caching.release_snapshots()
         if pre is not None:
             pre()
         with caching.cache_scope():

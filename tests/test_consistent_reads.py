@@ -1215,3 +1215,322 @@ def test_hybrid_historical_epoch_and_inflight_tear_healed_by_history(
         )
     )
     assert after == before and after
+
+
+# ------------------------------------------------- serving snapshots:
+# store-derived serving state (BM25 census, corpus stats, resolved log
+# postings, graph table) is built once per store state, borrowed by later
+# requests and released when the store changes.
+
+
+def _snapshot_frames(path):
+    """The persisted frames of the serving snapshot held for ``path``."""
+    return caching._snapshots[os.path.realpath(path)][2]
+
+
+def test_serving_snapshot_follows_store_changes(spark, tmp_path):
+    """Serve at epoch 1, commit epoch 2 (an upsert and a delete), serve at
+    ``COMMITTED`` and at the bounded epoch 1, compact the postings store,
+    rebuild it in place with other documents: every answer equals the
+    one-shot hybrid over the corpus at that state, and every superseded
+    snapshot's frames are unpersisted."""
+    from vector_search_question_answer_api_spark.operators import ann_hnsw
+    from vector_search_question_answer_api_spark.operators.ivf import (
+        centroid_grid,
+    )
+
+    docs = load_table(spark, SF, "documents").select(
+        "doc_id",
+        F.timestamp_millis(F.col("doc_id") * 1000).alias("ts"),
+        "text",
+        "n_chars",
+        F.lit(False).alias("_delete"),
+    )
+    b0 = docs.filter("doc_id < 40")
+    b1 = docs.filter("doc_id >= 40 AND doc_id < 60")
+    upd2 = (
+        docs.filter("doc_id IN (5, 20)")
+        .withColumn("text", F.concat(F.lit("update two "), "text"))
+        .withColumn("n_chars", F.length("text"))
+        .withColumn("ts", F.timestamp_millis(F.lit(20_000_000)))
+    )
+    dels = docs.filter("doc_id IN (0, 1)").select(
+        "doc_id",
+        F.timestamp_millis(F.lit(20_000_000)).alias("ts"),
+        F.lit(None).cast("string").alias("text"),
+        F.lit(None).cast(docs.schema["n_chars"].dataType).alias("n_chars"),
+        F.lit(True).alias("_delete"),
+    )
+    state = {
+        1: docs.filter("doc_id < 60").drop("_delete"),
+        2: docs.filter("doc_id >= 2 AND doc_id < 60 AND doc_id NOT IN (5, 20)")
+        .unionByName(upd2)
+        .drop("_delete"),
+    }
+    cents = centroid_grid(DIM, N_CELLS)
+    root = str(tmp_path / "corpus")
+
+    def commit(batches):
+        for name, b in batches:
+            b.coalesce(1).write.parquet(str(tmp_path / "src" / name))
+        q = IG.maintain_corpus(
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(tmp_path / "src" / "*")),
+            root,
+            checkpoint=str(tmp_path / "ckpt"),
+            ann_graphs=True,
+            centroids=cents,
+            dim=DIM,
+            n_cells=N_CELLS,
+            trigger_once=True,
+            docs_store=True,
+            postings_store=True,
+            postings_buckets=8,
+            ann_history_keep=1,
+        )
+        assert q.awaitTermination(300), "ingest stream did not finish"
+
+    commit([("b0", b0), ("b1", b1)])
+    assert IG.corpus_committed_epoch(root) == 1
+    qdf = _queries(spark, root)
+    q = spark.createDataFrame(qdf.collect(), qdf.schema)  # fixed texts
+    ppath = IG.corpus_postings_path(root)
+    gpath = IG.corpus_graphs_path(root)
+    ef = 60 + 8  # exhaustive: the graph tier equals a rebuild
+
+    def serve(dense, epoch=HS.COMMITTED):
+        kw = {"dense": dense}
+        if dense == "graph":
+            kw.update(centroids=cents, dim=DIM, n_cells=N_CELLS,
+                      nprobe=N_CELLS, ef=ef)
+        return _rel(
+            HS.hybrid_search_stored(
+                spark, root, q, k=K, pool=POOL, epoch=epoch, **kw
+            )
+        )
+
+    def oneshot(docs_e, dense):
+        idx = build_index(docs_e)
+        if dense == "graph":
+            dense_top = ann_hnsw.celled_hnsw_topk_cogrouped(
+                ann_hnsw.build_celled_hnsw(
+                    idx, centroids=cents, dim=DIM, n_cells=N_CELLS
+                ),
+                q.select("query_id", "qvec"), centroids=cents, k=POOL,
+                ef=ef, dim=DIM, n_cells=N_CELLS, nprobe=N_CELLS,
+            )
+        else:
+            dense_top = knn_exact_expr(q.select("query_id", "qvec"), idx,
+                                       k=POOL)
+        return _rel(
+            rrf_fuse(
+                [
+                    bm25_topk(
+                        docs_e, q.select("query_id", "query_text"), k=POOL
+                    ).select("query_id", "doc_id", "rank"),
+                    dense_top.select("query_id", "doc_id", "rank"),
+                ],
+                k=K,
+            )
+        )
+
+    want = {}
+
+    def check(e, dense, epoch=HS.COMMITTED):
+        got = serve(dense, epoch)
+        if (e, dense) not in want:
+            want[e, dense] = oneshot(state[e], dense)
+        assert got and got == want[e, dense], (e, dense, epoch)
+
+    def superseded(old):
+        assert old and not any(f.is_cached for f in old)
+
+    check(1, "exact")
+    check(1, "graph")
+    posts1, graph1 = _snapshot_frames(ppath), _snapshot_frames(gpath)
+    assert all(f.is_cached for f in posts1 + graph1)
+    check(1, "exact")  # borrowed: the same entry serves again
+    assert _snapshot_frames(ppath) == posts1
+
+    commit([("b2", upd2.unionByName(dels))])
+    assert IG.corpus_committed_epoch(root) == 2
+    check(2, "exact")
+    superseded(posts1)
+    check(2, "graph")
+    superseded(graph1)
+    posts2 = _snapshot_frames(ppath)
+    check(1, "exact", epoch=1)  # the bounded epoch rebuilds
+    superseded(posts2)
+    check(1, "graph", epoch=1)
+
+    check(2, "exact")
+    posts2b = _snapshot_frames(ppath)
+    assert LXS.compact_postings(spark, ppath)  # same epoch, retired logs
+    check(2, "exact")
+    superseded(posts2b)
+    assert _snapshot_frames(ppath) == ()  # a log-free store persists none
+
+    # two in-place rebuilds: the second keeps the first's file set (the
+    # root's postings/ and doclens/), so only the stamps tell them apart
+    LXS.write_postings_index(state[2], ppath, n_buckets=8)
+    check(2, "exact")
+    rebuilt = state[2].filter("doc_id >= 20")
+    LXS.write_postings_index(rebuilt, ppath, n_buckets=8)
+    got = serve("exact")
+    want = _rel(
+        rrf_fuse(
+            [
+                bm25_topk(
+                    rebuilt, q.select("query_id", "query_text"), k=POOL
+                ).select("query_id", "doc_id", "rank"),
+                knn_exact_expr(
+                    q.select("query_id", "qvec"), build_index(state[2]),
+                    k=POOL,
+                ).select("query_id", "doc_id", "rank"),
+            ],
+            k=K,
+        )
+    )
+    assert got and got == want
+
+
+def test_snapshot_registry_lifetime(spark, tmp_path):
+    """One entry per store path, replaced (and its frames unpersisted)
+    when the key changes; ``cache_scope`` exit neither releases nor
+    counts it; an entry whose store is gone is dropped on the next call;
+    ``unpersist_all()`` releases every entry."""
+    builds = []
+
+    def build(tag):
+        def run():
+            builds.append(tag)
+            df = spark.range(3).withColumn("tag", F.lit(tag)).persist()
+            return tag, [df]
+
+        return run
+
+    a, gone = tmp_path / "a", tmp_path / "gone"
+    a.mkdir()
+    gone.mkdir()
+    assert caching.epoch_cached(str(a), "k1", build("a1")) == "a1"
+    # the same store however spelled, same key: borrowed, not rebuilt
+    alias = os.path.join(str(a), "..", "a")
+    assert caching.epoch_cached(alias, "k1", build("a2")) == "a1"
+    assert builds == ["a1"]
+    (first,) = _snapshot_frames(a)
+    assert first.is_cached
+
+    n_caches = len(caching._live_caches)
+    with caching.cache_scope():
+        assert caching.epoch_cached(str(a), "k1", build("a3")) == "a1"
+        assert len(caching._live_caches) == n_caches
+    assert first.is_cached and len(caching._live_caches) == n_caches
+
+    assert caching.epoch_cached(str(a), "k2", build("a4")) == "a4"
+    assert not first.is_cached
+    assert [p for p in caching._snapshots if p == os.path.realpath(a)] == [
+        os.path.realpath(a)
+    ]
+    (second,) = _snapshot_frames(a)
+
+    caching.epoch_cached(str(gone), "k1", build("g"))
+    (gone_frame,) = _snapshot_frames(gone)
+    shutil.rmtree(gone)
+    caching.epoch_cached(str(a), "k2", build("a5"))  # any registry call
+    assert os.path.realpath(gone) not in caching._snapshots
+    assert not gone_frame.is_cached and second.is_cached
+
+    caching.unpersist_all()
+    assert caching._snapshots == {} and not second.is_cached
+
+
+def test_snapshot_registry_builds_once_under_concurrent_requests(
+    spark, tmp_path, monkeypatch
+):
+    """Concurrent requests over one store state build ONE entry: 16
+    threads on a fast switch interval race on one key (a lost check or
+    update would build twice), then two threads serve stored BM25 over
+    one postings store and get the serial answer."""
+    import sys
+    import threading
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return object(), []
+
+    store = tmp_path / "s"
+    store.mkdir()
+    got, errors = [], []
+    barrier = threading.Barrier(16)
+
+    def race():
+        try:
+            barrier.wait(timeout=30)
+            for _ in range(50):
+                got.append(caching.epoch_cached(str(store), "k", build))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=race) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(builds) == 1 and len(got) == 16 * 50
+    assert all(v is got[0] for v in got)
+
+    path = str(tmp_path / "postings")
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    LXS.write_postings_index(docs.filter("doc_id >= 3"), path, n_buckets=8)
+    LXS.append_postings_batch(
+        docs.filter("doc_id < 3").withColumn("ts", F.lit(1)),
+        path, 0, n_buckets=8,
+    )
+    q = docs.filter("doc_id IN (5, 20, 45)").select(
+        F.col("doc_id").alias("query_id"), F.col("text").alias("query_text")
+    )
+    stats_builds = []
+    real_stats = LXS.corpus_stats
+    monkeypatch.setattr(
+        LXS, "corpus_stats",
+        lambda *a, **kw: stats_builds.append(1) or real_stats(*a, **kw),
+    )
+
+    def ranked(df):
+        return sorted(
+            (int(r["query_id"]), int(r["rank"]), int(r["doc_id"]))
+            for r in df.collect()
+        )
+
+    def answer():
+        return ranked(LXS.bm25_topk_stored(spark, path, q, k=5))
+
+    answers, errors = [], []
+
+    def serve():
+        try:
+            answers.append(answer())
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    caching.release_snapshots()
+    threads = [threading.Thread(target=serve) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(stats_builds) == 1
+    want = ranked(bm25_topk(docs, q, k=5))
+    assert answers == [want, want] and want
+    assert len([p for p in caching._snapshots
+                if p == os.path.realpath(path)]) == 1

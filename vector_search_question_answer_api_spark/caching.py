@@ -1,17 +1,36 @@
-"""Tracked persist registry shared by operators whose plans fan an
-expensive intermediate into multiple branches (dedup pair generators,
-the BM25 inverted-index build, ``hybrid_search_stored``'s query batch).
+"""Two persist registries for operators that return LAZY DataFrames.
 
-Operators return LAZY DataFrames, so they cannot unpersist their own
-intermediates; each persist is recorded here and released by the caller
-via ``unpersist_all()`` after materializing, or scoped with
-``cache_scope()``.  The registry is process-global and NOT thread-safe:
-concurrent queries in one session should each run under their own
-``cache_scope()`` from a single thread, or skip cleanup and let Spark's
-LRU evict (ADVICE r1/r2 low).
+**Tracked persists** (``persist_tracked`` / ``broadcast_tracked``) back a
+plan that fans an expensive intermediate into several branches (dedup
+pair generators, the BM25 inverted-index build, ``hybrid_search_stored``'s
+query batch).  An operator cannot unpersist its own intermediates, so
+each persist is recorded here and released by the caller via
+``unpersist_all()`` after materializing, or scoped with ``cache_scope()``.
+This registry is process-global and NOT thread-safe: concurrent queries
+in one session should each run under their own ``cache_scope()`` from a
+single thread, or skip cleanup and let Spark's LRU evict (ADVICE r1/r2
+low).
+
+**Epoch-scoped serving snapshots** (``epoch_cached``) hold store-derived,
+query-independent state (the BM25 doclens-log census, the corpus stats,
+the census-resolved log postings, the graph-cell table) for ONE committed
+state of one store, keyed by that state's file identity (the resolved
+file set plus ``file_stamp``s), never by the epoch number alone.  The
+first request that sees a new key builds the entry; later requests
+borrow it; a request that sees a different key replaces it and
+unpersists the superseded frames.  At most one entry per store path;
+an entry whose store path is gone is dropped on the next registry call;
+``unpersist_all()`` and ``release_snapshots()`` release them all.  The
+entries live outside the tracked lists, so ``cache_scope`` exit neither
+releases nor counts them.  Lookups and builds hold one lock, so
+concurrent requests over one store state build a single entry.  Query
+results are never cached here.
 """
 
 from __future__ import annotations
+
+import os
+import threading
 
 from pyspark.sql import DataFrame
 
@@ -108,11 +127,13 @@ def release_gate() -> None:
 
 
 def unpersist_all() -> None:
-    """Release every tracked cache and broadcast."""
+    """Release every tracked cache and broadcast, and every serving
+    snapshot."""
     while _live_caches:
         _live_caches.pop().unpersist()
     while _live_broadcasts:
         _live_broadcasts.pop().unpersist()
+    release_snapshots()
 
 
 class cache_scope:
@@ -135,3 +156,58 @@ class cache_scope:
             _live_caches.pop().unpersist()
         while len(_live_broadcasts) > self._bmark:
             _live_broadcasts.pop().unpersist()
+
+
+# ------------------------------------------------ epoch-scoped snapshots
+
+_snapshot_lock = threading.Lock()
+# realpath of a store -> (key, value, frames the entry persisted)
+_snapshots: dict[str, tuple] = {}
+
+
+def file_stamp(path: str) -> "tuple[int, int] | None":
+    """``(st_mtime_ns, st_ino)`` of ``path``, None when it is missing.  A
+    store rewritten in place keeps its dir names; it cannot keep both
+    the stamps of its dirs and of its (atomically replaced) manifest."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_mtime_ns, st.st_ino
+
+
+def _release(entry: tuple) -> None:
+    for df in entry[2]:
+        df.unpersist()
+
+
+def epoch_cached(path: str, key, build):
+    """The serving snapshot of the store at ``path`` for ``key``.
+
+    ``build()`` returns ``(value, frames)``: the value handed to every
+    borrower of this key, and the DataFrames it persisted (unpersisted
+    when the entry is superseded or released).  It runs under the
+    registry lock, so two requests over one store state build once; a
+    build that raises leaves no entry.  ``key`` must identify the store's
+    files (see ``file_stamp``): compaction at the same epoch retires log
+    dirs, and an in-place rewrite keeps dir names."""
+    path = os.path.realpath(path)
+    with _snapshot_lock:
+        for gone in [p for p in _snapshots if not os.path.exists(p)]:
+            _release(_snapshots.pop(gone))
+        old = _snapshots.get(path)
+        if old is not None:
+            if old[0] == key:
+                return old[1]
+            # release before the build: one entry's memory per store
+            _release(_snapshots.pop(path))
+        value, frames = build()
+        _snapshots[path] = (key, value, tuple(frames))
+        return value
+
+
+def release_snapshots() -> None:
+    """Release every serving snapshot (their next request rebuilds)."""
+    with _snapshot_lock:
+        while _snapshots:
+            _release(_snapshots.popitem()[1])

@@ -29,7 +29,10 @@ rows (``rrf_fuse``).  Nothing corpus-sized moves per query batch.  The
 query batch is materialized once per call (a tracked persist) however
 many consumers read it, and each tier reads only the stores it uses: the
 graph tier never reads the index store — its own reader enforces the
-epoch bound and the retained horizon.
+epoch bound and the retained horizon.  What depends only on the store
+state (the BM25 census, corpus stats and resolved log postings, the
+graph-cell table) is built once per committed state and borrowed by
+later requests (``caching.epoch_cached``); query results never are.
 """
 
 from __future__ import annotations
@@ -182,9 +185,7 @@ def hybrid_search_stored(
             corpus_graphs_path,
         )
 
-        graphs = ann_hnsw.read_celled_hnsw_index(
-            spark, corpus_graphs_path(root), up_to_batch=e
-        )
+        graphs = _graph_table(spark, corpus_graphs_path(root), e)
         dense_top = ann_hnsw.celled_hnsw_topk_cogrouped(
             graphs, qv, centroids=centroids, k=pool, ef=ef, dim=dim,
             n_cells=n_cells, nprobe=nprobe,
@@ -221,3 +222,32 @@ def hybrid_search_stored(
         k=k,
         c=c,
     )
+
+
+def _graph_table(spark: SparkSession, path: str, e: "int | None") -> DataFrame:
+    """The managed graph store's (cell, n, graph) table at epoch ``e``,
+    persisted once per (store and MANIFEST stamps, ``e``) and borrowed by
+    every request at that state (``caching.epoch_cached``) — the
+    in-memory index the reference held in RAM.  The default persist
+    level lets it spill to disk; it is materialized by the first
+    request's own plan.  A refused bound raises from the reader and
+    leaves no entry."""
+    from vector_search_question_answer_api_spark import caching
+    from vector_search_question_answer_api_spark.operators import ann_hnsw
+    from vector_search_question_answer_api_spark.sources.cell_store import (
+        cell_store_stamp,
+    )
+
+    key = (spark, e, cell_store_stamp(path))
+
+    def build():
+        # its own plan node: Spark's cache matches by plan, so persisting
+        # the reader's frame itself would let any caller that persists and
+        # unpersists the same read release the snapshot's blocks
+        g = ann_hnsw.read_celled_hnsw_index(
+            spark, path, up_to_batch=e
+        ).select("cell", "n", "graph")
+        g.persist()
+        return g, [g]
+
+    return caching.epoch_cached(path, key, build)

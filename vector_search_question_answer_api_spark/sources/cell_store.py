@@ -90,6 +90,15 @@ def cell_store_manifest(path: str) -> dict | None:
     return _store(path).manifest_json()
 
 
+def cell_store_stamp(path: str) -> tuple:
+    """The file identity of the store's current state: the
+    ``caching.file_stamp`` of its dir and of its MANIFEST (replaced
+    atomically by every publish) — a serving-snapshot key part."""
+    from vector_search_question_answer_api_spark.caching import file_stamp
+
+    return file_stamp(path), file_stamp(_store(path).manifest_path)
+
+
 def _next_gen(path: str) -> str:
     ns = [
         int(os.path.basename(d).split("-")[-1])
