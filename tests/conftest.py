@@ -22,12 +22,12 @@ _SLOW_TESTS = {
     "test_cell_store.py::test_codes_same_batch_upsert_and_delete_falls_back",  # 10.9s
     "test_cell_store.py::test_crash_orphan_partitions_swept_and_compact_folds",  # 8.1s
     "test_cell_store.py::test_graph_sidecar_makes_cell_moves_replay_safe",  # 12.4s
-    "test_cell_store.py::test_live_generations_and_auto_compact_wiring",  # 9.5s
+    "test_cell_store.py::test_live_generations_and_auto_compact_wiring",  # 9.0s
     "test_cell_store.py::test_managed_ivfpq_serves_like_flat_and_refresh_touches_only_dirty",  # 8.8s
     "test_cell_store.py::test_refresh_maintains_radii_sidecar",  # 12.0s
     "test_cell_store.py::test_refresh_radii_widen_publish_tighten_crash_window",  # 13.8s
     "test_cell_store.py::test_refresh_sequence_with_compact_converges_to_full_build",  # 23.0s
-    "test_cell_store.py::test_streaming_upsert_refreshes_only_dirty_cells",  # 14.7s
+    "test_cell_store.py::test_streaming_upsert_refreshes_only_dirty_cells",  # 17.0s
     "test_consistent_reads.py::test_bounded_reads_below_horizon_raise",  # 6.6s
     "test_consistent_reads.py::test_bounded_reads_equal_prefix_replay_on_random_sequences",  # 33.2s
     "test_consistent_reads.py::test_hybrid_graph_and_ivfpq_tiers_serve_committed_epoch",  # 10.7s
@@ -101,15 +101,33 @@ _SLOW_TESTS = {
     # test_spans.py's class tests (TestSpanPurge, TestSpanStore) are not
     # listed: the default tier has always run them and still does
     "test_streaming.py::test_compaction_grace_period_keeps_inflight_reader_plans_valid",  # 5.7s
-    "test_streaming.py::test_embedding_neardup_stream_matches_batch_lsh_tier",  # 8.1s
-    "test_streaming.py::test_index_stream_matches_batch_build",  # 8.4s
+    "test_streaming.py::test_index_stream_matches_batch_build",  # 5.5s
     "test_streaming.py::test_maintain_corpus_auto_compacts_index_log",  # 6.1s
-    "test_streaming.py::test_neardup_stream_matches_batch_banding",  # 7.3s
-    "test_streaming.py::test_neardup_stream_verified_equals_batch_tier",  # 7.3s
     "test_streaming.py::test_session_state_carries_across_microbatches",  # 6.9s
     "test_streaming.py::test_session_stream_legacy_checkpoint_fails_loudly",  # 5.4s
     "test_streaming.py::test_session_stream_matches_batch_replay",  # 6.0s
 }
+
+
+def _check_slow_keys(config, keys: set) -> None:
+    """Raise on a ``_SLOW_TESTS`` key that names no collected test of its
+    file.  Files selected by node id (``file::test``) or filtered while
+    collecting (``--last-failed``) are collected only in part, so they
+    are not checked."""
+    if config.getoption("lf", False):
+        return
+    partial = {
+        os.path.basename(a.partition("::")[0]) for a in config.args if "::" in a
+    }
+    files = {k.partition("::")[0] for k in keys} - partial
+    stale = sorted(
+        k for k in _SLOW_TESTS
+        if k.partition("::")[0] in files and k not in keys
+    )
+    if stale:
+        raise pytest.UsageError(
+            f"_SLOW_TESTS keys match no collected test: {stale}"
+        )
 
 
 @pytest.hookimpl(tryfirst=True)
@@ -130,14 +148,19 @@ def pytest_collection_modifyitems(config, items):
     Keys are the node id's file name plus everything after it, so class
     tests match as ``file::Class::test``.  Listed tests get the real
     ``slow`` marker here, ahead of ``-m`` deselection, so ``-m slow``
-    selects exactly the slow tier."""
-    slow = []
+    selects exactly the slow tier.  A key that matches no collected test
+    of a fully collected file is a usage error: a renamed or deleted test
+    would otherwise leave a stale key that silently skips nothing."""
+    slow, keys = [], set()
     for item in items:
         path, _, rest = item.nodeid.partition("::")
-        if f"{os.path.basename(path)}::{rest}" in _SLOW_TESTS:
+        key = f"{os.path.basename(path)}::{rest}"
+        keys.add(key)
+        if key in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
         if "slow" in item.keywords:
             slow.append(item)
+    _check_slow_keys(config, keys)
     if os.environ.get("RUN_SLOW_TESTS") or config.getoption("-m"):
         return
     skip = pytest.mark.skip(

@@ -486,7 +486,7 @@ def test_celled_hnsw_index_roundtrip_and_partition_pruning(
         idx, centroids=cents, dim=64, n_cells=8
     )
     path = str(tmp_path / "hnsw_cells")
-    ann_hnsw.write_celled_hnsw_index(graphs, path)
+    ann_hnsw.write_celled_hnsw_index_managed(graphs, path)
     reread = ann_hnsw.read_celled_hnsw_index(spark, path)
     kwargs = dict(centroids=cents, k=5, ef=50, dim=64, n_cells=8, nprobe=4)
     want = {

@@ -457,7 +457,8 @@ def test_managed_store_scan_keeps_partition_filters(spark, corpus, tmp_path):
 
 def test_streaming_upsert_refreshes_only_dirty_cells(spark, tmp_path):
     """The full VERDICT r6 #4 loop: an upsert MICRO-BATCH through
-    Structured Streaming appends to the index log AND refreshes both
+    ``refresh_search_artifacts_batch`` (the per-batch step
+    ``maintain_corpus`` runs) appends to the index log AND refreshes both
     managed ANN artifacts — only dirty cell partitions rewritten, search
     through the refreshed stores ≡ a full rebuild of the final state."""
     from vector_search_question_answer_api_spark.operators import ann_hnsw
@@ -470,7 +471,7 @@ def test_streaming_upsert_refreshes_only_dirty_cells(spark, tmp_path):
     )
     from vector_search_question_answer_api_spark.sources.tables import load_table
     from vector_search_question_answer_api_spark.streaming.ann_maintain import (
-        maintain_search_artifacts,
+        refresh_search_artifacts_batch,
     )
     from vector_search_question_answer_api_spark.streaming.index_stream import (
         index_stream,
@@ -508,18 +509,11 @@ def test_streaming_upsert_refreshes_only_dirty_cells(spark, tmp_path):
         (F.col("ts") + F.expr("INTERVAL 1 DAY")).alias("ts"),
         F.concat(F.lit("totally different replacement text "), F.col("text")).alias("text"),
     )
-    updates.coalesce(1).write.parquet(f"{root}/src/u0")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/src/*")
+    refresh_search_artifacts_batch(
+        index_stream(updates), 1, path=log_path, codebooks=cbs,
+        codes_path=codes, graphs_path=graphs, centroids=cents, dim=DIM,
+        n_cells=N_CELLS,
     )
-    q = maintain_search_artifacts(
-        index_stream(stream), log_path, checkpoint=f"{root}/ckpt",
-        codebooks=cbs, codes_path=codes, graphs_path=graphs,
-        centroids=cents, dim=DIM, n_cells=N_CELLS, trigger_once=True,
-    )
-    assert q.awaitTermination(180), "maintenance stream did not finish"
 
     # expected dirty set: cells of the new vectors ∪ cells of the prior
     # versions of those docs
@@ -651,7 +645,7 @@ def test_refresh_sequence_with_compact_converges_to_full_build(
 
 def test_live_generations_and_auto_compact_wiring(spark, corpus, tmp_path):
     """live-generation accounting: +1 per refresh, folded to 1 by
-    compact; the streaming maintainer auto-compacts past its threshold
+    compact; the per-batch maintainer auto-compacts past its threshold
     (codes store only, 2 micro-batches, compact_every_gens=1)."""
     from vector_search_question_answer_api_spark.operators.index_build import (
         build_index,
@@ -662,7 +656,7 @@ def test_live_generations_and_auto_compact_wiring(spark, corpus, tmp_path):
     )
     from vector_search_question_answer_api_spark.sources.tables import load_table
     from vector_search_question_answer_api_spark.streaming.ann_maintain import (
-        maintain_search_artifacts,
+        refresh_search_artifacts_batch,
     )
     from vector_search_question_answer_api_spark.streaming.index_stream import (
         index_stream,
@@ -681,7 +675,7 @@ def test_live_generations_and_auto_compact_wiring(spark, corpus, tmp_path):
     cell_store_compact(spark, path)
     assert cell_store_live_generations(path) == 1
 
-    # streaming wiring: threshold 1 → every batch that pushes the store
+    # maintainer wiring: threshold 1 → every batch that pushes the store
     # to 2 live generations triggers a fold back to 1
     root = str(tmp_path)
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
@@ -697,23 +691,17 @@ def test_live_generations_and_auto_compact_wiring(spark, corpus, tmp_path):
     write_ivfpq_index_managed(idx0, codes, cbs, centroids=cents, dim=DIM,
                               n_cells=N_CELLS)
     for i in range(2):
-        docs.filter(f"doc_id = {i}").select(
+        update = docs.filter(f"doc_id = {i}").select(
             "doc_id",
             (F.col("ts") + F.expr("INTERVAL 1 DAY")).alias("ts"),
             F.concat(F.lit(f"update {i} "), F.col("text")).alias("text"),
-        ).coalesce(1).write.parquet(f"{root}/src/u{i}")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/src/*")
-    )
-    q = maintain_search_artifacts(
-        index_stream(stream), f"{root}/idx", checkpoint=f"{root}/ckpt",
-        codebooks=cbs, codes_path=codes, centroids=cents, dim=DIM,
-        n_cells=N_CELLS, trigger_once=True, compact_every_gens=1,
-    )
-    assert q.awaitTermination(180), "maintenance stream did not finish"
-    assert cell_store_live_generations(codes) == 1
+        )
+        refresh_search_artifacts_batch(
+            index_stream(update), i + 1, path=f"{root}/idx", codebooks=cbs,
+            codes_path=codes, centroids=cents, dim=DIM, n_cells=N_CELLS,
+            compact_every_gens=1,
+        )
+        assert cell_store_live_generations(codes) == 1
 
 
 @pytest.fixture(scope="module")

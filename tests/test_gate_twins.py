@@ -136,24 +136,6 @@ def test_celled_hnsw_twin_detects_drift(spark, monkeypatch):
         inventory.queries()["ann_ivf_topk"](spark, SF).count()
 
 
-def test_minhash_stream_twin_detects_signature_drift(spark, monkeypatch):
-    """r6: the streaming-signature twin must fire when the stream's hash
-    family diverges from the batch signatures."""
-    import vector_search_question_answer_api_spark.streaming.neardup_stream as ns
-
-    real = ns.minhash_sig_stream
-
-    def corrupted(documents, n_hashes=16, k=3):
-        df = real(documents, n_hashes=n_hashes, k=k)
-        return df.withColumn(
-            "sig", F.transform(F.col("sig"), lambda x: x + F.lit(1))
-        )
-
-    monkeypatch.setattr(ns, "minhash_sig_stream", corrupted)
-    with pytest.raises(ValueError, match="streaming minhash signature drift"):
-        inventory.queries()["dedup_minhash_lsh"](spark, SF).count()
-
-
 def test_filtered_knn_twin_detects_leaked_row(spark, monkeypatch):
     """r7: the in-gate filtered-search twin must fire when filtered_knn
     emits a row the predicate should have excluded / wrong ids."""

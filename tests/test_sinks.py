@@ -1,11 +1,9 @@
 """JSON response sinks (S9/F11): reference response shapes, deterministic
-timestamps, JSON-lines bulk export."""
+timestamps."""
 
 from __future__ import annotations
 
 import json
-import shutil
-import tempfile
 from datetime import datetime
 
 import pytest
@@ -20,7 +18,6 @@ from vector_search_question_answer_api_spark.operators.sessions import replay_se
 from vector_search_question_answer_api_spark.sources.sinks import (
     qa_response_json,
     search_response_json,
-    write_json,
 )
 from vector_search_question_answer_api_spark.sources.tables import load_table
 
@@ -68,14 +65,3 @@ def test_qa_response_shape_and_deterministic_timestamp(spark, sf_dir):
     assert body["timestamp"] == "2024-01-01T12:00:00.123456"
     assert body["product_context"] == "0"
 
-
-def test_write_json_roundtrip(spark, search_results):
-    d = tempfile.mkdtemp(prefix="vector_search_question_answer_api_spark_sink_")
-    try:
-        resp = search_response_json(search_results, 3)
-        write_json(resp, f"{d}/out")
-        back = spark.read.json(f"{d}/out")
-        assert back.count() == resp.count()
-        assert set(back.columns) == {"query_id", "response"}
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

@@ -1853,53 +1853,14 @@ _SIG_SQL = f"""
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16)+LSH(4x4) candidates verified at jaccard>=0.8 — every hash
-    bit replicated in the oracle (seeded md5 minima, banded).
-
-    In-gate twin (r6, VERDICT r5 #6): the STREAMING signature expression
-    (streaming/neardup_stream.minhash_sig_stream — the map-only core of
-    streaming near-dup detection) is asserted bit-identical to the batch
-    ``minhash_signatures`` on the gate's own corpus, so the stream's hash
-    math is driver-visible through this oracle-green gate."""
+    bit replicated in the oracle (seeded md5 minima, banded)."""
     from vector_search_question_answer_api_spark.operators.dedup import minhash_lsh_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    if RUN_TWIN_CHECKS:
-        _minhash_stream_sig_twin_check(d)
     pairs = minhash_lsh_pairs(d, n_hashes=16, n_bands=4, k=3, threshold=0.8)
     return pairs.select(
         "doc_a", "doc_b", _r(F.col("jaccard"), 6).alias("jaccard")
     ).orderBy("doc_a", "doc_b")
-
-
-def _minhash_stream_sig_twin_check(documents: DataFrame) -> None:
-    """Streaming-vs-batch MinHash signature equivalence, in-gate: the
-    streaming expression is batch-evaluable (same Catalyst expressions a
-    readStream plan would run), so evaluate it on the gate corpus and
-    require BIT-IDENTICAL (doc_id, sig) rows vs the batch signature agg.
-    Docs with <k tokens are dropped identically on both sides."""
-    from vector_search_question_answer_api_spark.operators.dedup import (
-        minhash_signatures,
-    )
-    from vector_search_question_answer_api_spark.streaming.neardup_stream import (
-        minhash_sig_stream,
-    )
-
-    batch = minhash_signatures(documents, n_hashes=16, k=3).select(
-        "doc_id", "sig"
-    )
-    streamed = minhash_sig_stream(
-        documents.withColumn("ts", F.timestamp_seconds(F.col("doc_id"))),
-        n_hashes=16,
-        k=3,
-    ).select("doc_id", "sig")
-    diff = batch.exceptAll(streamed).unionByName(streamed.exceptAll(batch))
-    bad = diff.limit(3).collect()
-    if bad:
-        raise ValueError(
-            f"streaming minhash signature drift vs batch, e.g. {bad}"
-        )
-    if batch.limit(1).count() == 0:
-        raise ValueError("minhash stream twin: empty signature relation")
 
 
 def _simhash_sql_expr() -> str:

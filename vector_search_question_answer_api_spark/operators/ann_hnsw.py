@@ -178,16 +178,6 @@ def build_celled_hnsw(
     )
 
 
-def write_celled_hnsw_index(graphs: DataFrame, path: str) -> None:
-    """Materialize the cell-routed graph index: ``(n, graph)`` parquet
-    ``partitionBy("cell")`` — the cell directories ARE the coarse index
-    (the same layout rule as ``pq.write_ivfpq_index``), one serialized
-    graph blob per cell, so a query batch lists and reads only its probed
-    cells' directories.  Graph blobs round-trip byte-identically through
-    parquet binary columns (pinned in tests)."""
-    graphs.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-
 def write_celled_hnsw_index_managed(
     graphs: DataFrame,
     path: str,
@@ -195,13 +185,17 @@ def write_celled_hnsw_index_managed(
     batch_id: "int | None" = None,
     history_keep: int = 0,
 ) -> None:
-    """The :func:`write_celled_hnsw_index` layout under the managed cell
-    store (``sources/cell_store``): same cell-partitioned blob artifact,
-    plus a per-cell MANIFEST so later upsert batches can re-build ONLY
-    their dirty cells' graphs (:func:`refresh_celled_hnsw_index`) instead
-    of the reference's whole-graph rebuild
-    (services/index_service.py:112-115).  ``read_celled_hnsw_index``
-    serves both layouts transparently.
+    """Materialize the cell-routed graph index under the managed cell
+    store (``sources/cell_store``): ``(n, n_dead, r, graph)`` rows
+    partitioned by ``cell`` — the cell directories ARE the coarse index
+    (the same layout rule as ``pq.write_ivfpq_index``), one serialized
+    graph blob per cell, so a query batch lists and reads only its probed
+    cells' directories; blobs round-trip byte-identically through parquet
+    binary columns.  A per-cell MANIFEST lets later upsert batches
+    re-build ONLY their dirty cells' graphs
+    (:func:`refresh_celled_hnsw_index`) instead of the reference's
+    whole-graph rebuild (services/index_service.py:112-115).
+    ``read_celled_hnsw_index`` serves it.
 
     ``ids`` (optional, ``(doc_id, cell)`` rows for the SAME corpus the
     graphs were built from) seeds the membership SIDECAR at

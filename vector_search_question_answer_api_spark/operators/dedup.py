@@ -737,8 +737,8 @@ def embedding_near_dup_pairs(
         )
         if n_planes is not None or n_tables is not None or center is not None:
             # The artifact must WIN, like every other SRP consumer
-            # (srp_sig_stream / ann_lsh_topk / prepare_qa_events take the
-            # manifest wholesale).  A stray explicit knob silently hashing
+            # (ann_lsh_topk / prepare_qa_events take the manifest
+            # wholesale).  A stray explicit knob silently hashing
             # batch buckets differently from the stream/serving consumers
             # pinned to the same manifest is the exact bit-divergence the
             # artifact exists to prevent — refuse the combination loudly

@@ -7,7 +7,7 @@ touched (VERDICT r6, What's missing #3).
 The reference's POST /refresh-index (services/index_service.py:112-115)
 rebuilds its whole HNSW graph on every refresh; the on-disk ANN artifacts
 here (IVFPQ codes, ``pq.write_ivfpq_index``; celled HNSW graph blobs,
-``ann_hnsw.write_celled_hnsw_index``) were likewise rebuild-only.  At
+``ann_hnsw.build_celled_hnsw``) were likewise rebuild-only.  At
 100 TB a full re-encode per upsert batch is not a plan; this store makes
 the refresh cost proportional to the DIRTY cells — with a well-chosen
 coarse quantizer that is ``|touched cells| / n_cells`` of the corpus,
@@ -40,8 +40,7 @@ there and re-tested here):
   write.
 - **Legacy fallback**: ``open_cell_table`` on a path without MANIFEST is
   a plain partitioned-parquet read, so the flat artifacts written by
-  ``write_ivfpq_index`` / ``write_celled_hnsw_index`` keep serving
-  unchanged.
+  ``write_ivfpq_index`` keep serving unchanged.
 - **Bounded time-travel** (r14 — VERDICT r13 missing #1): a store
   created with ``history_keep=K > 0`` retains, alongside the current
   manifest, the K most recent SUPERSEDED cell mappings, each stamped

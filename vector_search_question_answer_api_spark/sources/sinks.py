@@ -7,8 +7,7 @@ Reference: ``jsonify({query, k, results: [{id, description, score}]})`` for
 (controllers/qa_controller.py:41-61).  The engine keeps results as
 DataFrames end-to-end; these sinks render the SAME response shapes as JSON
 string columns with native expressions (``to_json`` over structs — JVM-side,
-no driver round trip), so an API layer can stream them out, and
-``write_json`` persists them as JSON lines for bulk export.
+no driver round trip), so an API layer can stream them out.
 
 Everything here is deterministic given its inputs: timestamps come from the
 data (event time), never from the wall clock.
@@ -74,9 +73,3 @@ def qa_response_json(replay: DataFrame) -> DataFrame:
             )
         ).alias("response"),
     )
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S9 bulk form: persist a response table as JSON lines (one file per
-    partition — the distributed analog of streaming responses out)."""
-    df.write.mode(mode).json(path)

@@ -1,14 +1,16 @@
-"""Streaming maintenance of the SERVING-SIDE ANN artifacts — the
+"""Per-batch maintenance of the SERVING-SIDE ANN artifacts — the
 composition of the index log (``streaming/index_stream``) with the
 per-cell incremental refresh (``sources/cell_store``), closing the loop
 the reference's POST /refresh-index only sketches
 (services/index_service.py:112-115: full rebuild per refresh).
 
-Per micro-batch of indexed documents (the ``index_stream`` relation),
-``maintain_search_artifacts``:
+``ingest_stream.maintain_corpus`` runs :func:`refresh_search_artifacts_batch`
+once per micro-batch of indexed documents (the ``index_stream`` relation).
+It:
 
-1. appends the batch to the index LSM log exactly as ``maintain_index``
-   does (same restart-safe ``_batch`` tagging);
+1. appends the batch to the index LSM log under ``<path>/log``, tagged
+   with the restart-safe batch id (``_batch``) that
+   ``index_stream.read_index_latest`` resolves by;
 2. re-encodes ONLY the dirty cells of the managed IVFPQ codes store and
    re-builds ONLY the dirty cells' graphs in the managed celled-HNSW
    store, from the post-append resolved view.  Old-cell evidence for
@@ -19,7 +21,7 @@ Per micro-batch of indexed documents (the ``index_stream`` relation),
    a sidecar, a pre-append view snapshot is the legacy fallback; that
    snapshot is not replay-safe (a replay recomputes it from a view the
    crashed attempt already appended to — ADVICE r7), which is why the
-   sidecar is the default for stores this module initializes.
+   sidecar is the default for the stores ``maintain_corpus`` initializes.
 
 Restart safety: a replayed batch (same checkpointed batch id) re-appends
 rows the read view already deduplicates, and the refreshes are
@@ -43,65 +45,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def maintain_search_artifacts(
-    indexed_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    codebooks,
-    codes_path: str | None = None,
-    graphs_path: str | None = None,
-    centroids=None,
-    dim: int = 64,
-    n_cells: int = 16,
-    trigger_once: bool = False,
-    compact_every_gens: int = 8,
-    graph_max_dead_frac: float = 0.2,
-):
-    """Start the composed maintenance query.  ``indexed_stream`` is the
-    ``index_stream`` relation (ts, vec_id, doc_id, norm_embedding, norm);
-    ``path`` the index-log root (``maintain_index`` layout); ``codes_path``
-    / ``graphs_path`` MANAGED stores previously initialized with
-    ``write_ivfpq_index_managed`` / ``write_celled_hnsw_index_managed``
-    (either may be None to maintain just one artifact).
-
-    ``compact_every_gens`` bounds the read-side union width: when a
-    store's manifest references more than this many live generations
-    after a refresh, it is folded back to one (``cell_store_compact``) —
-    the same cadence decision ``index_stream`` leaves to its caller, made
-    automatic here because the stream owns the write path."""
-    from vector_search_question_answer_api_spark.operators.ivf import (
-        centroid_grid,
-    )
-    from vector_search_question_answer_api_spark.streaming.index_stream import (
-        read_index_latest,
-    )
-
-    if centroids is None:
-        centroids = centroid_grid(dim, n_cells)
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        refresh_search_artifacts_batch(
-            batch_df,
-            batch_id,
-            path=path,
-            codebooks=codebooks,
-            codes_path=codes_path,
-            graphs_path=graphs_path,
-            centroids=centroids,
-            dim=dim,
-            n_cells=n_cells,
-            compact_every_gens=compact_every_gens,
-            graph_max_dead_frac=graph_max_dead_frac,
-        )
-
-    writer = indexed_stream.writeStream.foreachBatch(handle_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def refresh_search_artifacts_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -119,10 +62,13 @@ def refresh_search_artifacts_batch(
 ) -> None:
     """Process ONE micro-batch of indexed rows: snapshot pre-upsert state,
     append to the index log, refresh dirty cells of each managed artifact,
-    auto-compact over-wide stores.  The body of
-    :func:`maintain_search_artifacts`'s foreachBatch handler, exposed so
-    composed pipelines (``streaming/ingest_stream``) can run the same
-    idempotent step alongside their other per-batch stores."""
+    auto-compact over-wide stores (more than ``compact_every_gens`` live
+    generations are folded back to one by ``cell_store_compact``).
+    ``path`` is the index-log root; ``codes_path`` / ``graphs_path`` are
+    MANAGED stores initialized by ``write_ivfpq_index_managed`` /
+    ``write_celled_hnsw_index_managed`` (either may be None to maintain
+    just one artifact, both None for a plain log append).  Idempotent, so
+    ``maintain_corpus`` runs it alongside its other per-batch stores."""
     from vector_search_question_answer_api_spark.operators.ivf import (
         centroid_grid,
     )

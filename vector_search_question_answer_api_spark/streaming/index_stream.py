@@ -8,12 +8,13 @@ INCREMENTALLY as documents arrive:
 - :func:`index_stream` — the stateless build pipeline (preprocess → embed →
   normalize, the exact ``build_index`` expressions) applied to a document
   STREAM: map-only, so it runs unchanged under Structured Streaming;
-- :func:`maintain_index` — ``writeStream.foreachBatch`` appending each
-  micro-batch (tagged with its batch id) to an append-only parquet log
+- the index LOG — ``ann_maintain.refresh_search_artifacts_batch``
+  (run per micro-batch by ``ingest_stream.maintain_corpus``) appends each
+  micro-batch, tagged with its batch id, to an append-only parquet log
   under ``<path>/log``.  Append, not overwrite: vanilla parquet has no
   atomic upsert, so the stream writes an LSM-style log and READERS resolve
   latest-per-doc (exactly the pattern Delta/Iceberg implement natively —
-  swap the sink format in production and ``foreachBatch`` collapses to a
+  swap the sink format in production and the append collapses to a
   plain streaming MERGE);
 - :func:`read_index_latest` — the read view: one window over
   (current generation ∪ log) picks the newest version of every ``doc_id``
@@ -177,8 +178,9 @@ def tombstones(
 
 def append_tombstones(ids: DataFrame, path: str, batch_id: int) -> None:
     """One-shot batch deletion: append :func:`tombstones` rows to the
-    index log under the given batch id (the ``maintain_index`` append,
-    callable outside a stream).  Idempotence matches the log contract:
+    index log under the given batch id (the per-batch log append of
+    ``ann_maintain.refresh_search_artifacts_batch``, callable outside a
+    stream).  Idempotence matches the log contract:
     duplicate appends of the same rows resolve identically."""
     (
         tombstones(ids)
@@ -206,33 +208,6 @@ def read_index_tombstones(
         log, keep_tombstones=True, keep_meta=with_ts
     ).filter(F.col("norm_embedding").isNull())
     return dels.select("doc_id", "ts") if with_ts else dels.select("doc_id")
-
-
-def maintain_index(
-    indexed_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_once: bool = False,
-):
-    """Start the maintenance query: append each micro-batch to the index
-    log at ``path`` tagged with the batch id (restart-safe: the checkpoint
-    replays a failed batch under the SAME id, and the read view picks one
-    row per (doc_id, batch) deterministically, so duplicate appends from
-    batch retries cannot change the resolved index)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_batch", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(os.path.join(path, "log"))
-        )
-
-    writer = indexed_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _raw_log(spark: SparkSession, path: str, files: list[str] | None = None):

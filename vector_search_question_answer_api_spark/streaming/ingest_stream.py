@@ -1216,9 +1216,9 @@ def read_corpus_lsh_artifact(
     ``ann.recommended_n_planes`` at the store's ingested-version count
     (the same rows carry n), dim comes with the center.  The returned dict
     parameterizes every SRP consumer (``embedding_near_dup_pairs``,
-    ``embedding_neardup_stream``, ``ann_lsh_topk[_ondisk]``,
-    ``replay_sessions(lsh_artifact=...)``); pass ``write_to`` to also
-    persist it as a :func:`ann.write_lsh_artifact` manifest.
+    ``ann_lsh_topk[_ondisk]``, ``replay_sessions(lsh_artifact=...)``);
+    pass ``write_to`` to also persist it as a
+    :func:`ann.write_lsh_artifact` manifest.
 
     Read cost: ``n_batches x dim`` profile rows — the closing piece of the
     centered-LSH lifecycle: ingest maintains the center incrementally,
